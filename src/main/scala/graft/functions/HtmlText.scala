@@ -86,22 +86,6 @@ object HtmlTextExtract {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
       (c >= '0' && c <= '9') || c == '_'
 
-  /** Case-insensitive ASCII region match (the regex ran with `(?i)`,
-    * which for the ASCII-only needles here is ASCII case folding). */
-  private def regionMatchesCI(s: String, at: Int, needle: String): Boolean =
-    s.regionMatches(true, at, needle, 0, needle.length)
-
-  private def indexOfCI(s: String, needle: String, from: Int): Int = {
-    val n = needle.length
-    val last = s.length - n
-    var i = math.max(from, 0)
-    while (i <= last) {
-      if (s.regionMatches(true, i, needle, 0, n)) return i
-      i += 1
-    }
-    -1
-  }
-
   // ------------------------------------------------------- stage 1a
   /** `<script\b[^>]*>` / `<style\b[^>]*>` … close tag (or end of
     * input) → one space; everything else verbatim. */
@@ -114,8 +98,8 @@ object HtmlTextExtract {
       if (lt < 0) { out.append(s, p, len); return out.toString }
       out.append(s, p, lt)
       val close =
-        if (regionMatchesCI(s, lt + 1, "script")) "</script>"
-        else if (regionMatchesCI(s, lt + 1, "style")) "</style>"
+        if (AsciiCase.regionMatches(s, lt + 1, "script")) "</script>"
+        else if (AsciiCase.regionMatches(s, lt + 1, "style")) "</style>"
         else null
       var consumed = false
       if (close != null) {
@@ -125,7 +109,7 @@ object HtmlTextExtract {
         if (nameEnd >= len || !isWordChar(s.charAt(nameEnd))) {
           val g = s.indexOf('>', nameEnd)
           if (g >= 0) {
-            val e = indexOfCI(s, close, g + 1)
+            val e = AsciiCase.indexOf(s, close, g + 1)
             out.append(' ')
             p = if (e >= 0) e + close.length else len
             consumed = true

@@ -110,20 +110,6 @@ object MainContentExtract {
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
       (c >= '0' && c <= '9') || c == '_'
 
-  private def regionMatchesCI(s: String, at: Int, needle: String): Boolean =
-    s.regionMatches(true, at, needle, 0, needle.length)
-
-  private def indexOfCI(s: String, needle: String, from: Int): Int = {
-    val n = needle.length
-    val last = s.length - n
-    var i = math.max(from, 0)
-    while (i <= last) {
-      if (s.regionMatches(true, i, needle, 0, n)) return i
-      i += 1
-    }
-    -1
-  }
-
   // ------------------------------------------------------- stage 1
   /** `(?is)<script\b[^>]*>.*?</script>|<style\b[^>]*>.*?</style>` → ' ',
     * left-to-right, replacement not rescanned, NO match when the close
@@ -138,8 +124,8 @@ object MainContentExtract {
       out.append(s, p, lt)
       var consumed = false
       val name =
-        if (regionMatchesCI(s, lt + 1, "script")) "script"
-        else if (regionMatchesCI(s, lt + 1, "style")) "style"
+        if (AsciiCase.regionMatches(s, lt + 1, "script")) "script"
+        else if (AsciiCase.regionMatches(s, lt + 1, "style")) "style"
         else null
       if (name != null) {
         val after = lt + 1 + name.length
@@ -148,7 +134,7 @@ object MainContentExtract {
         if (after >= len || !isWordChar(s.charAt(after))) {
           val g = s.indexOf('>', after)
           if (g >= 0) {
-            val e = indexOfCI(s, "</" + name + ">", g + 1)
+            val e = AsciiCase.indexOf(s, "</" + name + ">", g + 1)
             if (e >= 0) {
               out.append(' ')
               p = e + name.length + 3
@@ -181,7 +167,7 @@ object MainContentExtract {
           val n = BlockNames(k)
           val end = lt + 2 + n.length
           if (end < len && s.charAt(end) == '>' &&
-              regionMatchesCI(s, lt + 2, n)) {
+              AsciiCase.regionMatches(s, lt + 2, n)) {
             // "p" would also prefix-match nothing longer; names are
             // checked with their terminating '>' so no ambiguity
             return Array(lt, end + 1)

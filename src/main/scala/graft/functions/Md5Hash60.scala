@@ -34,16 +34,19 @@ case class Md5Hash60(child: Expression) extends UnaryExpression {
 }
 
 object Md5Hash60 {
-  private val digest = ThreadLocal.withInitial[MessageDigest](() =>
+  private[functions] val digest = ThreadLocal.withInitial[MessageDigest](() =>
     MessageDigest.getInstance("MD5"))
 
   /** Top 60 bits of md5(utf8(s)) as a non-negative long. */
   def compute(s: UTF8String): Long = {
     val md = digest.get()
     md.reset()
-    val d = md.digest(s.getBytes)
-    // first 8 bytes big-endian, dropped to the top 60 bits (== parsing the
-    // first 15 hex chars base-16)
+    top60(md.digest(s.getBytes))
+  }
+
+  /** The first 8 bytes of digest `d` big-endian, dropped to the top 60
+    * bits (== parsing the first 15 hex chars base-16). */
+  private[functions] def top60(d: Array[Byte]): Long = {
     val top = ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
       ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
       ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |

@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.GraftQuery
-import graft.functions.TextFunctions._
 import graft.sources.Tables
 
 /** End-to-end corpus dedup pipeline — the composed training-data curation
@@ -13,58 +13,60 @@ import graft.sources.Tables
   * candidates → exact-Jaccard verification → connected components →
   * per-cluster representative → deduplicated corpus.
   *
-  * Scale design: exact (token-identical) duplicates are collapsed to one
-  * canonical doc per distinct content BEFORE banding, so an m-document
-  * identical cluster costs one hash-agg instead of ~4·C(m,2) band-join
-  * rows (see [[exactCollapse]]); candidates come only from LSH bucket
-  * collisions (never the O(n²) pair space), with oversized buckets
-  * star-routed linearly; verification joins shingle sets for candidate
-  * pairs only; connected components is iterative smallest-label
-  * propagation over the (sparse) duplicate graph, converging in
-  * O(log diameter) joins — dup clusters are tiny in practice, so this
-  * terminates in 1-3 rounds on real corpora.
+  * Scale design: every document is summarized ONCE, locally, before any
+  * shuffle — one projection over its tokens builds the per-document
+  * table ([[Dedup.docSignatures]]: exact-collapse digest, shingle count,
+  * the 4 MinHash band signatures from one native fold, and the sorted
+  * 64-bit shingle keys), persisted for the call. Nothing downstream
+  * explodes shingles or hashes them again:
+  *   - exact (token-identical) duplicates are collapsed to one canonical
+  *     doc per distinct content before banding, a window over the digest
+  *     (~50 B/doc shuffled), so an m-document identical cluster costs one
+  *     window row each instead of ~4·C(m,2) band-join rows (see
+  *     [[exactCollapse]]);
+  *   - candidates come only from LSH bucket collisions of the canonicals'
+  *     band rows (never the O(n²) pair space), with oversized buckets
+  *     star/chain-routed linearly — every branch reads the same persisted
+  *     table;
+  *   - verification joins each candidate pair to the two documents' key
+  *     arrays, one row per document, and counts common keys with a native
+  *     sorted merge ([[graft.functions.SortedKeyOverlap]]) — no per-shingle
+  *     rows exist anywhere;
+  *   - connected components is iterative smallest-label propagation over
+  *     the (sparse) duplicate graph, converging in O(log diameter) joins —
+  *     dup clusters are tiny in practice, so this terminates in 1-3 rounds
+  *     on real corpora.
+  * `doc_id` is the document key and must be unique.
   */
 object Curation {
 
-  /** (doc_id, shingle) rows, tokens materialized before shingling. */
-  private def shingleRows(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), tokens(col("text")).as("t"))
-      .select(col("doc_id"), explode(shingles(col("t"))).as("s"))
-
-  /** Exact-duplicate collapse: (doc_id, cdoc) where cdoc is the minimum
-    * doc_id sharing the same token sequence. Token-identical docs have
-    * identical shingle SETS, hence identical minhash signatures in EVERY
-    * band — so a cluster of m exact copies would emit ~4·C(m,2) pairs
-    * from the band self-join before `distinct()`. On a real 100 TB crawl,
-    * million-document boilerplate clusters (empty pages, error pages,
-    * licence headers) are routine, and m = 1M means ~2×10¹² join rows
-    * from one hot bucket. Collapsing to one canonical doc per distinct
-    * content and banding ONLY canonicals removes that quadratic entirely,
-    * and is semantics-preserving: exact copies have Jaccard 1 against
-    * their canonical, so they are by definition in its near-dup cluster,
-    * and because the canonical is the group MINIMUM the component's final
+  /** Exact-duplicate collapse over a [[Dedup.docSignatures]] table:
+    * (doc_id, cdoc) where cdoc is the minimum doc_id sharing the same
+    * token sequence. Token-identical docs have identical shingle SETS,
+    * hence identical minhash signatures in EVERY band — so a cluster of m
+    * exact copies would emit ~4·C(m,2) pairs from the band self-join
+    * before `distinct()`. On a real 100 TB crawl, million-document
+    * boilerplate clusters (empty pages, error pages, licence headers) are
+    * routine, and m = 1M means ~2×10¹² join rows from one hot bucket.
+    * Collapsing to one canonical doc per distinct content and banding
+    * ONLY canonicals removes that quadratic entirely, and is
+    * semantics-preserving: exact copies have Jaccard 1 against their
+    * canonical, so they are by definition in its near-dup cluster, and
+    * because the canonical is the group MINIMUM the component's final
     * label (min doc_id) is unchanged.
     *
     * Docs with < w tokens produce no shingles, were never banded, and
-    * therefore never merged by the uncollapsed pipeline — they keep a
-    * per-doc unique key here so the collapse cannot merge what banding
-    * would not have.
+    * therefore never merged by the uncollapsed pipeline — their digest is
+    * a per-doc unique key so the collapse cannot merge what banding would
+    * not have.
     *
     * Shuffle cost: doc_id + a 32-char digest per document (~50 B/doc) —
-    * the corpus text and tokens are NEVER shuffled by the collapse. The
-    * canonical FILTER is applied downstream of the minhash aggregation
-    * (see [[bandRows]]), where the data is already one small row per
-    * document, so the collapse adds only digest-sized exchanges at any
-    * corpus size.
+    * the corpus text, tokens and keys are NEVER shuffled by the collapse.
     */
-  private def exactCollapse(docs: DataFrame): DataFrame = {
-    val t = tokens(col("text"))
-    docs.select(col("doc_id"),
-        when(size(t) >= 3, md5(concat_ws(" ", t)))
-          .otherwise(concat(lit("uniq:"), col("doc_id").cast("string"))).as("dg"))
+  private def exactCollapse(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), col("dg"))
       .withColumn("cdoc", min(col("doc_id")).over(Window.partitionBy(col("dg"))))
       .select(col("doc_id"), col("cdoc"))
-  }
 
   /** Band buckets larger than this route to linear candidates instead of
     * the pairwise self-join, so one pathological bucket of NEAR-identical
@@ -89,14 +91,22 @@ object Curation {
   /** Diagnostic: (band, sig, size) of every bucket above `limit` — run
     * this to see which buckets [[minhashCandidates]] star-routed.
     */
-  def hotBuckets(docs: DataFrame, limit: Int = DefaultHotBucketLimit): DataFrame =
-    bandRows(shingleRows(docs), Some(canonicalIds(exactCollapse(docs))))
+  def hotBuckets(docs: DataFrame, limit: Int = DefaultHotBucketLimit): DataFrame = {
+    val sigs = Dedup.docSignatures(docs)
+    canonicalBands(sigs, canonicalIds(exactCollapse(sigs)))
       .groupBy(col("band"), col("sig")).agg(count(lit(1)).as("size"))
       .filter(col("size") > limit)
+  }
 
   /** doc_ids that are their own canonical under [[exactCollapse]]. */
   private def canonicalIds(members: DataFrame): DataFrame =
     members.filter(col("doc_id") === col("cdoc")).select(col("doc_id"))
+
+  /** (doc_id, band, sig) rows of the exact-dup canonicals only: the
+    * restriction is a semi-join on the per-document table, before the
+    * band rows exist. */
+  private def canonicalBands(sigs: DataFrame, canon: DataFrame): DataFrame =
+    Dedup.bandRowsOf(sigs.join(canon, Seq("doc_id"), "left_semi"))
 
   /** LSH candidate pairs: k=8 md5-derived minhashes, 4 bands × 2 rows.
     *
@@ -109,49 +119,23 @@ object Curation {
   def minhashCandidates(
       docs: DataFrame, hotBucketLimit: Int = DefaultHotBucketLimit,
       chainHexChars: Int = 3): DataFrame = {
-    val members = exactCollapse(docs)
-    val canonPairs = minhashCandidatesFromShingles(
-      shingleRows(docs), Some(canonicalIds(members)), hotBucketLimit, chainHexChars)
+    val sigs = Dedup.docSignatures(docs)
+    val members = exactCollapse(sigs)
+    val canonPairs = bucketCandidates(
+      canonicalBands(sigs, canonicalIds(members)), hotBucketLimit, chainHexChars)
     val stars = members.filter(col("doc_id") =!= col("cdoc"))
       .select(col("cdoc").as("da"), col("doc_id").as("db"))
     canonPairs.union(stars)
   }
 
-  /** (doc_id, band, sig) rows: 8 minhashes → 4 bands of 2.
-    *
-    * `canonIds`, when given, keeps only exact-dup canonicals — applied
-    * AFTER the minhash aggregation, where the table is already one small
-    * row per document, so restricting banding to canonicals costs a
-    * semi-join on (doc_id, 8 longs) rows, never a pass over text or
-    * shingles. (Shingling every doc and discarding dup signatures post-agg
-    * is map-side linear work; attaching canonical TEXT before shingling
-    * would instead shuffle the corpus.)
-    */
-  private def bandRows(sh: DataFrame, canonIds: Option[DataFrame]): DataFrame = {
-    val hashed = sh.select(
-      col("doc_id") +:
-        (0 until 8).map(i => hash60Seeded(lit(i), col("s")).as(s"h$i")): _*)
-    val minhAll = hashed.groupBy(col("doc_id"))
-      .agg((0 until 8).map(i => min(col(s"h$i")).as(s"mh$i")).head,
-        (1 until 8).map(i => min(col(s"h$i")).as(s"mh$i")): _*)
-    val minh = canonIds.fold(minhAll)(ids =>
-      minhAll.join(ids, Seq("doc_id"), "left_semi"))
-    minh.select(col("doc_id"),
-      expr("""stack(4,
-               0, concat(mh0, ',', mh1),
-               1, concat(mh2, ',', mh3),
-               2, concat(mh4, ',', mh5),
-               3, concat(mh6, ',', mh7)) AS (band, sig)"""))
-  }
-
-  private def minhashCandidatesFromShingles(
-      sh: DataFrame, canonIds: Option[DataFrame], hotBucketLimit: Int,
-      chainHexChars: Int = 3): DataFrame = {
+  /** Distinct (da < db) candidate pairs from (doc_id, band, sig) rows. */
+  private def bucketCandidates(
+      bands: DataFrame, hotBucketLimit: Int, chainHexChars: Int): DataFrame = {
     // one window pass annotates every row with its bucket size and bucket
     // minimum; the (band, sig) clustering it establishes is the same one
     // the self-join needs, so EnsureRequirements reuses the exchange
     val w = Window.partitionBy(col("band"), col("sig"))
-    val sized = bandRows(sh, canonIds)
+    val sized = bands
       .withColumn("bsz", count(lit(1)).over(w))
       .withColumn("bmin", min(col("doc_id")).over(w))
     val small = sized.filter(col("bsz") <= hotBucketLimit)
@@ -194,35 +178,27 @@ object Curation {
 
   /** Keeps only candidate pairs whose exact shingle Jaccard ≥ threshold. */
   def verifyPairs(docs: DataFrame, candidates: DataFrame, threshold: Double): DataFrame =
-    verifyPairsFromShingles(shingleRows(docs), candidates, threshold)
+    verifySigPairs(Dedup.docSignatures(docs),
+      candidates.select(col("da"), col("db")).distinct(), threshold)
 
-  private def verifyPairsFromShingles(
-      sh: DataFrame, candidates: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // 64-bit hashed join keys (same rationale as q36: small shuffle keys,
-    // cheap probes) but NO df-cap here: the candidate list already bounds
-    // the join size, and capping inside verification has a failure mode
-    // the pairwise path doesn't — a duplicate CLUSTER larger than the cap
-    // has every shared shingle above it, so capped overlap counts drop to
-    // 0 and exactly the largest duplicate clusters silently fail to merge
-    // (ADVICE r3). The cap stays where it belongs: the q36 exact
-    // SELF-join, whose blow-up it exists to prevent.
-    val kept = sh.select(col("doc_id"), xxhash64(col("s")).as("sk"))
-    // equi-join on (db, shingle-hash), NOT join-then-filter: the latter
-    // crosses every da-shingle with every db-shingle per candidate pair
-    // (~10^4 rows/pair) before filtering; including sk in the join key
-    // keeps it a hash join sized by the actual intersections
-    val common = candidates
-      .join(kept.select(col("doc_id").as("da"), col("sk")), "da")
-      .join(kept.select(col("doc_id").as("db2"), col("sk").as("sk2")),
-        col("db") === col("db2") && col("sk") === col("sk2"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-      .select(col("da"), col("db"),
-        (col("c").cast("double") / (col("na") + col("nb") - col("c"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+  /** (da, db, jaccard) of distinct candidate pairs over a
+    * [[Dedup.docSignatures]] table: each side of a pair joins its
+    * document's (n, keys) row, one row per document, and
+    * [[Dedup.keyJaccard]] counts the common keys. NO df-cap here: the
+    * candidate list already bounds the join size, and capping inside
+    * verification has a failure mode the pairwise path doesn't — a
+    * duplicate CLUSTER larger than the cap has every shared shingle above
+    * it, so capped overlap counts drop to 0 and exactly the largest
+    * duplicate clusters silently fail to merge (ADVICE r3). The cap stays
+    * where it belongs: the q36 exact SELF-join, whose blow-up it exists to
+    * prevent.
+    */
+  private def verifySigPairs(
+      sigs: DataFrame, candidates: DataFrame, threshold: Double): DataFrame = {
+    def side(id: String, s: String) = sigs.select(col("doc_id").as(id),
+      col("n").as(s"n$s"), col("keys").as(s"k$s"))
+    Dedup.keyJaccard(candidates.join(side("da", "a"), "da").join(side("db", "b"), "db"),
+      "da", "db", threshold)
   }
 
   /** Connected components of the duplicate graph.
@@ -336,84 +312,73 @@ object Curation {
   def clusterAssignments(docs: DataFrame, threshold: Double,
       hotBucketLimit: Int = DefaultHotBucketLimit,
       driverEdgeLimit: Long = 1000000L,
-      chainHexChars: Int = 3): DataFrame = {
-    // exact duplicates never reach banding, verification, or CC: collapse
-    // first (see exactCollapse — this is what keeps identical-document
-    // mega-clusters from making the band self-join quadratic), restrict
-    // banding, verification, and CC to the content-distinct canonicals,
-    // and expand the canonical labels back over the membership map at the
-    // end. Because each canonical is its exact-group minimum, the
-    // expanded labels are bit-identical to the uncollapsed pipeline's.
-    val members = exactCollapse(docs).persist()
-    val canon = canonicalIds(members)
-    // shingles feed candidate generation AND verification — cache once
-    // instead of recomputing the tokenize→shingle→explode pipeline 3×.
-    // ALL docs' shingles (map-side linear; dup signatures are discarded
-    // post-minhash-agg by the canonIds semi-join, where rows are already
-    // small) — canonical-only shingling would need text joined back to
-    // the membership map, i.e. a full corpus shuffle.
-    val sh = shingleRows(docs).persist()
+      chainHexChars: Int = 3): DataFrame =
+    stageGraph(docs, threshold, hotBucketLimit, driverEdgeLimit, chainHexChars,
+      (_, f) => f())
+
+  /** How [[stageGraph]] materializes each named stage:
+    * [[clusterAssignments]] passes the frame through, [[stageTimings]]
+    * persists, counts and times it. */
+  private[operators] type StageHook = (String, () => DataFrame) => DataFrame
+
+  /** The one definition of [[clusterAssignments]]' stages.
+    *
+    * Exact duplicates never reach banding, verification, or CC: collapse
+    * first (see [[exactCollapse]] — this is what keeps identical-document
+    * mega-clusters from making the band self-join quadratic), restrict
+    * banding, verification, and CC to the content-distinct canonicals,
+    * and expand the canonical labels back over the membership map at the
+    * end. Because each canonical is its exact-group minimum, the expanded
+    * labels are bit-identical to the uncollapsed pipeline's.
+    *
+    * The per-document table is persisted for the call and released
+    * before returning; connected components materializes its labels and
+    * the membership map is checkpointed, so the returned frame never
+    * recomputes a signature.
+    */
+  private[operators] def stageGraph(docs: DataFrame, threshold: Double,
+      hotBucketLimit: Int, driverEdgeLimit: Long, chainHexChars: Int,
+      stage: StageHook): DataFrame = {
+    val sigs = stage("shingle_persist", () => Dedup.docSignatures(docs).persist())
     try {
-      val pairs = verifyPairsFromShingles(
-        sh, minhashCandidatesFromShingles(sh, Some(canon), hotBucketLimit,
-          chainHexChars), threshold)
-      // CC materializes its labels per iteration, so sh can be released
-      val canonCC = connectedComponents(canon, pairs,
-        driverEdgeLimit = driverEdgeLimit)
-      members
+      val members = stage("exact_collapse", () => exactCollapse(sigs).localCheckpoint())
+      val canon = stage("canonical_ids", () => canonicalIds(members))
+      val cand = stage("minhash_candidates", () => bucketCandidates(
+        canonicalBands(sigs, canon), hotBucketLimit, chainHexChars))
+      val pairs = stage("jaccard_confirm", () => verifySigPairs(sigs, cand, threshold))
+      val canonCC = stage("connected_components", () =>
+        connectedComponents(canon, pairs, driverEdgeLimit = driverEdgeLimit))
+      stage("expand_labels", () => members
         .join(canonCC.select(col("doc_id").as("cdoc"), col("rep")), "cdoc")
-        .select(col("doc_id"), col("rep"))
-    } finally { sh.unpersist(); members.unpersist() }
+        .select(col("doc_id"), col("rep")))
+    } finally sigs.unpersist()
   }
 
   /** Per-stage wall + row profile of [[clusterAssignments]] — the
-    * drift-triage instrumentation VERDICT r11 next #2 asked for. Each
-    * stage is persisted and forced with count() so a stage's number is
-    * its own cost, not its ancestors' recompute; the stage graph and
-    * parameters are exactly clusterAssignments'. Diagnostic only (the
-    * declared queries never call it); surfaced via ScaleProbe mode
-    * `q51stages`. */
+    * drift-triage instrumentation VERDICT r11 next #2 asked for. The
+    * stage graph and parameters are clusterAssignments' own
+    * ([[stageGraph]]); each stage is persisted and forced with count() so
+    * a stage's number is its own cost, not its ancestors' recompute.
+    * Diagnostic only (the declared queries never call it); surfaced via
+    * ScaleProbe mode `q51stages` and the benchmark's traced near_dedup
+    * run. */
   private[graft] def stageTimings(docs: DataFrame, threshold: Double,
       hotBucketLimit: Int = DefaultHotBucketLimit,
       driverEdgeLimit: Long = 1000000L,
       chainHexChars: Int = 3): Seq[(String, Double, Long)] = {
     val b = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
-    def stage[A](name: String)(f: => (A, Long)): A = {
-      val t0 = System.nanoTime()
-      val (a, rows) = f
-      b += ((name, (System.nanoTime() - t0) / 1e9, rows))
-      a
-    }
-    val members = stage("exact_collapse") {
-      val m = exactCollapse(docs).persist(); (m, m.count())
-    }
-    val canon = stage("canonical_ids") {
-      val c = canonicalIds(members).persist(); (c, c.count())
-    }
-    val sh = stage("shingle_persist") {
-      val s = shingleRows(docs).persist(); (s, s.count())
-    }
-    val cand = stage("minhash_candidates") {
-      val c = minhashCandidatesFromShingles(sh, Some(canon), hotBucketLimit,
-        chainHexChars).persist()
-      (c, c.count())
-    }
-    val pairs = stage("jaccard_confirm") {
-      val p = verifyPairsFromShingles(sh, cand, threshold).persist()
-      (p, p.count())
-    }
-    val cc = stage("connected_components") {
-      val l = connectedComponents(canon, pairs,
-        driverEdgeLimit = driverEdgeLimit)
-      (l, l.count())
-    }
-    stage("expand_labels") {
-      val o = members
-        .join(cc.select(col("doc_id").as("cdoc"), col("rep")), "cdoc")
-        .select(col("doc_id"), col("rep"))
-      (o, o.count())
-    }
-    Seq(members, canon, sh, cand, pairs).foreach(_.unpersist())
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try {
+      stageGraph(docs, threshold, hotBucketLimit, driverEdgeLimit, chainHexChars,
+        (name, f) => {
+          val t0 = System.nanoTime()
+          val d = f()
+          if (d.storageLevel == StorageLevel.NONE) { d.persist(); held += d }
+          val rows = d.count()
+          b += ((name, (System.nanoTime() - t0) / 1e9, rows))
+          d
+        })
+    } finally held.foreach(_.unpersist())
     b.toSeq
   }
 

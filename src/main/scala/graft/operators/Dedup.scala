@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
+import graft.functions.{MinHashBands, ShingleKeys, SortedKeyOverlap}
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -16,10 +17,11 @@ import graft.sources.Tables
   * Scale design (100 TB):
   *   - Exact dedup is one hash-agg shuffle on a 16-byte digest — the
   *     minimum possible; AQE coalesces the post-agg partitions.
-  *   - MinHash: per-doc signature cost is linear (shingles × k hashes, all
-  *     codegen'd column expressions, no UDFs); candidate generation joins
-  *     on (band, signature) buckets, so the shuffle carries only
-  *     (doc, band-sig) pairs — never the O(n²) pair space.
+  *   - MinHash: per-doc signature cost is linear (shingles × k hashes in
+  *     one native fold per document, [[docSignatures]]; no shingle rows,
+  *     no signature groupBy); candidate generation joins on (band,
+  *     signature) buckets, so the shuffle carries only (doc, band-sig)
+  *     pairs — never the O(n²) pair space.
   *   - SimHash: 32-bit signatures; near-dup candidates via 8-bit band
   *     equality (pigeonhole for hamming ≤ 3), verified by bit_count(xor).
   *   - Exact Jaccard is the small-scale oracle/calibration path; at scale
@@ -215,27 +217,58 @@ object Dedup {
   // engine-reproducible), b=4 bands × r=2 rows. Output is the banded
   // signature table — joining it to itself on (band, sig) yields candidate
   // pairs in O(collisions), the scale path for near-dedup.
-  /** (doc_id, band, sig) LSH band signatures: k=8 minhashes, b=4 bands ×
-    * r=2 rows. All 8 hash functions as WIDE columns of one row per
-    * shingle, then one groupBy(doc_id) with 8 min() aggregates: map-side
-    * partial agg collapses the shuffle to one row per document (vs
-    * exploding ×8 and shuffling every (doc, i, hash) tuple).
+  /** One row per document — the near-dedup summary every MinHash path
+    * reads, built by one projection over the document's tokens (no
+    * shingle explode, no groupBy):
+    *   - `dg`: the exact-collapse digest, md5 of the space-joined tokens,
+    *     or a per-document `uniq:<doc_id>` key when the document has
+    *     fewer than 3 tokens (no shingles, so no band rows: banding never
+    *     merges it, and a collapse on `dg` must not either);
+    *   - `n`: the distinct-shingle count;
+    *   - `sigs`: the 4 band signatures ([[graft.functions.MinHashBands]]),
+    *     NULL when the document has no shingles (fewer than 3 tokens,
+    *     empty or null text) — it then has no band rows at all;
+    *   - `keys`: the shingles' sorted 64-bit keys
+    *     ([[graft.functions.ShingleKeys]]), the verification form.
+    * `doc_id` is the document key and must be unique.
     */
-  def bandSigs(docs: DataFrame): DataFrame = {
-    val sh = shingleRows(docs)
-    val hashed = sh.select(
-      col("doc_id") +:
-        (0 until 8).map(i => hash60Seeded(lit(i), col("s")).as(s"h$i")): _*)
-    val minh = hashed.groupBy(col("doc_id"))
-      .agg((0 until 8).map(i => min(col(s"h$i")).as(s"mh$i")).head,
-        (1 until 8).map(i => min(col(s"h$i")).as(s"mh$i")): _*)
-    minh.select(col("doc_id"),
-      expr("""stack(4,
-               0, concat(mh0, ',', mh1),
-               1, concat(mh2, ',', mh3),
-               2, concat(mh4, ',', mh5),
-               3, concat(mh6, ',', mh7)) AS (band, sig)"""))
-  }
+  private[operators] def docSignatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("t"))
+      .select(col("doc_id"),
+        when(size(col("t")) >= 3, md5(concat_ws(" ", col("t"))))
+          .otherwise(concat(lit("uniq:"), col("doc_id").cast("string"))).as("dg"),
+        shingles(col("t")).as("sh"))
+      .select(col("doc_id"), col("dg"), size(col("sh")).as("n"),
+        MinHashBands(col("sh")).as("sigs"), ShingleKeys(col("sh")).as("keys"))
+
+  /** (doc_id, band, sig) rows of a [[docSignatures]] table: band j is the
+    * position of its signature, so a document without shingles (NULL
+    * `sigs`) yields no rows. */
+  private[operators] def bandRowsOf(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), posexplode(col("sigs")).as(Seq("band", "sig")))
+
+  /** (a, b, jaccard) of the pairs in `pairs` whose exact shingle Jaccard
+    * ≥ threshold, where each row carries both documents' [[docSignatures]]
+    * count and keys as `na`/`ka` and `nb`/`kb`. The common-shingle count
+    * is the multiset intersection of the two sorted key arrays
+    * ([[graft.functions.SortedKeyOverlap]]) — the row count of the
+    * per-shingle (doc, xxhash64) equi-join it replaces, 64-bit collisions
+    * included; pairs sharing no key are dropped, as that join produced no
+    * row for them.
+    */
+  private[operators] def keyJaccard(pairs: DataFrame, a: String, b: String,
+      threshold: Double): DataFrame =
+    pairs.select(col(a), col(b), col("na"), col("nb"),
+        SortedKeyOverlap(col("ka"), col("kb")).as("c"))
+      .filter(col("c") > 0)
+      .select(col(a), col(b),
+        (col("c").cast("double") / (col("na") + col("nb") - col("c"))).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+
+  /** (doc_id, band, sig) LSH band signatures: k=8 minhashes, b=4 bands ×
+    * r=2 rows, one native fold per document ([[docSignatures]]).
+    */
+  def bandSigs(docs: DataFrame): DataFrame = bandRowsOf(docSignatures(docs))
 
   /** The band-signature pipeline as DuckDB CTEs (assumes `sh` from
     * [[shingleSql]] is already in scope; yields `bands(doc_id, band, sig)`).
@@ -424,25 +457,24 @@ object Dedup {
       idCol: String, textCol: String, threshold: Double): DataFrame = {
     val trainD = train.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val evalD = eval_.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-    val cands = bandSigs(trainD)
-      .join(broadcast(bandSigs(evalD)
+    val trainS = docSignatures(trainD)
+    val evalS = docSignatures(evalD)
+    val cands = bandRowsOf(trainS)
+      .join(broadcast(bandRowsOf(evalS)
         .select(col("doc_id").as("eval_id"), col("band"), col("sig"))),
         Seq("band", "sig"))
       .select(col("doc_id"), col("eval_id")).distinct()
-    val trainSh = shingleRows(trainD)
-      .join(cands.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
-    val evalSh = shingleRows(evalD)
-      .select(col("doc_id").as("eval_id"), col("s"))
+    // the confirm counts common shingle keys per candidate pair over the
+    // two documents' key arrays — one row per document, never a
+    // per-shingle row; the eval side is candidate-confined before its
+    // broadcast
+    val evalK = evalS.select(col("doc_id").as("eval_id"), col("n").as("nb"),
+        col("keys").as("kb"))
       .join(cands.select("eval_id").distinct(), Seq("eval_id"), "left_semi")
-    val na = trainSh.groupBy(col("doc_id")).agg(count(lit(1)).as("na"))
-    val nb = evalSh.groupBy(col("eval_id")).agg(count(lit(1)).as("nb"))
-    trainSh.join(broadcast(evalSh), "s")
-      .groupBy(col("doc_id"), col("eval_id")).agg(count(lit(1)).as("c"))
-      .join(cands, Seq("doc_id", "eval_id"), "left_semi")
-      .join(na, "doc_id").join(broadcast(nb), "eval_id")
-      .select(col("doc_id"), col("eval_id"),
-        (col("c").cast("double") / (col("na") + col("nb") - col("c"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    keyJaccard(cands
+        .join(trainS.select(col("doc_id"), col("n").as("na"), col("keys").as("ka")), "doc_id")
+        .join(broadcast(evalK), "eval_id"),
+      "doc_id", "eval_id", threshold)
   }
 
   /** Near-duplicate decontamination — [[fuzzyContaminatedPairs]] as a

@@ -108,6 +108,26 @@ class MainContentExtractSpec extends SparkSpec {
     assert(ref.exists(_._2 > 0) && ref.forall(_._1 >= 4))
   }
 
+  test("tag names fold ASCII case only, like the reference's (?i) regex") {
+    // U+017F (ſ) upper-cases to 'S', U+212A (Kelvin) lower-cases to 'k'
+    // and U+0130 (İ) lower-cases to 'i', but none of them matches under
+    // (?i) without UNICODE_CASE: these are plain tags, not script/style
+    // subtrees or block delimiters
+    val lookalikes = Seq(
+      "<\u017Fcript>keepme</script><p>" + article + "</p>",
+      "<script>keepme</\u017Fcript><p>" + article + "</p>",
+      "<\u017Ftyle>keepme</style><p>" + article + "</p>",
+      "<SCR\u0130PT>keepme</script><p>" + article + "</p>",
+      "<p>" + article + "</bloc\u212Aquote><div>keepme " + article + "</div>",
+      "<p>" + article + "</d\u0130v><p>keepme " + article + "</p>")
+    val ref = referenceRows(lookalikes, 30, 50)
+    assert(nativeRows(lookalikes, 30, 50) == ref)
+    // non-vacuity: a Unicode-folding match would have dropped or split
+    // off the marked text in every fixture
+    assert(ref.forall(_._3.contains("keepme")), ref.mkString("\n"))
+    assert(ref.forall(_._1 == 2), ref.mkString("\n"))
+  }
+
   test("null propagates; struct fields are never null on non-null input") {
     val out = Seq[(java.lang.Long, String)]((1L, null), (2L, ""), (3L, "<p>x</p>"))
       .toDF("id", "html")

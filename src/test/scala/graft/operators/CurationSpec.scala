@@ -1,8 +1,14 @@
 package graft.operators
 
-import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
-class CurationSpec extends SparkSpec {
+import graft.SparkSpec
+import graft.functions.{MinHashBands, WordShingles}
+
+class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def corpus() = {
     import spark.implicits._
@@ -208,5 +214,46 @@ class CurationSpec extends SparkSpec {
     val driver = Curation.connectedComponents(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(driver == expected, s"driver union-find path: $driver")
+  }
+
+  test("plan: shingles are hashed once, into the one persisted per-document table") {
+    // every stage of clusterAssignments' own graph, executed; the
+    // candidate and verification plans are then read from their final
+    // (AQE) executed form
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+    val plans = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
+    Curation.stageGraph(docs, 0.5, Curation.DefaultHotBucketLimit, 1000000L, 3,
+      (name, f) => {
+        val d: DataFrame = f()
+        d.collect()
+        plans += name -> d.queryExecution.executedPlan
+        d
+      }).collect()
+    def hashes(p: SparkPlan): Boolean = p.expressions.exists(_.exists {
+      case _: WordShingles | _: MinHashBands => true
+      case _ => false
+    })
+    // no Generate over word_shingles, and no shingle or minhash
+    // expression, anywhere outside the persisted table's own build
+    for ((name, p) <- plans if name != "shingle_persist") {
+      assert(collect(p) { case g: GenerateExec => g }.forall(!hashes(_)),
+        s"$name explodes shingles:\n$p")
+      assert(find(p)(hashes).isEmpty, s"$name hashes shingles again:\n$p")
+    }
+    // every band branch (a posexplode of the band signatures) reads the
+    // persisted table, and candidates and verification read the same one
+    def tableScans(p: SparkPlan): Seq[InMemoryTableScanExec] =
+      collect(p) { case s: InMemoryTableScanExec => s }
+    val cand = plans.find(_._1 == "minhash_candidates").get._2
+    val branches = collect(cand) { case g: GenerateExec => g }
+    assert(branches.size >= 2, s"expected the self-join's two band branches:\n$cand")
+    val branchTables = branches.map(g => tableScans(g).map(_.relation.cacheBuilder))
+    assert(branchTables.forall(_.size == 1), s"a band branch reads no persisted table:\n$cand")
+    val table = branchTables.head.head
+    assert(branchTables.forall(_.head eq table))
+    assert(table.cachedPlan.output.map(_.name).contains("keys"))
+    val verify = plans.find(_._1 == "jaccard_confirm").get._2
+    val verifyTables = tableScans(verify).map(_.relation.cacheBuilder)
+    assert(verifyTables.nonEmpty && verifyTables.forall(_ eq table), s"$verify")
   }
 }

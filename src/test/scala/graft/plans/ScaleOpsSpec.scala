@@ -248,10 +248,19 @@ class ScaleOpsSpec extends SparkSpec {
       .withColumn("y16", ScaleOps.rankBucket(col("y"), by).cast("long"))
     val mmDir = java.nio.file.Files.createTempDirectory("graft_zmm").toString
     val rkDir = java.nio.file.Files.createTempDirectory("graft_zrk").toString
-    ScaleOps.writeZOrdered(mmDf, "x16", "y16", mmDir,
-      files = 16, rowsPerFile = 1024)
-    ScaleOps.writeZOrdered(rkDf, "x16", "y16", rkDir,
-      files = 16, rowsPerFile = 1024)
+    // the layouts must be a pure function of the data: Spark seeds its
+    // range-partition sample with the RDD id, so with the default sample
+    // the file boundaries (and the prunable-row counts below) move with
+    // how many RDDs earlier suites in the JVM created. A sample at least
+    // as large as every input partition makes the range bounds exact.
+    val sampleConf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    spark.conf.set(sampleConf, "4000")
+    try {
+      ScaleOps.writeZOrdered(mmDf, "x16", "y16", mmDir,
+        files = 16, rowsPerFile = 1024)
+      ScaleOps.writeZOrdered(rkDf, "x16", "y16", rkDir,
+        files = 16, rowsPerFile = 1024)
+    } finally spark.conf.unset(sampleConf)
     val mmScan = spark.read.parquet(mmDir).filter(pred)
     val rkScan = spark.read.parquet(rkDir).filter(pred)
     assert(mmScan.count() == nBox && rkScan.count() == nBox)
