@@ -1,5 +1,7 @@
 package graft.mr
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Dataset, Encoder}
 
 /** Generic typed map/reduce surface — capability parity with the
@@ -15,8 +17,7 @@ import org.apache.spark.sql.{Dataset, Encoder}
   * (`groupByKey.flatMapGroups` — shuffles raw pairs, no partial
   * aggregation, faithfully matching the reference's no-combiner dataflow,
   * mapper.py:124-136). For algebraic reducers use `mapReduceByKey`, which
-  * Spark plans with partial aggregation (map-side combine) — the 100 TB
-  * path the reference lacks.
+  * combines map-side before the shuffle — the combiner the reference lacks.
   */
 object MapReduce {
 
@@ -31,15 +32,18 @@ object MapReduce {
       .groupByKey(_._1)(kEnc)
       .flatMapGroups((key: K, it: Iterator[(K, V)]) => reduceFn(key, it.map(_._2)))(oEnc)
 
-  /** Algebraic fast path: commutative/associative combine, planned with
-    * map-side partial aggregation.
+  /** Algebraic fast path: commutative/associative combine, run as
+    * `reduceByKey` — a spillable hash map per map task combines each key
+    * before the shuffle and another merges the partials after it. The
+    * typed `groupByKey.reduceGroups` chain is planned as
+    * `ObjectHashAggregate(ReduceAggregator)`, which falls back to sorting
+    * once a task holds more than 128 keys and so costs a word count more
+    * than it saves. Keys group by JVM `equals`/`hashCode` (arrays by
+    * identity).
     */
   def mapReduceByKey[I, K, V](ds: Dataset[I])(
       mapFn: I => IterableOnce[(K, V)],
       combine: (V, V) => V)(
-      implicit kvEnc: Encoder[(K, V)], kEnc: Encoder[K], vEnc: Encoder[V]): Dataset[(K, V)] =
-    ds.flatMap(mapFn)(kvEnc)
-      .groupByKey(_._1)(kEnc)
-      .mapValues(_._2)(vEnc)
-      .reduceGroups(combine)
+      implicit kvEnc: Encoder[(K, V)], kTag: ClassTag[K], vTag: ClassTag[V]): Dataset[(K, V)] =
+    ds.sparkSession.createDataset(ds.rdd.flatMap(mapFn).reduceByKey(combine))(kvEnc)
 }

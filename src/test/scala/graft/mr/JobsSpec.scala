@@ -44,6 +44,18 @@ class JobsSpec extends SparkSpec {
     assert(got == Seq((2015, 41.0), (2016, 11.0)))
   }
 
+  test("max-temp reduce keeps math.max's signed zeros") {
+    import spark.implicits._
+    // math.max(-0.0, 0.0) is 0.0 in either order and a lone -0.0 stays
+    // -0.0; Catalyst `max` compares -0.0 == 0.0 and keeps whichever came
+    // first, so a swap to it would change these bits
+    val in = Seq("(201501, -0.0), (201502, 0), (201601, -0.0)").toDS()
+    val got = Jobs.maxYearTemp(in).collect().toMap
+      .map { case (y, t) => y -> java.lang.Double.doubleToRawLongBits(t) }
+    assert(got == Map(2015 -> java.lang.Double.doubleToRawLongBits(0.0),
+      2016 -> java.lang.Double.doubleToRawLongBits(-0.0)))
+  }
+
   // A3 — reduce/group goldens (test_reducers.py:6-23)
   test("wordcount end-to-end reduce golden") {
     import spark.implicits._
@@ -69,18 +81,21 @@ class JobsSpec extends SparkSpec {
     assert(got == Seq(("a", 4L), ("b", 4L), ("d", 1L)))
   }
 
-  // A6 — E2E corpus: alice word count matches a single-process count
-  test("alice corpus: distributed count == naive single-process count") {
+  // A6 — E2E corpus: a distributed count matches a single-process count,
+  // over the in-repo multi-script corpus and, where the host has it, the
+  // reference's alice corpus
+  test("multi-script corpus (and alice where present): distributed count == naive single-process count") {
     val path = "/root/reference/alice"
-    assume(new java.io.File(path).exists())
     import spark.implicits._
-    val text = spark.read.textFile(path)
-    val dist = Jobs.wordCount(text).collect().toMap
-    val naive = scala.io.Source.fromFile(path, "UTF-8").getLines()
-      .flatMap(Jobs.tokenize).toSeq.groupBy(identity).map { case (w, g) => w -> g.size.toLong }
-    assert(dist.size == naive.size)
-    assert(dist("alice") == naive("alice"))
-    assert(dist == naive)
+    for (corpus <- MultiScriptCorpus.path +: Seq(path).filter(new java.io.File(_).exists())) {
+      val dist = Jobs.wordCount(spark.read.textFile(corpus)).collect().toMap
+      val src = scala.io.Source.fromFile(corpus, "UTF-8")
+      val naive = try src.getLines().flatMap(Jobs.tokenize).toSeq
+        .groupMapReduce(identity)(_ => 1L)(_ + _) finally src.close()
+      assert(dist.size == naive.size, corpus)
+      assert(dist("alice") == naive("alice"), corpus)
+      assert(dist == naive, corpus)
+    }
   }
 
   test("generic mapReduce: fully-general reduce contract (1 group → N rows)") {

@@ -7,6 +7,20 @@ import graft.sources.Tables
 
 class ScaleOpsSpec extends SparkSpec {
 
+  /** Range layouts written in `body` are a pure function of the data.
+    * Spark seeds its range-partition sample with the RDD id, so with the
+    * default sample the file boundaries (and the row counts the pruning
+    * tests read) move with how many RDDs earlier suites in the JVM
+    * created. Every layout here writes at most 60000 rows into 16 range
+    * partitions; 4000 sample points per partition take every row, so the
+    * range bounds are exact.
+    */
+  private def withExactRangeBounds[T](body: => T): T = {
+    val sampleConf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    spark.conf.set(sampleConf, "4000")
+    try body finally spark.conf.unset(sampleConf)
+  }
+
   test("salted join equals plain join on skewed data") {
     import spark.implicits._
     // hot key: 10k rows of key 1; dimension side small
@@ -187,9 +201,11 @@ class ScaleOpsSpec extends SparkSpec {
         (col("l_partkey") * 32).as("xk"), (col("l_orderkey") * 4).as("yk"))
     val zDir = java.nio.file.Files.createTempDirectory("graft_z").toString
     val linDir = java.nio.file.Files.createTempDirectory("graft_lin").toString
-    ScaleOps.writeZOrdered(li, "xk", "yk", zDir, files = 16, rowsPerFile = 1024)
-    li.repartitionByRange(16, col("xk")).sortWithinPartitions(col("xk"))
-      .write.mode("overwrite").option("maxRecordsPerFile", 1024).parquet(linDir)
+    withExactRangeBounds {
+      ScaleOps.writeZOrdered(li, "xk", "yk", zDir, files = 16, rowsPerFile = 1024)
+      li.repartitionByRange(16, col("xk")).sortWithinPartitions(col("xk"))
+        .write.mode("overwrite").option("maxRecordsPerFile", 1024).parquet(linDir)
+    }
     // 25% × 10% box: the 1-dim layout can only prune its own dimension
     val pred = col("xk") < lit(16384) && col("yk") < lit(6000)
     val zScan = spark.read.parquet(zDir).filter(pred)
@@ -248,19 +264,12 @@ class ScaleOpsSpec extends SparkSpec {
       .withColumn("y16", ScaleOps.rankBucket(col("y"), by).cast("long"))
     val mmDir = java.nio.file.Files.createTempDirectory("graft_zmm").toString
     val rkDir = java.nio.file.Files.createTempDirectory("graft_zrk").toString
-    // the layouts must be a pure function of the data: Spark seeds its
-    // range-partition sample with the RDD id, so with the default sample
-    // the file boundaries (and the prunable-row counts below) move with
-    // how many RDDs earlier suites in the JVM created. A sample at least
-    // as large as every input partition makes the range bounds exact.
-    val sampleConf = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-    spark.conf.set(sampleConf, "4000")
-    try {
+    withExactRangeBounds {
       ScaleOps.writeZOrdered(mmDf, "x16", "y16", mmDir,
         files = 16, rowsPerFile = 1024)
       ScaleOps.writeZOrdered(rkDf, "x16", "y16", rkDir,
         files = 16, rowsPerFile = 1024)
-    } finally spark.conf.unset(sampleConf)
+    }
     val mmScan = spark.read.parquet(mmDir).filter(pred)
     val rkScan = spark.read.parquet(rkDir).filter(pred)
     assert(mmScan.count() == nBox && rkScan.count() == nBox)
@@ -342,10 +351,12 @@ class ScaleOpsSpec extends SparkSpec {
     val pred = col("x") < 256L && col("y") < 256L && col("w") < 256L
     val zDir = java.nio.file.Files.createTempDirectory("graft_z3").toString
     val linDir = java.nio.file.Files.createTempDirectory("graft_lin3").toString
-    ScaleOps.writeZOrdered(df, Seq(col("x"), col("y"), col("w")), zDir,
-      files = 16, rowsPerFile = 1024)
-    df.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
-      .write.mode("overwrite").option("maxRecordsPerFile", 1024).parquet(linDir)
+    withExactRangeBounds {
+      ScaleOps.writeZOrdered(df, Seq(col("x"), col("y"), col("w")), zDir,
+        files = 16, rowsPerFile = 1024)
+      df.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
+        .write.mode("overwrite").option("maxRecordsPerFile", 1024).parquet(linDir)
+    }
     val zScan = spark.read.parquet(zDir).filter(pred)
     val linScan = spark.read.parquet(linDir).filter(pred)
     val zRows = scanRows(zScan)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.mr.{Aggregators, Jobs}
+import graft.mr.{Aggregators, Jobs, MultiScriptCorpus}
 
 /** Source/sink round-trips (SURVEY §2.1 / §2.12) + the typed Aggregator
   * fast path.
@@ -98,16 +98,18 @@ class GraftIOSpec extends SparkSpec {
 
   test("chunk-as-record scan: whole file delivered as one string (mapper.py:74-84)") {
     val path = "/root/reference/alice"
-    assume(new java.io.File(path).exists())
-    val chunks = GraftIO.readChunks(spark, path).collect()
-    assert(chunks.length == 1)
-    assert(chunks(0)._2.length == 147699 || chunks(0)._2.nonEmpty)
-    // chunk-scan word count == line-scan word count (chunking never splits
-    // mid-token in the line reader for this corpus)
     import spark.implicits._
-    val viaChunks = Jobs.wordCount(GraftIO.readChunks(spark, path).map(_._2)).collect().toMap
-    val viaLines = Jobs.wordCount(GraftIO.readText(spark, path)).collect().toMap
-    assert(viaChunks == viaLines)
+    for (corpus <- MultiScriptCorpus.path +: Seq(path).filter(new java.io.File(_).exists())) {
+      val chunks = GraftIO.readChunks(spark, corpus).collect()
+      assert(chunks.length == 1, corpus)
+      val text = new String(Files.readAllBytes(java.nio.file.Paths.get(corpus)), "UTF-8")
+      assert(chunks(0)._2 == text, corpus)
+      // chunk-scan word count == line-scan word count (a token never spans
+      // a line break)
+      val viaChunks = Jobs.wordCount(GraftIO.readChunks(spark, corpus).map(_._2)).collect().toMap
+      val viaLines = Jobs.wordCount(GraftIO.readText(spark, corpus)).collect().toMap
+      assert(viaChunks.nonEmpty && viaChunks == viaLines, corpus)
+    }
   }
 
   test("typed Aggregator fast path: avg and top-k with mergeable buffers") {
