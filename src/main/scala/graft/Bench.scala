@@ -61,6 +61,15 @@ object Bench {
                 minAbs: Double): Boolean =
     base.exists(b => med > b * factor && med - b > minAbs)
 
+  /** Where the full per-query JSON goes: `requested` (the
+    * `SPARK_GRAFT_BENCH_FULL` path) or cwd-relative `BENCH_FULL.json`. A
+    * filtered run writes the `_FILTERED` sibling of that path instead,
+    * so it can never clobber the latest full per-query record. */
+  def recordPath(requested: Option[String], filtered: Boolean): String = {
+    val full = requested.getOrElse("BENCH_FULL.json")
+    if (filtered) full.replaceFirst("(\\.[^./]*)?$", "_FILTERED$1") else full
+  }
+
   private def loadavg(): String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
       .split("\\s+").take(3).mkString(" ")
@@ -88,29 +97,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // declarative strategy/rule/function injection — same plan for q77
-      // whether the session comes from here, Verify, or a user builder
-      // (ensureRegistered stays as the fallback for plain sessions)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // declarative strategy/rule/function injection comes with the factory
+    // session — same plan for q77 whether the session comes from here,
+    // Verify, or a user builder (ensureRegistered stays as the fallback
+    // for plain sessions)
+    val spark = GraftSession.local("graft-bench")
+    val cpus = GraftSession.cpus
 
     val loadBefore = loadavg()
 
     // quiet-machine reference medians; absent file → no suspect analysis
     // (first run on a new machine), present file → every entry checked.
-    // cwd-relative first so a checkout anywhere works, absolute repo path
-    // as fallback in case the launcher's cwd differs
+    // cwd-relative, so a checkout anywhere reads its own baseline
     val baseline: Map[String, Double] =
-      (sys.env.get("SPARK_GRAFT_BENCH_BASELINE").toSeq ++
-        Seq("BENCH_BASELINE.txt", "/root/repo/BENCH_BASELINE.txt"))
+      (sys.env.get("SPARK_GRAFT_BENCH_BASELINE").toSeq :+ "BENCH_BASELINE.txt")
         .map(new java.io.File(_)).find(_.exists) match {
         case None => Map.empty
         case Some(f) =>
@@ -287,7 +287,7 @@ object Bench {
     sys.env.get("SPARK_GRAFT_BENCH_BASELINE_WRITE").foreach { path =>
       val w = new java.io.PrintWriter(path)
       try {
-        w.println(s"# quiet-machine bench medians, reps=$reps, sf=$sfDir")
+        w.println(s"# quiet-machine bench medians, reps=$reps, cpus=$cpus, sf=$sfDir")
         w.println(s"# loadavg at start: $loadBefore")
         results.foreach { case (name, med, _) =>
           // Locale.ROOT: a comma-decimal default locale would write a
@@ -314,7 +314,7 @@ object Bench {
     // (r2 single-shot vs r3 median-of-3 was silently incomparable);
     // loadavg/cpu_wall/suspect make a contaminated run distinguishable
     // from a regression AFTER the fact (VERDICT r3/r4/r5)
-    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"warmup":$warmedUp,"action":"noop","build_keys":["q41b_ann_ivf_build"],"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","baseline_entries":${baseline.size},"rerun":$rr,"suspect":$sus,"suspect_fail":${suspect.nonEmpty},"cpu_wall":$ratios,"queries":$qs,"failed":$fq,"sf":"$sfDir"}"""
+    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"warmup":$warmedUp,"action":"noop","build_keys":["q41b_ann_ivf_build"],"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","baseline_entries":${baseline.size},"rerun":$rr,"suspect":$sus,"suspect_fail":${suspect.nonEmpty},"cpu_wall":$ratios,"queries":$qs,"failed":$fq,"cpus":$cpus,"sf":"$sfDir"}"""
     println(jsonLine)
     // also persist the full line: the driver's committed BENCH_r{N}.json
     // truncates to a ~2KB tail, which dropped the per-query history for
@@ -324,11 +324,8 @@ object Bench {
     // Filtered runs (SPARK_GRAFT_BENCH_ONLY) go to a separate file so
     // they can never clobber the latest full per-query record
     // (VERDICT r18 what's-wrong #2).
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", {
-      val base = if (new java.io.File("/root/repo").isDirectory) "/root/repo/" else ""
-      if (only.isDefined) s"${base}BENCH_FULL_FILTERED.json"
-      else s"${base}BENCH_FULL.json"
-    })
+    val fullPath = recordPath(sys.env.get("SPARK_GRAFT_BENCH_FULL"),
+      filtered = only.isDefined)
     try {
       val w = new java.io.PrintWriter(fullPath)
       try w.println(jsonLine) finally w.close()
@@ -342,7 +339,7 @@ object Bench {
     // (VERDICT r18 what's-wrong #1). The per-query map lives in
     // BENCH_FULL.json (referenced by per_query_file); the measurement
     // itself — queries, reps, action, methodology — is unchanged.
-    val summaryLine = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"reps":$reps,"warmup":$warmedUp,"action":"noop","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","rerun":$rr,"suspect":$sus,"suspect_fail":${suspect.nonEmpty},"failed":$fq,"sf":"$sfDir","per_query_file":"$fullPath"}"""
+    val summaryLine = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"reps":$reps,"warmup":$warmedUp,"action":"noop","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","rerun":$rr,"suspect":$sus,"suspect_fail":${suspect.nonEmpty},"failed":$fq,"cpus":$cpus,"sf":"$sfDir","per_query_file":"$fullPath"}"""
     println(summaryLine)
     spark.stop()
     // a query still >SUSPECT_FACTOR× its quiet baseline AFTER the cooldown

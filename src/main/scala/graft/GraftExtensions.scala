@@ -10,9 +10,9 @@ import graft.functions.{BoundaryBucket, DechunkBody, DeflateBytes, DotProduct, G
   * Catalyst functions for SQL use, the TopKPerKey planner strategy, and
   * its filter-pushdown optimizer rule.
   *
-  * Activate with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` — then
+  * Every [[GraftSession]] session activates it through
+  * `spark.sql.extensions`; any other builder can add the same config or
+  * `.withExtensions(new GraftExtensions)` — then
   * `SELECT yamr_partition(key, 8)` and `SELECT md5_hash60(s)` work in
   * plain SQL, codegen'd (SURVEY §7.4: the two genuinely custom
   * expressions the engine needs), and [[graft.plans.TopKPerKey.topK]]

@@ -1,10 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SimpleMode
 
-/** Dumps the physical plans of the representative queries PLANS.md
-  * audits. Usage: `runMain graft.PlanDump <sfDir>` — output is the raw
-  * fenced block of PLANS.md.
+/** Dumps physical plans under the session Bench measures with.
+  *
+  * Usage: `runMain graft.PlanDump [sfDir] [q1,q2,...]` — the query list
+  * defaults to the representative queries PLANS.md audits (and then
+  * closes with the stored-index q97 probe). Output goes to stdout: one
+  * `# session:` header line with the config the dump ran under, then one
+  * `===== <name> =====` section per plan.
+  *
+  * Besides each query's final frame, every [[IterProbe]] tap the query
+  * fires while it is built is dumped as `<query>_iter_<tap>_<k>`: the
+  * loop iterations of pageRank/HITS/BPE/unigram, captured before their
+  * localCheckpoint, and the `stage_*` boundaries of the curation chains
+  * (both checkpoint eagerly, so the final frame alone shows only the
+  * post-checkpoint plan).
   */
 object PlanDump {
   private val audited = Seq(
@@ -78,24 +90,40 @@ object PlanDump {
     "q211b_recrawl_conditional", "q215_snapshot_admit",
     "q216_revalidate_merge", "q217_retry_after")
 
+  private def explain(name: String, df: DataFrame): Unit = {
+    println(s"===== $name =====")
+    println(df.queryExecution.explainString(SimpleMode))
+    println()
+  }
+
+  /** The config the dump runs under: master and every `spark.sql.*`
+    * setting except the (per-run) warehouse location. */
+  private def sessionLine(spark: SparkSession): String =
+    spark.conf.getAll.toSeq
+      .filter { case (k, _) =>
+        (k.startsWith("spark.sql.") && k != "spark.sql.warehouse.dir") ||
+          k == "spark.master" }
+      .sorted.map { case (k, v) => s"$k=$v" }.mkString("# session: ", " ", "")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_plandump_wh_${System.nanoTime()}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val names = args.lift(1).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val unknown = names.getOrElse(Nil).filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    // a fresh warehouse per run: an in-memory catalog forgets the stored
+    // probe's tables, so a leftover table dir would fail the next write
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_plandump_wh")
+    warehouse.toFile.deleteOnExit() // empty again once the probe drops its tables
+    val spark = GraftSession.local("graft-plandump",
+      Map("spark.sql.warehouse.dir" -> warehouse.toString))
     spark.sparkContext.setLogLevel("ERROR")
-    audited.foreach { name =>
-      println(s"===== $name =====")
-      println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode))
-      println()
+    println(sessionLine(spark))
+    names.getOrElse(audited).foreach { name =>
+      IterProbe.probe = Some((tap, k, frame) => explain(s"${name}_iter_${tap}_$k", frame))
+      try explain(name, SparkEntry.queries(name)(spark, sfDir))
+      finally IterProbe.probe = None
     }
-    dumpStoredPhraseProbe(spark, sfDir)
+    if (names.isEmpty) dumpStoredPhraseProbe(spark, sfDir)
     spark.stop()
   }
 

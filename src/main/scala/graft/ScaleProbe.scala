@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probes (VERDICT r3 #6, r5 #5-#7): measures the heavy operator
@@ -19,11 +19,15 @@ import org.apache.spark.sql.functions._
   * structure and recall difficulty — is preserved exactly, while copies
   * occupy distinct directions.
   *
-  * Usage: runMain graft.ScaleProbe [srcDir] [copies] [mode] [queries]
-  *   mode "queries" (default) — per-query seconds for the dedup/text
-  *        family over the scaled documents table; optional 4th arg is a
-  *        comma-separated subset of the query names (e.g. the x1000
-  *        decade runs only "q95_substring_dedup,q96_bigram_lm_score");
+  * Usage: runMain graft.ScaleProbe [srcDir] [copies] [mode] [arg]
+  *   mode "queries" (default) — per-query seconds over the scaled
+  *        documents table; `arg` is a comma-separated list of declared
+  *        query names (default: the dedup/text family in
+  *        [[defaultQueries]]; SCALE.md lists the per-round sets);
+  *   mode "stages"  — per-stage wall/rows of one curation chain, `arg`
+  *        = q93b|q93c|q93d (the declared query with that prefix);
+  *   mode "q51stages" — per-stage wall/rows of the dedup pipeline;
+  *   mode "bpestored" — stored-vocab BPE encode vs learn-included;
   *   mode "ann"     — recall@5 of LSH (q41: 8 planes, hamming-1
   *        multiprobe) and IVF (q41b: nlist=16, nprobe=4) against the
   *        brute-force top-5 (q40) over the scaled embeddings, plus
@@ -46,19 +50,27 @@ import org.apache.spark.sql.functions._
   *        and wall times, at growing corpus size (round 9);
   *   mode "embedops" — q103/q104/q105 wall times over the scaled
   *        embeddings (round 9);
-  *   mode "curation" — the round-11 curation set (gopher gates, domain
-  *        cap, sequence packing, cluster representatives, stratified
-  *        split) over the scaled documents table (round 11).
+  *   modes "r10ops", "events", "pq", "r10b" — the round-10 families.
+  * Scaled corpora are cached under cwd-relative `target/tmp`.
   * Prints one JSON line per run. All timed full-query runs materialize
   * via the noop sink (see Bench scaladoc — .count() prunes agg tails).
   */
 object ScaleProbe {
 
+  /** The probes' cache directory `name`, under cwd-relative `target/tmp`
+    * so every checkout keeps its own (and `target/` is ignored). */
+  def scratchDir(name: String): String =
+    new java.io.File("target/tmp", name).getAbsolutePath
+
+  /** The probe dir holding `copies`× of the tables at `src`. Keyed by
+    * SOURCE basename too: a bare x$copies dir built from one SF would
+    * silently serve a probe pointed at another (round-11 fix). */
+  private def probeDir(src: String, copies: Int): String =
+    scratchDir(s"scaleprobe_${new java.io.File(src).getName}_x$copies")
+
   /** Builds (once) and returns the scaled-documents dir for `copies`×. */
   def scaledDocsDir(spark: SparkSession, src: String, copies: Int): String = {
-    // keyed by SOURCE basename too: a bare x$copies dir built from one
-    // SF would silently serve a probe pointed at another (round-11 fix)
-    val out = s"/root/repo/target/tmp/scaleprobe_${new java.io.File(src).getName}_x$copies"
+    val out = probeDir(src, copies)
     val docsPath = s"$out/documents.parquet"
     // _SUCCESS, not bare directory existence: an interrupted write leaves
     // a partial directory that would silently shrink the probe corpus
@@ -121,9 +133,7 @@ object ScaleProbe {
     */
   def scaledEmbeddingsDir(spark: SparkSession, src: String, copies: Int): String = {
     require(copies <= 128, s"embedding transform space exhausted at $copies copies")
-    // keyed by SOURCE basename too: a bare x$copies dir built from one
-    // SF would silently serve a probe pointed at another (round-11 fix)
-    val out = s"/root/repo/target/tmp/scaleprobe_${new java.io.File(src).getName}_x$copies"
+    val out = probeDir(src, copies)
     val embPath = s"$out/embeddings.parquet"
     if (!new java.io.File(s"$embPath/_SUCCESS").exists) {
       val emb = graft.sources.Tables.load(spark, src, "embeddings")
@@ -154,9 +164,7 @@ object ScaleProbe {
     * per-user event structure (and so funnel shape and the day grid) is
     * preserved exactly while users and rows grow copies×. */
   def scaledEventsDir(spark: SparkSession, src: String, copies: Int): String = {
-    // keyed by SOURCE basename too: a bare x$copies dir built from one
-    // SF would silently serve a probe pointed at another (round-11 fix)
-    val out = s"/root/repo/target/tmp/scaleprobe_${new java.io.File(src).getName}_x$copies"
+    val out = probeDir(src, copies)
     val evPath = s"$out/events.parquet"
     if (!new java.io.File(s"$evPath/_SUCCESS").exists) {
       val ev = graft.sources.Tables.events(spark, src)
@@ -175,6 +183,44 @@ object ScaleProbe {
     out
   }
 
+  /** Builds (once) a scaled lineitem table into the probe dir: orderkey
+    * remapped to disjoint ranges per copy, value columns unchanged, so
+    * per-group value DISTRIBUTIONS (what GK summarizes) are preserved
+    * exactly while volume grows copies×. */
+  private def scaledLineitemDir(spark: SparkSession, src: String, copies: Int): String = {
+    val out = probeDir(src, copies)
+    val liPath = s"$out/lineitem.parquet"
+    if (!new java.io.File(s"$liPath/_SUCCESS").exists) {
+      val li = graft.sources.Tables.load(spark, src, "lineitem")
+      val scaled = (0 until copies).map { c =>
+        li.withColumn("l_orderkey",
+          col("l_orderkey") + lit(c.toLong * 10000000000L))
+      }.reduce(_ unionByName _)
+      scaled.repartition(spark.sparkContext.defaultParallelism)
+        .write.mode("overwrite").parquet(liPath)
+    }
+    out
+  }
+
+  /** The `queries` mode's default list: the dedup/text family plus the
+    * docs-only top bench owners. */
+  private val defaultQueries: Seq[String] = Seq("q35_dedup_exact",
+    "q36_dedup_ngram_jaccard", "q37_dedup_minhash", "q38_dedup_simhash",
+    "q51_dedup_pipeline", "q78_repetition_signals", "q79_decontaminate",
+    "q82_rarity_scoring", "q85_prep_pipeline", "q87_heavy_hitters",
+    "q88_paragraph_dedup", "q89_decontaminate_bloom",
+    "q90_cms_heavy_hitters", "q91_epoch_mix", "q93_curation_chain",
+    "q95_substring_dedup", "q96_bigram_lm_score",
+    "q93b_curation_chain_span", "q93c_crawl_chain",
+    "q93d_crawl_chain_http", "q51b_dedup_pipeline_dcc",
+    "q178_unigram_segment", "q178b_unigram_encode",
+    "q155b_token_budget_bpe", "q188b_http_chain")
+
+  private def fail(msg: String): Nothing = {
+    System.err.println(msg)
+    sys.exit(2)
+  }
+
   private def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = f
@@ -185,42 +231,18 @@ object ScaleProbe {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).flatMap(_.toIntOption).getOrElse(10)
     val mode = args.lift(2).getOrElse("queries")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scaleprobe")
 
     mode match {
       case "queries" =>
+        // 4th arg: the query names (the x1000 decade runs only its target
+        // queries — a full sweep at 5M docs is hours of probe time for
+        // rows nobody reads); validated before the corpus is built
+        val names = args.lift(3).fold(defaultQueries)(
+          _.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+        val unknown = names.filterNot(SparkEntry.queries.contains)
+        if (unknown.nonEmpty) fail(s"unknown queries: ${unknown.mkString(",")}")
         val out = scaledDocsDir(spark, src, copies)
-        val all = Seq("q35_dedup_exact", "q36_dedup_ngram_jaccard",
-          "q37_dedup_minhash", "q38_dedup_simhash", "q51_dedup_pipeline",
-          "q78_repetition_signals", "q79_decontaminate", "q82_rarity_scoring",
-          "q85_prep_pipeline", "q87_heavy_hitters", "q88_paragraph_dedup",
-          "q89_decontaminate_bloom", "q90_cms_heavy_hitters", "q91_epoch_mix",
-          "q93_curation_chain", "q95_substring_dedup", "q96_bigram_lm_score",
-          // r19 (VERDICT r18 next #8): the remaining docs-only top bench
-          // owners, so the 8c-vs-32c core-scaling table can cover them at
-          // an SF where they are not fixed-overhead-bound
-          "q93b_curation_chain_span", "q93c_crawl_chain",
-          "q93d_crawl_chain_http", "q51b_dedup_pipeline_dcc",
-          "q178_unigram_segment", "q178b_unigram_encode",
-          "q155b_token_budget_bpe", "q188b_http_chain")
-        // optional 4th arg: comma-separated subset (the x1000 decade runs
-        // only its target queries — a full 17-query sweep at 5M docs is
-        // hours of probe time for rows nobody reads)
-        val names = args.lift(3) match {
-          case Some(filter) =>
-            val want = filter.split(",").map(_.trim).filter(_.nonEmpty).toSet
-            val unknown = want -- all.toSet
-            require(unknown.isEmpty, s"unknown probe queries: ${unknown.mkString(",")}")
-            all.filter(want)
-          case None => all
-        }
         val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
         val times = names.map { name =>
           // noop write, not count(): count prunes aggregate tails (see
@@ -231,232 +253,6 @@ object ScaleProbe {
         }
         val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
         println(s"""{"metric":"scaleprobe","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "r12ops" =>
-        // round-12 additions at probe decades: full Gopher set, BPE
-        // learn/encode, DSIR inline + stored, rendezvous routing
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q148b_gopher_full", "q156_bpe_merges",
-          "q156c_bpe_encode", "q157_dsir_score", "q157b_dsir_stored",
-          "q158_rendezvous_shard")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-r12ops","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "r12c" =>
-        // round-12 close additions at probe decades: HITS (disjoint
-        // per-copy vocabularies — nodes AND edges scale with copies),
-        // export manifest, encoding audit, source concentration
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q162_hits", "q163_export_manifest",
-          "q164_encoding_audit", "q165_source_concentration",
-          "q166_readability")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-r12c","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "r13ops" =>
-        // round-13 additions at probe decades: URL canonical dedup +
-        // host profile (stateless canonicalize scan + one hash-agg —
-        // expect linear), char-trigram language ID (learn over half the
-        // corpus + dense-model broadcast scoring — expect linear with a
-        // constant model term)
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q167_url_dedup", "q168_host_profile",
-          "q169_langid_ngram")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-r13ops","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "r14ops" =>
-        // round-14 additions at probe decades: host gate + ledger
-        // (stateless host scan + broadcast anti/left join — expect
-        // linear), langid shard fold (two quarter-corpus shard learns +
-        // fold — expect ~q169-shaped), BPE-true budget (adds the encode
-        // join to the q155 class), HTML extraction (pure regexp scan —
-        // expect linear), chunking (output-proportional explode)
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q170_host_gate", "q170b_host_gate_ledger",
-          "q169b_langid_shard_fold", "q155b_token_budget_bpe",
-          "q171_html_extract", "q172_chunk_text",
-          // round-14 close additions
-          "q168b_host_profile_fold", "q173_nfc_normalize",
-          "q174_path_prefix_gate", "q175_gate_agreement",
-          "q176_tokenizer_fertility")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-r14ops","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "r15ops" =>
-        // round-15 additions at probe decades: WARC parse (stateless
-        // regexp scan — expect linear), langid margin (q169 + one window
-        // sum), stored-BPE segment/encode (one corpus tokenize + a
-        // vocab-confined learn whose cost is corpus-INDEPENDENT given
-        // the fixed synthetic vocab), unigram segmentation (same
-        // vocab-confined class), and the crawl chain (the q93b class
-        // plus the ingest prefix scans)
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q177_warc_parse", "q169c_langid_margin",
-          "q156d_bpe_stored_segment", "q156e_bpe_stored_encode",
-          "q178_unigram_segment", "q93c_crawl_chain",
-          // round-15 close additions
-          "q177b_warc_file_roundtrip", "q178b_unigram_encode",
-          "q179_pii_scan", "q180_robots_gate", "q181_invisible_strip",
-          "q182_format_roundtrip")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-r15ops","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "r15links" =>
-        // link-graph family + q183 at probe decades: extraction and
-        // sentence split are stateless scans (expect linear); the host
-        // graph is one hash-agg (wordcount class); centrality's
-        // PageRank iterations run on the FIXED ~51-host graph, so its
-        // decade growth should be the extraction scan alone; anchor
-        // top-k is agg + bounded heap.
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q183_sentence_split", "q184_link_extract",
-          "q185_host_linkgraph", "q186_host_centrality",
-          "q187_anchor_topk",
-          // HTTP layer: parse is a stateless scan; the chain adds the
-          // q93c-class html→text cascade on the survivor set
-          "q188_http_parse", "q188b_http_chain",
-          // page metadata: stateless scan; canonical dedup adds one
-          // hash-agg (the q167 class)
-          "q189_page_meta", "q190_canonical_dedup",
-          // frontier: candidate agg + anti join + broadcast robots +
-          // bounded heap — the candidate agg is the only corpus term
-          "q191_crawl_frontier",
-          // redirect resolution: 3 urls-sized self-joins (doubling)
-          "q192_redirect_resolve",
-          // sitemap parse: stateless scan + bounded explode
-          "q193_sitemap_parse",
-          // blocklist gen + closed-loop gate: audit scan + hosts agg
-          "q194_host_blocklist", "q194b_blocklist_roundtrip",
-          // WARC sink: write + re-frame + parse, linear in bytes
-          "q195_warc_sink_roundtrip",
-          // CDC: positional explode (the q95 class), linear in chars
-          "q196_cdc_chunks",
-          // main content: one array-function projection, no explode
-          "q197_main_content",
-          // chunk-store dedup: the q196 explode + two hash-aggs
-          "q199_chunk_store_dedup",
-          // feed parse: stateless scan + bounded explode
-          "q198_feed_parse",
-          // snapshot diff: one url-keyed full-outer join + hosts agg
-          "q200_crawl_diff",
-          // robots sitemaps + discovery merge: scan + canonical agg
-          "q201_robots_sitemaps", "q202_discovery_merge")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-r15links","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "r16ops" =>
-        // round-16 additions at probe decades: byte-true WARC round
-        // trips (write → plain/gzip re-frame → latin-1-transport parse
-        // — linear in BYTES, framing parallelism per part file),
-        // chunked HTTP de-chunk (per-row bounded fold, linear in chunk
-        // count), charset transcode (stateless translate/decode
-        // projection), crawl-delay parse + the budgeted frontier
-        // (hosts-sized windows + the q191 candidate agg), sitemap tree
-        // resolve (one parse + 2 entries-sized self-joins), and
-        // incremental discovery admission (two half-corpus states +
-        // one fold agg ≈ the q202 cost + one extra hash-agg).
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q195_warc_sink_roundtrip",
-          "q203_warc_utf8_roundtrip", "q203b_warc_gz_roundtrip",
-          "q204_http_chunked", "q205_charset_transcode",
-          "q206_robots_crawl_delay", "q206b_frontier_delay",
-          "q207_sitemap_tree", "q208_discovery_admit",
-          "q209_byte_ingest_stack", "q210_frontier_admit",
-          "q211_recrawl_schedule", "q212_content_encoding",
-          "q213_meta_charset", "q214_robots_fetch_policy",
-          "q93d_crawl_chain_http")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-r16ops","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "r17ops" =>
-        // round-17 additions at probe decades: the single-pass dechunk
-        // (q204 — the r16 fold measured 31.3 s at x100; the expression
-        // should drop it), deflate Content-Encoding (q212, linear in
-        // bytes), conditional-request recrawl (q211b — the q211 joins
-        // + one url-keyed metadata join), robots 3xx composition
-        // (q214b — hosts-sized doubling + the q214 audit), incremental
-        // snapshot folds (q215 — three state-sized full-outer joins vs
-        // q200's one), and the per-format round-trip rows (file write
-        // + read + fold, linear in bytes).
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q204_http_chunked", "q212_content_encoding",
-          "q211b_recrawl_conditional", "q214b_robots_redirect",
-          "q215_snapshot_admit", "q216_revalidate_merge",
-          "q217_retry_after", "q182csv_roundtrip",
-          "q182jsonl_roundtrip", "q182orc_roundtrip",
-          "q93d_crawl_chain_http")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-r17ops","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "r18ops" =>
-        // round-18 additions at probe decades: the routed chain (q218 —
-        // file round-trip + byte stack + per-arm decoders, linear in
-        // bytes), media gates (q219 — one scan + one 1-row agg), the
-        // crawl-epoch loop (q220 — three gated fold triples, each
-        // state-sized), and the htmlText consumers (q171/q93c/q93d/
-        // q188b) whose extraction stage is now the native expression.
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q171_html_extract", "q93c_crawl_chain",
-          "q93d_crawl_chain_http", "q188b_http_chain",
-          "q218_routed_chain", "q219_media_gates",
-          "q220_crawl_epoch_loop")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-r18ops","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
 
       case "bpestored" =>
         // The stored-tokenizer payoff (VERDICT r14 next #5): learn once
@@ -481,77 +277,38 @@ object ScaleProbe {
             .write.format("noop").mode("overwrite").save())
         println(s"""{"metric":"scaleprobe-bpestored","copies":$copies,"n_docs":$nDocs,"learn_write_sec":$tLearn,"stored_encode_sec":$tProbe,"learn_encode_sec":$tLearned,"src":"$src"}""")
 
-      case "chainstages" =>
-        // Five-stage wall/rows breakdown of the q93b curation chain
-        // (VERDICT r11 stretch #9): each tap forces the stage frame and
-        // clocks the gap since the previous tap, so drift triage on the
-        // most expensive declared query is one read. spanK = 4 IS the
-        // q93b pin (CurationChain K = 4 — k >= 6 flags zero spans at
-        // these SFs, so a larger k would time a no-op span stage and
-        // q93b drift would be invisible to the probe; r12 review fix).
+      case "stages" =>
+        // Per-stage wall/rows of one curation chain (VERDICT r11 stretch
+        // #9): the IterProbe hook forces each `stage_*` frame and clocks
+        // the gap since the previous tap, so drift triage on the most
+        // expensive declared queries is one read. The gate/near-dedup
+        // taps force work the chain fuses into the next checkpoint, so
+        // probed wall is attribution, not added cost. q93b/q93c/q93d run
+        // their declared span pin (K = 4).
+        val chain = args.lift(3).getOrElse("")
+        val matches = SparkEntry.queries.keys.filter(_.startsWith(chain + "_")).toSeq
+        if (matches.size != 1)
+          fail(s"stages needs one chain query (q93b|q93c|q93d), got '$chain'")
         val out = scaledDocsDir(spark, src, copies)
-        val docs = graft.sources.Tables.load(spark, out, "documents")
-        val nDocs = docs.count()
+        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
         val b = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
         var last = System.nanoTime()
-        val probe = (name: String, df: org.apache.spark.sql.DataFrame) => {
-          val rows = df.count()
-          val now = System.nanoTime()
-          b += ((name, (now - last) / 1e9, rows)); last = now
+        IterProbe.probe = Some { (tap, _, df) =>
+          if (tap.startsWith("stage_")) {
+            val rows = df.count()
+            val now = System.nanoTime()
+            b += ((tap.stripPrefix("stage_"), (now - last) / 1e9, rows)); last = now
+          }
         }
-        val fin = graft.operators.CurationChain.chainStaged(
-          docs, targetDocs = 500L, spanK = 4, probe = Some(probe))
+        val fin = try SparkEntry.queries(matches.head)(spark, out)
+          finally IterProbe.probe = None
+        if (b.isEmpty) fail(s"${matches.head} taps no stage_* boundaries")
         val (_, tMix) = timed(fin.write.format("noop").mode("overwrite").save())
         val qs = (b.map { case (n, t, r) =>
           "\"" + n + "\":{\"sec\":" + t + ",\"rows\":" + r + "}"
         } :+ ("\"epoch_mix_write\":{\"sec\":" + tMix + ",\"rows\":-1}"))
           .mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-chainstages","copies":$copies,"n_docs":$nDocs,"stages":$qs,"src":"$src"}""")
-
-      case "crawlstages" =>
-        // Per-stage wall/rows for the q93c crawl-native chain: the five
-        // ingest stages PLUS the q93b chain stages, one read per stage
-        // (the chainstages discipline applied to the full crawl form).
-        val out = scaledDocsDir(spark, src, copies)
-        val docs = graft.sources.Tables.load(spark, out, "documents")
-        val nDocs = docs.count()
-        val b = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
-        var last = System.nanoTime()
-        val probe = (name: String, df: org.apache.spark.sql.DataFrame) => {
-          val rows = df.count()
-          val now = System.nanoTime()
-          b += ((name, (now - last) / 1e9, rows)); last = now
-        }
-        val fin = graft.operators.CurationChain.crawlChainStaged(
-          docs, targetDocs = 500L, spanK = 4, probe = Some(probe))
-        val (_, tMix) = timed(fin.write.format("noop").mode("overwrite").save())
-        val qs = (b.map { case (n2, t, r) =>
-          "\"" + n2 + "\":{\"sec\":" + t + ",\"rows\":" + r + "}"
-        } :+ ("\"epoch_mix_write\":{\"sec\":" + tMix + ",\"rows\":-1}"))
-          .mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-crawlstages","copies":$copies,"n_docs":$nDocs,"stages":$qs,"src":"$src"}""")
-
-      case "httpstages" =>
-        // the q93d form: WARC → HTTP gate → main-content+NFC → host →
-        // path → langid → chain, same per-stage tap
-        val out = scaledDocsDir(spark, src, copies)
-        val docs = graft.sources.Tables.load(spark, out, "documents")
-        val nDocs = docs.count()
-        val b = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
-        var last = System.nanoTime()
-        val probe = (name: String, df: org.apache.spark.sql.DataFrame) => {
-          val rows = df.count()
-          val now = System.nanoTime()
-          b += ((name, (now - last) / 1e9, rows)); last = now
-        }
-        val fin = graft.operators.CurationChain.crawlChainHttpStaged(
-          docs, targetDocs = 500L, spanK = 4, probe = Some(probe))
-        val (_, tMix) = timed(fin.write.format("noop").mode("overwrite").save())
-        val qs = (b.map { case (n2, t, r) =>
-          "\"" + n2 + "\":{\"sec\":" + t + ",\"rows\":" + r + "}"
-        } :+ ("\"epoch_mix_write\":{\"sec\":" + tMix + ",\"rows\":-1}"))
-          .mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-httpstages","copies":$copies,"n_docs":$nDocs,"stages":$qs,"src":"$src"}""")
+        println(s"""{"metric":"scaleprobe-stages","query":"${matches.head}","copies":$copies,"n_docs":$nDocs,"stages":$qs,"src":"$src"}""")
 
       case "q51stages" =>
         // Per-stage wall/rows for the dedup pipeline (VERDICT r11 next
@@ -565,21 +322,6 @@ object ScaleProbe {
         }.mkString("{", ",", "}")
         val rounds = graft.operators.Curation.lastDistributedCCRounds
         println(s"""{"metric":"scaleprobe-q51stages","copies":$copies,"n_docs":$nDocs,"cc_rounds":$rounds,"stages":$qs,"src":"$src"}""")
-
-      case "curation" =>
-        val out = scaledDocsDir(spark, src, copies)
-        val names = Seq("q148_gopher_quality", "q148b_gopher_full",
-          "q149_domain_cap",
-          "q150_sequence_packing", "q151_cluster_representative",
-          "q152_stratified_split")
-        val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val times = names.map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          name -> t
-        }
-        val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        println(s"""{"metric":"scaleprobe-curation","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
 
       case "ann" =>
         val out = scaledEmbeddingsDir(spark, src, copies)
@@ -638,7 +380,7 @@ object ScaleProbe {
         val nClusters = 20 * copies
         val per = 100
         val dim = 64
-        val out = s"/root/repo/target/tmp/scaleprobe_annc_x$copies"
+        val out = scratchDir(s"scaleprobe_annc_x$copies")
         val embPath = s"$out/embeddings.parquet"
         if (!new java.io.File(s"$embPath/_SUCCESS").exists) {
           val c = (col("vec_id") % nClusters).cast("double")
@@ -711,20 +453,7 @@ object ScaleProbe {
         // per-partition CMS/GK states folded to one — timing the
         // metadata-sized refresh the SCALE.md incremental-dashboard
         // story promises.
-        val out = s"/root/repo/target/tmp/scaleprobe_li_x$copies"
-        val liPath = s"$out/lineitem.parquet"
-        if (!new java.io.File(s"$liPath/_SUCCESS").exists) {
-          val li = graft.sources.Tables.load(spark, src, "lineitem")
-          // orderkey remapped to disjoint ranges per copy; value columns
-          // unchanged, so per-group value DISTRIBUTIONS (what GK
-          // summarizes) are preserved exactly while volume grows N×
-          val scaled = (0 until copies).map { c =>
-            li.withColumn("l_orderkey",
-              col("l_orderkey") + lit(c.toLong * 10000000000L))
-          }.reduce(_ unionByName _)
-          scaled.repartition(spark.sparkContext.defaultParallelism)
-            .write.mode("overwrite").parquet(liPath)
-        }
+        val out = scaledLineitemDir(spark, src, copies)
         val nRows = graft.sources.Tables.load(spark, out, "lineitem").count()
         // noop write: .count() would prune these queries' aggregate tails
         // to a distinct over the group keys (the very work being measured)
@@ -847,17 +576,7 @@ object ScaleProbe {
         // the z-layout's tracks the box volume (25% × 10% = 2.5%) — a
         // constant-factor gap that WIDENS in absolute terms with corpus
         // size, which is why layout is a 100 TB concern at all.
-        val out = s"/root/repo/target/tmp/scaleprobe_li_x$copies"
-        val liPath = s"$out/lineitem.parquet"
-        if (!new java.io.File(s"$liPath/_SUCCESS").exists) {
-          val li = graft.sources.Tables.load(spark, src, "lineitem")
-          val scaled = (0 until copies).map { c =>
-            li.withColumn("l_orderkey",
-              col("l_orderkey") + lit(c.toLong * 10000000000L))
-          }.reduce(_ unionByName _)
-          scaled.repartition(spark.sparkContext.defaultParallelism)
-            .write.mode("overwrite").parquet(liPath)
-        }
+        val out = scaledLineitemDir(spark, src, copies)
         val li = graft.sources.Tables.load(spark, out, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"),
             col("l_partkey"), col("l_suppkey"))
@@ -1051,9 +770,9 @@ object ScaleProbe {
         println(s"""{"metric":"r10b_probe","copies":$copies,"n_tokens":$nTok,"n_vecs":$nVec,"mg_sec":$tMg,"mg_shards_sec":$tShards,"mg_fold_sec":$tFold,"jl_sec":$tJl,"drift_sec":$tDrift,"skew_sec":$tSkew,"src":"$src"}""")
 
       case other =>
-        System.err.println(
-          s"unknown mode: $other (expected queries|ann|annc|lshcurve|sketches|cc|phrase|zorder|embedops|r10ops|pq|r10b)")
-        sys.exit(2)
+        fail(s"unknown mode: $other (expected queries|stages|q51stages|" +
+          "bpestored|ann|annc|lshcurve|sketches|cc|phrase|zorder|embedops|" +
+          "r10ops|events|pq|r10b)")
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming scale probe (VERDICT r5 #8): the StreamingSpec suite pins
@@ -28,17 +27,12 @@ object StreamProbe {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).flatMap(_.toIntOption).getOrElse(10)
     val filesPerTrigger = args.lift(2).flatMap(_.toIntOption).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-streamprobe")
 
     val corpusDir = ScaleProbe.scaledDocsDir(spark, src, copies)
-    val base = s"/root/repo/target/tmp/streamprobe_x$copies"
+    // keyed by source like the corpus it is derived from
+    val base = ScaleProbe.scratchDir(
+      s"streamprobe_${new java.io.File(src).getName}_x$copies")
     val inDir = s"$base/in"
     val ckDir = s"$base/ck"
 

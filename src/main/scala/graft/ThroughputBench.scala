@@ -129,14 +129,7 @@ object ThroughputBench {
       case Seq(p) => ("wordcount", p)
       case _ => ("wordcount", "/root/reference/onegin")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-throughput")
     import spark.implicits._
 
     if (job == "exprs") {

@@ -45,6 +45,17 @@ import graft.sources.Tables
   */
 object CurationChain {
 
+  /** A stage boundary: hands the frame to [[graft.IterProbe]] as
+    * `stage_<name>` and returns it unchanged. The chains checkpoint
+    * eagerly, so their final explain shows only the post-checkpoint frame;
+    * the per-stage plans (PlanDump) and per-stage rows and wall time
+    * (ScaleProbe `stages`) come from these taps. With no probe set the
+    * chain is the declared q93 family plan. */
+  private def stage(name: String, df: DataFrame): DataFrame = {
+    graft.IterProbe.tap(s"stage_$name", 0, df)
+    df
+  }
+
   /** `spanK > 0` inserts the q95 exact substring-dedup stage (Lee et al.
     * 2021 run span dedup over the FULL corpus — Dedup.substringDedup's
     * own motivation) between paragraph dedup and epoch mix, removing
@@ -53,36 +64,13 @@ object CurationChain {
     * `spanK = 0` (the q93 pin) skips the stage — oracle unchanged.
     */
   def curationChain(docs: DataFrame, targetDocs: Long,
-      spanK: Int = 0): DataFrame =
-    chainStaged(docs, targetDocs, spanK, probe = None)
-
-  /** [[curationChain]] with a stage-boundary tap — the per-stage
-    * telemetry VERDICT r11 stretch #9 asked for. `probe` receives each
-    * stage's NAME and its output frame right where the production chain
-    * creates it; with `probe = None` the code path is byte-identical to
-    * the declared q93/q93b plan (tap is identity), so the telemetry
-    * variant can never drift from the measured one. A probing caller
-    * (ScaleProbe mode `chainstages`) forces each tapped frame and clocks
-    * the gap — note the gate/near-dedup taps force work the production
-    * chain fuses into the next checkpoint, so probed wall is
-    * attribution, not added cost. */
-  private[graft] def chainStaged(docs: DataFrame, targetDocs: Long,
-      spanK: Int,
-      probe: Option[(String, DataFrame) => Unit]): DataFrame = {
-    def tap(name: String, df: DataFrame): DataFrame = {
-      // stage-plan capture for PlanDumpR19 (None in Bench/Verify): the
-      // chains checkpoint eagerly, so the final explain only shows the
-      // post-checkpoint frame — the ingest-stage claims are verifiable
-      // only from these per-stage plans
-      graft.IterProbe.tap(s"stage_$name", 0, df)
-      probe.foreach(_(name, df)); df
-    }
+      spanK: Int = 0): DataFrame = {
     val toks = tokens(col("text"))
     val en = Seq("the", "a", "and", "of", "to", "is", "in")
     val stopCnt = size(filter(toks, t => array_contains(array(en.map(lit): _*), t)))
     // stage 1 — quality gate (q85's rule: language, length band, stopword
     // ratio; all stateless column arithmetic)
-    val gated = tap("quality_gate", docs
+    val gated = stage("quality_gate", docs
       .withColumn("n_tokens", size(toks))
       .withColumn("sr", stopCnt.cast("double") / col("n_tokens"))
       .filter(col("lang") === "en" && col("n_tokens").between(20, 1000) &&
@@ -93,7 +81,7 @@ object CurationChain {
     // exact confirm on suspects only; net kept set == exact semantics
     val evalSet = docs.filter(col("doc_id") % 97 === 0)
     val train = gated.filter(col("doc_id") % 97 =!= 0)
-    val clean = tap("decontaminate",
+    val clean = stage("decontaminate",
       DataPrep.decontaminateTwoPhase(train, evalSet, "doc_id",
         "text", n = 4, expectedItems = 100000L, numBits = 1600000L)
         .localCheckpoint())
@@ -102,7 +90,7 @@ object CurationChain {
     val reps = Curation.clusterAssignments(clean.select("doc_id", "text"),
         threshold = 0.5)
       .filter(col("rep") === col("doc_id")).select(col("doc_id"))
-    val deduped = tap("near_dedup",
+    val deduped = stage("near_dedup",
       clean.join(reps, Seq("doc_id"), "left_semi"))
     // stage 4 — paragraph dedup at maxDf = 1 over deterministic 20-token
     // rendered paragraphs (q88's shape: the corpus is a flat token
@@ -115,7 +103,7 @@ object CurationChain {
           sequence(lit(1), ceil(size(col("t")) / lit(20.0)).cast("int")),
           i => concat_ws(" ", slice(col("t"), (i - 1) * 20 + 1, lit(20)))))
           .as("text2"))
-    val fin = tap("paragraph_dedup", Dedup.paragraphDedup(
+    val fin = stage("paragraph_dedup", Dedup.paragraphDedup(
         para.select("doc_id", "text2"),
         "doc_id", "text2", "\n", maxDf = 1L)
       .filter(length(col("clean_text")) > 0)
@@ -126,7 +114,7 @@ object CurationChain {
     // paragraph-cleaned text (q95's keep-first coverage semantics)
     val curated =
       if (spanK <= 0) fin
-      else tap("span_dedup",
+      else stage("span_dedup",
         Dedup.substringDedupText(fin, "doc_id", "clean_text", spanK)
         .filter(col("n_kept") > 0)
         .select(col("doc_id"), col("clean_text"))
@@ -134,7 +122,7 @@ object CurationChain {
         .localCheckpoint())
     // stage 5 — epoch mix over the curated corpus (q91's exact-quota +
     // two-level md5 ranking), weights from the CLEANED text
-    tap("epoch_mix",
+    stage("epoch_mix",
       DataPrep.epochMix(curated, "doc_id", "clean_text", "source", targetDocs))
   }
 
@@ -164,30 +152,13 @@ object CurationChain {
     * model learns from the even-doc_id half's planted labels (the q169
     * convention) and the gate keeps predicted-English crawl docs. */
   def crawlChain(docs: DataFrame, targetDocs: Long,
-      spanK: Int = 0): DataFrame =
-    crawlChainStaged(docs, targetDocs, spanK, probe = None)
-
-  /** [[crawlChain]] with the stage-boundary tap extended over the
-    * INGEST prefix too (the q93b `chainStaged` telemetry discipline —
-    * VERDICT r14 next #2's done-criterion): `probe = None` is the
-    * byte-identical declared q93c path. */
-  private[graft] def crawlChainStaged(docs: DataFrame, targetDocs: Long,
-      spanK: Int,
-      probe: Option[(String, DataFrame) => Unit]): DataFrame = {
-    def tap(name: String, df: DataFrame): DataFrame = {
-      // stage-plan capture for PlanDumpR19 (None in Bench/Verify): the
-      // chains checkpoint eagerly, so the final explain only shows the
-      // post-checkpoint frame — the ingest-stage claims are verifiable
-      // only from these per-stage plans
-      graft.IterProbe.tap(s"stage_$name", 0, df)
-      probe.foreach(_(name, df)); df
-    }
+      spanK: Int = 0): DataFrame = {
     // WARC build ⊗ parse: only valid response bodies survive
-    val bodies = tap("warc_parse", Warc.warcBodies(
+    val bodies = stage("warc_parse", Warc.warcBodies(
       docs.withColumn("rec", Warc.crawlRecord()), "doc_id", "rec",
       keep = Seq("source")))
     // HTML → text → NFC, still the same stateless scan
-    val extracted = tap("extract_nfc", bodies.select(col("doc_id"),
+    val extracted = stage("extract_nfc", bodies.select(col("doc_id"),
       col("source"), col("target_uri"),
       graft.functions.NfcNormalize(
         Extraction.htmlText(col("body"))).as("text")))
@@ -196,7 +167,7 @@ object CurationChain {
     val blockList = docs.agg(min(col("source")).as("s"))
       .select(concat(lit("v:"), col("s"), lit(".example.com"))
         .as("host_key"), lit("blocked_source").as("rule"))
-    val hostGated = tap("host_gate",
+    val hostGated = stage("host_gate",
       UrlOps.hostGate(extracted, "target_uri", blockList))
     // stored path policy: /ads is blocked on EVERY crawl host
     val pathRules = docs.select(col("source")).distinct()
@@ -207,7 +178,7 @@ object CurationChain {
     // pathGated on BOTH sides (docs + scores), and without the cut the
     // whole ingest prefix (WARC regex scan, extract, NFC, two gates)
     // executes twice per action (code-review r15)
-    val pathGated = tap("path_gate",
+    val pathGated = stage("path_gate",
       UrlOps.pathPrefixGate(hostGated, "target_uri", pathRules)
         .select(col("doc_id"), col("source"), col("text"))
         .localCheckpoint())
@@ -215,7 +186,7 @@ object CurationChain {
     // predicted-English; prediction becomes the crawl doc's lang
     val model = LangId.langIdModel(
       docs.filter(col("doc_id") % 2 === 0), "text", "lang")
-    val ing = tap("langid_gate", pathGated
+    val ing = stage("langid_gate", pathGated
       .join(LangId.langIdScore(pathGated, "doc_id", "text", model)
           .filter(col("pred_lang") === "en")
           .select(col("doc_id"), col("pred_lang").as("lang")),
@@ -225,8 +196,20 @@ object CurationChain {
       // there); also cuts the ingest lineage out of the chain's many
       // self-references
       .localCheckpoint())
-    chainStaged(ing, targetDocs, spanK, probe)
+    curationChain(ing, targetDocs, spanK)
   }
+
+  /** q93d fixture record: the SHARED [[Http.withCrawlHttpRecord]]
+    * builder (404s on %4=1, text/plain on %5=2, chunked transfer on
+    * %3=0 — the de-chunk stage rides the chain transparently) with the
+    * %7 `/ads/` path rotation in the WARC target URI (this chain's own
+    * path-gate subject; q188b keeps plain `/doc/`). */
+  private def withCrawlHttpRecord(docs: DataFrame): DataFrame =
+    Http.withCrawlHttpRecord(docs,
+      concat(lit("http://"), col("source"), lit(".example.com"),
+        when(pmod(col("doc_id"), lit(7)) === 0, lit("/ads/"))
+          .otherwise(lit("/doc/")),
+        col("doc_id").cast("string")))
 
   // ------------------------------------------------ q93d http ingest
   /** The HTTP-COMPLETE crawl chain — q93c's ingest with the two stages
@@ -243,69 +226,44 @@ object CurationChain {
     * gates + the q169 class); the block-selection step is one
     * array-function projection (q197). */
   def crawlChainHttp(docs: DataFrame, targetDocs: Long,
-      spanK: Int = 0): DataFrame =
-    crawlChainHttpStaged(docs, targetDocs, spanK, probe = None)
-
-  /** q93d fixture record: the SHARED [[Http.withCrawlHttpRecord]]
-    * builder (404s on %4=1, text/plain on %5=2, chunked transfer on
-    * %3=0 — the de-chunk stage rides the chain transparently) with the
-    * %7 `/ads/` path rotation in the WARC target URI (this chain's own
-    * path-gate subject; q188b keeps plain `/doc/`). */
-  private def withCrawlHttpRecord(docs: DataFrame): DataFrame =
-    Http.withCrawlHttpRecord(docs,
-      concat(lit("http://"), col("source"), lit(".example.com"),
-        when(pmod(col("doc_id"), lit(7)) === 0, lit("/ads/"))
-          .otherwise(lit("/doc/")),
-        col("doc_id").cast("string")))
-
-  private[graft] def crawlChainHttpStaged(docs: DataFrame,
-      targetDocs: Long, spanK: Int,
-      probe: Option[(String, DataFrame) => Unit]): DataFrame = {
-    def tap(name: String, df: DataFrame): DataFrame = {
-      // stage-plan capture for PlanDumpR19 (None in Bench/Verify): the
-      // chains checkpoint eagerly, so the final explain only shows the
-      // post-checkpoint frame — the ingest-stage claims are verifiable
-      // only from these per-stage plans
-      graft.IterProbe.tap(s"stage_$name", 0, df)
-      probe.foreach(_(name, df)); df
-    }
-    val bodies = tap("warc_parse", Warc.warcBodies(
+      spanK: Int = 0): DataFrame = {
+    val bodies = stage("warc_parse", Warc.warcBodies(
       withCrawlHttpRecord(docs), "doc_id", "rec",
       keep = Seq("source")))
-    val pages = tap("http_gate", Http.httpPayloads(bodies, "doc_id",
+    val pages = stage("http_gate", Http.httpPayloads(bodies, "doc_id",
       "body", keep = Seq("source", "target_uri")))
     // optimization r19 (guide §1.2): the interpreted strip+HOF pipeline
     // (stripScriptStyle regex + mainTextCol's CodegenFallback lambdas)
     // owned this fused ingest scan's per-row CPU (~6.4 s probed at
     // sf0.1); now ONE native codegen'd traversal (MainContentExtract,
     // bit-equality pinned by MainContentSpec)
-    val extracted = tap("main_nfc", pages
+    val extracted = stage("main_nfc", pages
       .select(col("doc_id"), col("source"), col("target_uri"),
         graft.functions.NfcNormalize(
           MainContent.mainTextNative(col("payload"), 30, 50)).as("text")))
     val blockList = docs.agg(min(col("source")).as("s"))
       .select(concat(lit("v:"), col("s"), lit(".example.com"))
         .as("host_key"), lit("blocked_source").as("rule"))
-    val hostGated = tap("host_gate",
+    val hostGated = stage("host_gate",
       UrlOps.hostGate(extracted, "target_uri", blockList))
     val pathRules = docs.select(col("source")).distinct()
       .select(concat(lit("v:"), col("source"), lit(".example.com"))
           .as("host_key"),
         lit("/ads").as("path_prefix"), lit("ads").as("rule"))
-    val pathGated = tap("path_gate",
+    val pathGated = stage("path_gate",
       UrlOps.pathPrefixGate(hostGated, "target_uri", pathRules)
         .select(col("doc_id"), col("source"), col("text"))
         .localCheckpoint())
     val model = LangId.langIdModel(
       docs.filter(col("doc_id") % 2 === 0), "text", "lang")
-    val ing = tap("langid_gate", pathGated
+    val ing = stage("langid_gate", pathGated
       .join(LangId.langIdScore(pathGated, "doc_id", "text", model)
           .filter(col("pred_lang") === "en")
           .select(col("doc_id"), col("pred_lang").as("lang")),
         Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("text"), col("lang"))
       .localCheckpoint())
-    chainStaged(ing, targetDocs, spanK, probe)
+    curationChain(ing, targetDocs, spanK)
   }
 
   // q93d ingest replay: HTTP survivors by construction arithmetic

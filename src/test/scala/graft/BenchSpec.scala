@@ -32,6 +32,17 @@ class BenchSpec extends AnyFunSuite {
     }
   }
 
+  test("recordPath: a filtered run writes the _FILTERED sibling, never the full path") {
+    assert(Bench.recordPath(None, filtered = false) === "BENCH_FULL.json")
+    assert(Bench.recordPath(None, filtered = true) === "BENCH_FULL_FILTERED.json")
+    assert(Bench.recordPath(Some("/data/bench/run.json"), filtered = false) ===
+      "/data/bench/run.json")
+    assert(Bench.recordPath(Some("/data/bench/run.json"), filtered = true) ===
+      "/data/bench/run_FILTERED.json")
+    assert(Bench.recordPath(Some("out.d/run"), filtered = true) === "out.d/run_FILTERED")
+    assert(Bench.recordPath(Some("a.tar.gz"), filtered = true) === "a.tar_FILTERED.gz")
+  }
+
   test("median picks the middle element of odd-length runs") {
     assert(Bench.median(Seq(3.0, 1.0, 2.0)) === 2.0)
     assert(Bench.median(Seq(5.0)) === 5.0)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -87,5 +88,40 @@ class CurationChainSpec extends SparkSpec {
     val again = graft.SparkEntry.queries("q93c_crawl_chain")(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(again.toSeq == out.toSeq)
+  }
+
+  /** Runs `query` at sf0.001 with an IterProbe that records every
+    * `stage_*` tap (forcing the frame with a count when `force`), and
+    * returns the taps in firing order with the query's rows. */
+  private def probed(query: String, force: Boolean): (Seq[(String, Long)], Seq[Row]) = {
+    val taps = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    graft.IterProbe.probe = Some { (name, _, df) =>
+      if (name.startsWith("stage_"))
+        taps += (name.stripPrefix("stage_") -> (if (force) df.count() else -1L))
+    }
+    try {
+      val rows = graft.SparkEntry.queries(query)(spark, sf001).collect().toSeq
+      (taps.toSeq, rows)
+    } finally graft.IterProbe.probe = None
+  }
+
+  private val chainStages = Seq("quality_gate", "decontaminate", "near_dedup",
+    "paragraph_dedup", "span_dedup", "epoch_mix")
+
+  test("stage hook: q93d taps its stages in chain order, forced frames leave the rows unchanged") {
+    val (taps, rows) = probed("q93d_crawl_chain_http", force = true)
+    assert(taps.map(_._1) == Seq("warc_parse", "http_gate", "main_nfc",
+      "host_gate", "path_gate", "langid_gate") ++ chainStages, taps.toString)
+    assert(taps.forall(_._2 > 0), s"an empty stage: $taps")
+    assert(graft.IterProbe.probe.isEmpty)
+    val plain = graft.SparkEntry.queries("q93d_crawl_chain_http")(spark, sf001)
+      .collect().toSeq
+    assert(rows.nonEmpty && rows == plain)
+  }
+
+  test("stage hook: q93b (spanK = 4) taps span_dedup between paragraph dedup and the mix") {
+    val (taps, rows) = probed("q93b_curation_chain_span", force = false)
+    assert(taps.map(_._1) == chainStages, taps.toString)
+    assert(rows.nonEmpty)
   }
 }
