@@ -118,16 +118,16 @@ object ThroughputBench {
 
   def main(args: Array[String]): Unit = {
     // `maxtemp <corpus>` switches to the reference's second job
-    // (max_year_temp vs tools/ref_maxtemp_pipeline.py); `exprs [sfDir]`
-    // prints the per-expression ingest MB/s rows; default is the
+    // (max_year_temp vs tools/ref_maxtemp_pipeline.py); `exprs <sfDir>`
+    // prints the per-expression ingest MB/s rows; `<corpus>` alone is the
     // word-count flagship (vs tools/ref_pipeline.py)
     val (job, path) = args.toSeq match {
-      case Seq("exprs", p) => ("exprs", p)
-      case Seq("exprs") => ("exprs", "/root/testdata/sf0.01")
-      case Seq("maxtemp", p) => ("maxtemp", p)
-      case Seq("maxtemp") => ("maxtemp", "/tmp/temp_x1.json")
-      case Seq(p) => ("wordcount", p)
-      case _ => ("wordcount", "/root/reference/onegin")
+      case Seq(mode @ ("exprs" | "maxtemp"), p) => (mode, p)
+      case Seq(p) if p != "exprs" && p != "maxtemp" => ("wordcount", p)
+      case _ =>
+        System.err.println(
+          "usage: ThroughputBench <corpus> | maxtemp <corpus> | exprs <sfDir>")
+        sys.exit(2)
     }
     val spark = GraftSession.local("graft-throughput")
     import spark.implicits._
@@ -142,7 +142,7 @@ object ThroughputBench {
     } else if (job == "maxtemp") {
       def run(): (Long, Double, Double) = {
         val t0 = System.nanoTime()
-        val corpus = spark.read.textFile(path)
+        val corpus = graft.sources.GraftIO.readText(spark, path)
         val maxes = graft.mr.Jobs.maxYearTemp(corpus).cache()
         val years = maxes.count()
         val chk = maxes.map(_._2).reduce(_ + _)
@@ -158,7 +158,7 @@ object ThroughputBench {
     } else {
       def run(): (Long, Long, Double) = {
         val t0 = System.nanoTime()
-        val corpus = spark.read.textFile(path)
+        val corpus = graft.sources.GraftIO.readText(spark, path)
         val counts = graft.mr.Jobs.wordCount(corpus).cache()
         val distinct = counts.count()
         val total = counts.map(_._2).reduce(_ + _)

@@ -8,18 +8,16 @@ import org.apache.spark.sql.Dataset
 object Jobs {
 
   /** Tokenizer contract of yamr map_libs/word_count.py:16-20: regex `\w+`
-    * findall → strip `,.` (a no-op after `\w+`) → lower → drop empty.
-    * `(?U)` makes Java's `\w` match Unicode word chars like Python 3's
-    * `re` (the reference tokenizes Russian text in `onegin`).
+    * findall → strip `,.` → lower → drop empty. Only findall → lower
+    * runs: `\w` never matches `,` or `.` and a match is never empty, so
+    * the strip and the drop change nothing (`JobsSpec` checks this
+    * against the full composition). `(?U)` makes Java's `\w` match
+    * Unicode word chars like Python 3's `re` (the reference tokenizes
+    * Russian text in `onegin`).
     */
   private val wordRe = "(?U)\\w+".r
-  private def strip(w: String): String = // Python str.strip(',.')
-    w.dropWhile(c => c == ',' || c == '.').reverse
-      .dropWhile(c => c == ',' || c == '.').reverse
   def tokenize(data: String): Seq[String] =
-    if (data == null) Seq.empty
-    else wordRe.findAllIn(data).map(w => strip(w).toLowerCase)
-      .filter(_.nonEmpty).toSeq
+    if (data == null) Seq.empty else wordRe.findAllIn(data).map(_.toLowerCase).toSeq
 
   /** ASCII tokenizer variant: identical to what `\W+`-split computes in
     * both Java regex and RE2 — use when results must match the DuckDB
@@ -28,9 +26,7 @@ object Jobs {
     */
   private val asciiWordRe = "\\w+".r
   def tokenizeAscii(data: String): Seq[String] =
-    if (data == null) Seq.empty
-    else asciiWordRe.findAllIn(data).map(w => strip(w).toLowerCase)
-      .filter(_.nonEmpty).toSeq
+    if (data == null) Seq.empty else asciiWordRe.findAllIn(data).map(_.toLowerCase).toSeq
 
   /** Word count: map emits (word, 1); reduce sums (word_count.py:61-63). */
   def wordCount(corpus: Dataset[String],

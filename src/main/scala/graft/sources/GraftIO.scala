@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.YamrPartition
@@ -17,8 +17,17 @@ object GraftIO {
 
   // ---- sources ------------------------------------------------------
 
-  /** Line-oriented text scan (file splits = tasks, like chunk = map task). */
-  def readText(s: SparkSession, path: String): Dataset[String] = s.read.textFile(path)
+  /** Line-oriented text scan with splits >= cores, like one map task per
+    * chunk (mapper.py:74-80) spread over every worker. Hadoop's input
+    * format is asked for `defaultParallelism` splits: the file source
+    * sizes its splits from session settings only (`spark.sql.files.*`),
+    * and its 4 MB open-cost floor cuts a 5 MB file into 4 MB + 1 MB.
+    * Changing those settings would move every other scan. Lines, line
+    * endings and UTF-8 decoding are those of `spark.read.textFile`.
+    */
+  def readText(s: SparkSession, path: String): Dataset[String] =
+    s.createDataset(s.sparkContext.textFile(path, s.sparkContext.defaultParallelism))(
+      Encoders.STRING)
 
   /** Chunk-as-one-record scan — exact parity with the reference's map
     * input contract (whole chunk delivered as a single string,

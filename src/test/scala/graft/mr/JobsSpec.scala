@@ -1,5 +1,10 @@
 package graft.mr
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.util.matching.Regex
+
 import graft.SparkSpec
 
 /** Ports of the reference's golden unit tests (FIXTURES.md §A; original
@@ -26,6 +31,26 @@ class JobsSpec extends SparkSpec {
   }
   test("tokenize: unicode word chars (onegin corpus is Russian)") {
     assert(Jobs.tokenize("Мой дядя") == Seq("мой", "дядя"))
+  }
+  test("tokenize and tokenizeAscii == the reference composition on hostile input") {
+    import JobsSpec.referenceTokenize
+    val corpus = new String(Files.readAllBytes(Paths.get(MultiScriptCorpus.path)), UTF_8)
+    val hostile = Seq(
+      "a,b.c ,d. .e, ,,f.. word.,", // , and . next to words
+      "snake_case _x y_ __ a\u203Fb \u203F", // connector punctuation
+      "cafe\u0301 e\u0301te\u0301 \u0301x", // combining marks
+      "a\u200Db a\u200Cb \u200D", // ZWJ, ZWNJ
+      "\uD835\uDC00bc x\uD835\uDC00", // U+1D400, a supplementary-plane letter
+      "\u0130stanbul \u212Aelvin \u0130 \u212A", // case folds that change length or script
+      "", null)
+    val inputs = corpus.split("\n", -1).toSeq ++ hostile
+    val (unicode, ascii) = (referenceTokenize("(?U)\\w+".r) _, referenceTokenize("\\w+".r) _)
+    for (in <- inputs) {
+      assert(Jobs.tokenize(in) == unicode(in), String.valueOf(in))
+      assert(Jobs.tokenizeAscii(in) == ascii(in), String.valueOf(in))
+    }
+    assert(inputs.flatMap(Jobs.tokenize).length > 20000)
+    assert(Jobs.tokenize("a\u203Fb \u212A") == Seq("a\u203Fb", "k"))
   }
 
   // A2 — max-temp map/reduce goldens (test_base_mappers.py:43-58)
@@ -109,4 +134,18 @@ class JobsSpec extends SparkSpec {
       }).collect().sortBy(_._1).toSeq
     assert(out == Seq(("x", 2), ("x_dup", 2), ("y", 2), ("y_dup", 2), ("z", 1)))
   }
+}
+
+object JobsSpec {
+  /** The reference's tokenizer step for step (word_count.py:16-20):
+    * findall → strip `,.` → lower → drop empty. `Jobs.tokenize` and
+    * `tokenizeAscii` skip the strip and the drop, which change nothing
+    * after a `\w+` match. */
+  def referenceTokenize(wordRe: Regex)(data: String): Seq[String] =
+    if (data == null) Seq.empty
+    else wordRe.findAllIn(data).map(w => strip(w).toLowerCase).filter(_.nonEmpty).toSeq
+
+  private def strip(w: String): String = // Python str.strip(',.')
+    w.dropWhile(c => c == ',' || c == '.').reverse
+      .dropWhile(c => c == ',' || c == '.').reverse
 }

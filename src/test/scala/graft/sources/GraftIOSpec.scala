@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -110,6 +111,45 @@ class GraftIOSpec extends SparkSpec {
       val viaLines = Jobs.wordCount(GraftIO.readText(spark, corpus)).collect().toMap
       assert(viaChunks.nonEmpty && viaChunks == viaLines, corpus)
     }
+  }
+
+  test("readText: a 5 MB file scans as at least one split per core") {
+    val f = Paths.get(tmp("split5mb"), "corpus.txt")
+    val rng = new scala.util.Random(5)
+    val lines = Seq.fill(110000)(Seq.fill(8)(rng.alphanumeric.take(5).mkString).mkString(" "))
+    Files.write(f, lines.mkString("", "\n", "\n").getBytes(UTF_8))
+    assert(Files.size(f) > 5000000)
+    val ds = GraftIO.readText(spark, f.toString)
+    assert(ds.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
+    assert(ds.count() == lines.size)
+  }
+
+  test("readText: the same lines as spark.read.textFile on hostile files") {
+    val dir = Paths.get(tmp("lines"))
+    def file(name: String, bytes: Array[Byte]): String = {
+      val f = dir.resolve(name); Files.write(f, bytes); f.toString
+    }
+    // truncated 2-, 3- and 4-byte sequences, invalid lead bytes, an
+    // overlong NUL and an encoded surrogate
+    val malformed = Seq[Int]('o', 'k', '\n', 0xC3, '(', ' ', 0xE2, 0x82, '\n', 0xF0, 0x9F,
+      '\n', 0xFF, 0xC0, 0x80, ' ', 0xED, 0xA0, 0x80, 'x').map(_.toByte).toArray
+    val two = dir.resolve("two"); Files.createDirectories(two)
+    Files.write(two.resolve("a.txt"), "a 1\nb 2\n".getBytes(UTF_8))
+    Files.write(two.resolve("b.txt"), "b 2\r\nc 3".getBytes(UTF_8))
+    val paths = Seq(
+      file("crlf.txt", "x y\r\n\r\nz\r\n".getBytes(UTF_8)),
+      file("cr.txt", "x\ry\r\rz".getBytes(UTF_8)),
+      file("no_final_newline.txt", "ab\ncd é".getBytes(UTF_8)),
+      file("malformed.txt", malformed),
+      file("empty.txt", Array.emptyByteArray),
+      two.toString)
+    for (p <- paths) {
+      val got = GraftIO.readText(spark, p).collect().toSeq.sorted
+      val want = spark.read.textFile(p).collect().toSeq.sorted
+      assert(got == want, p)
+    }
+    assert(GraftIO.readText(spark, two.toString).count() == 4)
+    assert(GraftIO.readText(spark, paths(3)).collect().exists(_.contains('\uFFFD')))
   }
 
   test("typed Aggregator fast path: avg and top-k with mergeable buffers") {
