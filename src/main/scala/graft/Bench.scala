@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract). A warm-up action runs first so
@@ -62,13 +64,21 @@ object Bench {
     base.exists(b => med > b * factor && med - b > minAbs)
 
   /** Where the full per-query JSON goes: `requested` (the
-    * `SPARK_GRAFT_BENCH_FULL` path) or cwd-relative `BENCH_FULL.json`. A
-    * filtered run writes the `_FILTERED` sibling of that path instead,
-    * so it can never clobber the latest full per-query record. */
-  def recordPath(requested: Option[String], filtered: Boolean): String = {
-    val full = requested.getOrElse("BENCH_FULL.json")
+    * `SPARK_GRAFT_BENCH_FULL` path) or cwd-relative `BENCH_FULL_c<cpus>.json`,
+    * so a run at one core count never overwrites another's. A filtered
+    * run writes the `_FILTERED` sibling of that path instead, so it can
+    * never clobber the latest full per-query record. */
+  def recordPath(requested: Option[String], filtered: Boolean, cpus: Int): String = {
+    val full = requested.getOrElse(s"BENCH_FULL_c$cpus.json")
     if (filtered) full.replaceFirst("(\\.[^./]*)?$", "_FILTERED$1") else full
   }
+
+  /** The full JSON's `codegen` field: per query, the Janino seconds and
+    * the classes compiled during its first measured pass. */
+  def codegenJson(rows: Seq[(String, Double, Long)]): String =
+    rows.map { case (n, sec, classes) => "\"" + n + "\":{\"janino_s\":" +
+      String.format(java.util.Locale.ROOT, "%.4f", Double.box(sec)) + s",\"classes\":$classes}"
+    }.mkString("{", ",", "}")
 
   private def loadavg(): String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
@@ -196,12 +206,14 @@ object Bench {
     val reps = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_REPS").flatMap(_.toIntOption).getOrElse(3))
 
-    /** One measured pass over a query: reps wall-clock timings plus the
-      * process-CPU/wall ratio across the successful reps. Returns None if
+    /** One measured pass over a query: reps wall-clock timings, the
+      * process-CPU/wall ratio across the successful reps, and the Janino
+      * seconds and classes compiled across all reps. Returns None if
       * every rep failed (the failure list already names it).
       */
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                recordFailure: Boolean): Option[(Double, Double)] = {
+                recordFailure: Boolean): Option[(Double, Double, (Double, Long))] = {
+      val (janino0, classes0) = (CodeGenerator.compileTime, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       var cpuNs = 0L
       var wallNs = 0L
@@ -228,7 +240,9 @@ object Bench {
       }
       if (times.isEmpty) None
       else Some((Bench.median(times.toSeq),
-        if (wallNs > 0 && cpuNs > 0) cpuNs.toDouble / wallNs else -1.0))
+        if (wallNs > 0 && cpuNs > 0) cpuNs.toDouble / wallNs else -1.0,
+        ((CodeGenerator.compileTime - janino0) / 1e9,
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0)))
     }
 
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -243,7 +257,7 @@ object Bench {
     // time, so min is the honest estimate). A query that recovers below
     // the threshold on any attempt stops retrying.
     val inflated = firstPass.collect {
-      case (name, (med, _)) if isSuspect(med, baseline.get(name),
+      case (name, (med, _, _)) if isSuspect(med, baseline.get(name),
         SUSPECT_FACTOR, SUSPECT_MIN_ABS_SEC) => name
     }
     val reruns = scala.collection.mutable.Map.empty[String, (Double, Double)]
@@ -259,8 +273,8 @@ object Bench {
       cooldown *= COOLDOWN_ESCALATION
       pending = pending.filter { name =>
         measure(name, SparkEntry.queries(name), recordFailure = false) match {
-          case Some(r @ (med, _)) =>
-            if (reruns.get(name).forall(_._1 > med)) reruns(name) = r
+          case Some((med, ratio, _)) =>
+            if (reruns.get(name).forall(_._1 > med)) reruns(name) = (med, ratio)
             // retry again only while still over the threshold
             isSuspect(reruns(name)._1, baseline.get(name),
               SUSPECT_FACTOR, SUSPECT_MIN_ABS_SEC)
@@ -269,7 +283,7 @@ object Bench {
       }
     }
 
-    val results = firstPass.map { case (name, (med, ratio)) =>
+    val results = firstPass.map { case (name, (med, ratio, _)) =>
       reruns.get(name) match {
         case Some((med2, ratio2)) if med2 < med => (name, med2, ratio2)
         case _ => (name, med, ratio)
@@ -309,23 +323,24 @@ object Bench {
     val sus = suspect.map("\"" + _ + "\"").mkString("[", ",", "]")
     val rr = inflated.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val cg = codegenJson(firstPass.map { case (name, (_, _, (sec, n))) => (name, sec, n) })
     // reps/warmup/build-split metadata makes cross-round bench JSONs
     // self-describing, so comparisons can refuse apples-to-oranges
     // (r2 single-shot vs r3 median-of-3 was silently incomparable);
     // loadavg/cpu_wall/suspect make a contaminated run distinguishable
     // from a regression AFTER the fact (VERDICT r3/r4/r5)
-    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"warmup":$warmedUp,"action":"noop","build_keys":["q41b_ann_ivf_build"],"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","baseline_entries":${baseline.size},"rerun":$rr,"suspect":$sus,"suspect_fail":${suspect.nonEmpty},"cpu_wall":$ratios,"queries":$qs,"failed":$fq,"cpus":$cpus,"sf":"$sfDir"}"""
+    val jsonLine = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"warmup":$warmedUp,"action":"noop","build_keys":["q41b_ann_ivf_build"],"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","baseline_entries":${baseline.size},"rerun":$rr,"suspect":$sus,"suspect_fail":${suspect.nonEmpty},"cpu_wall":$ratios,"queries":$qs,"codegen":$cg,"failed":$fq,"cpus":$cpus,"sf":"$sfDir"}"""
     println(jsonLine)
     // also persist the full line: the driver's committed BENCH_r{N}.json
     // truncates to a ~2KB tail, which dropped the per-query history for
     // the alphabetic head of the suite from every round artifact
-    // (VERDICT r9 what's-wrong #1) — BENCH_FULL.json is overwritten per
+    // (VERDICT r9 what's-wrong #1) — BENCH_FULL_c<cpus>.json is overwritten per
     // FULL run and committed each round so the complete map survives.
     // Filtered runs (SPARK_GRAFT_BENCH_ONLY) go to a separate file so
     // they can never clobber the latest full per-query record
     // (VERDICT r18 what's-wrong #2).
     val fullPath = recordPath(sys.env.get("SPARK_GRAFT_BENCH_FULL"),
-      filtered = only.isDefined)
+      filtered = only.isDefined, cpus)
     try {
       val w = new java.io.PrintWriter(fullPath)
       try w.println(jsonLine) finally w.close()
@@ -337,7 +352,7 @@ object Bench {
     // queries, so the driver's captured tail arrived mid-line and
     // unparseable — rounds 17/18 lost their entire per-query comparison
     // (VERDICT r18 what's-wrong #1). The per-query map lives in
-    // BENCH_FULL.json (referenced by per_query_file); the measurement
+    // BENCH_FULL_c<cpus>.json (referenced by per_query_file); the measurement
     // itself — queries, reps, action, methodology — is unchanged.
     val summaryLine = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"reps":$reps,"warmup":$warmedUp,"action":"noop","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","rerun":$rr,"suspect":$sus,"suspect_fail":${suspect.nonEmpty},"failed":$fq,"cpus":$cpus,"sf":"$sfDir","per_query_file":"$fullPath"}"""
     println(summaryLine)

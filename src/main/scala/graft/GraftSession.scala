@@ -24,10 +24,25 @@ object GraftSession {
     case None => Runtime.getRuntime.availableProcessors
   }
 
+  /** Entries of Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`,
+    * default 100), sized so a warm call compiles nothing. The cache is
+    * keyed by class loader as well as source, and local mode compiles
+    * about 30 of q51's 71–72 classes twice (driver and executor
+    * threads): one q51 call needs 101–103 entries, and at the default
+    * every warm call recompiled 38–54 of them. Measured at `local[4]`,
+    * q51, its stage graph and the q93d chain together hold about 350
+    * entries in one JVM; Guava splits the cap over 4 segments that evict
+    * on their own, so the cap leaves over 3× that. The cache is
+    * JVM-global and sized once, from the session active when code is
+    * first generated: this takes effect only if a session from
+    * [[builder]] comes first. */
+  val codegenCacheEntries = 1200
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
       .appName(appName)
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -334,40 +334,37 @@ object Http {
     * Callers pass the target-URI column (q93d rotates `/ads/` paths;
     * q188b keeps `/doc/`). In-plan char domain: chunk sizes and
     * Content-Length count chars, the unit the in-plan parser slices
-    * by. STAGED through intermediate projections (`__html`, `__msg`)
-    * so the html expression is referenced as an attribute, not
-    * re-inlined ~12× — the unstaged form blew whole-stage codegen past
-    * Janino's limits and fell back to interpretation. */
+    * by. The first chunk (7 chars) lies inside [[Warc.crawlHtmlHead]], so
+    * the html body appears once, not once per chunk. The record is a lazy
+    * local checkpoint: the WARC and HTTP gates' filters would otherwise be
+    * pushed below it and re-inline the whole record into every predicate,
+    * past Janino's 64 KB, and Spark retries a failed compile on every call. */
   private[operators] def withCrawlHttpRecord(df: DataFrame,
       uri: Column): DataFrame = {
-    val html = col("__html")
     val statusLine = when(pmod(col("doc_id"), lit(4)) === 1,
       lit("HTTP/1.1 404 Not Found")).otherwise(lit("HTTP/1.1 200 OK"))
     val ct = when(pmod(col("doc_id"), lit(5)) === 2, lit("text/plain"))
       .otherwise(lit("text/html; charset=utf-8"))
     val chunked = pmod(col("doc_id"), lit(3)) === 0
-    val c1 = substring(html, 1, 7)
-    val c2 = html.substr(lit(8), length(html))
-    val chunkedBody = concat(
-      lower(conv(length(c1).cast("string"), 10, 16)), lit(";x=1" + CRLF),
-      c1, lit(CRLF),
-      lower(conv(length(c2).cast("string"), 10, 16)), lit(CRLF),
-      c2, lit(CRLF), lit("0" + CRLF + CRLF))
-    val framing = when(chunked, lit("Transfer-Encoding: chunked" + CRLF))
-      .otherwise(concat(lit("Content-Length: "),
-        length(html).cast("string"), lit(CRLF)))
+    val htmlLen = length(Warc.crawlHtml())
+    val (c1, head2) = Warc.crawlHtmlHead.splitAt(7)
     val msg = concat(statusLine, lit(CRLF),
       lit("Content-Type: "), ct, lit(CRLF),
-      framing, lit(CRLF),
-      when(chunked, chunkedBody).otherwise(html))
-    df.withColumn("__html", Warc.crawlHtml())
-      .withColumn("__msg", msg)
+      when(chunked, concat(
+        lit(s"Transfer-Encoding: chunked$CRLF$CRLF${c1.length.toHexString};x=1$CRLF$c1$CRLF"),
+        lower(conv((htmlLen - c1.length).cast("string"), 10, 16)), lit(CRLF + head2)))
+        .otherwise(concat(lit("Content-Length: "), htmlLen.cast("string"),
+          lit(CRLF + CRLF + Warc.crawlHtmlHead))),
+      col("text"), lit(Warc.crawlHtmlTail),
+      when(chunked, lit(CRLF + "0" + CRLF + CRLF)).otherwise(lit("")))
+    df.withColumn("__msg", msg)
       .withColumn("rec", concat(lit("WARC/1.0" + CRLF),
         lit("WARC-Type: response" + CRLF),
         lit("WARC-Target-URI: "), uri, lit(CRLF),
         lit("Content-Length: "), length(col("__msg")).cast("string"),
         lit(CRLF + CRLF), col("__msg"), lit(CRLF + CRLF)))
-      .drop("__html", "__msg")
+      .drop("__msg")
+      .localCheckpoint(eager = false)
   }
 
   private val q188b = GraftQuery(

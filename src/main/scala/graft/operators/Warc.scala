@@ -202,6 +202,10 @@ object Warc {
   }
 
   // ------------------------------------------- q93c crawl-corpus builder
+  private[operators] val crawlHtmlHead =
+    "<html><head><script>var x = '<b>no</b>';</script><STYLE>p{}</STYLE></head><body><p>"
+  private[operators] val crawlHtmlTail = "</p><div>cafe\u0301 &#65;&amp;B</div></body></html>"
+
   /** The q93c crawl fixture: every record is a `response` whose body is
     * an HTML wrap of the document text exercising the downstream
     * extract/normalize stages (script kill, numeric + named entities,
@@ -212,11 +216,7 @@ object Warc {
     * SURVIVING parse state from this arithmetic (the q131
     * construction⊗parse convention). */
   private[operators] def crawlHtml(): Column =
-    concat(
-      lit("<html><head><script>var x = '<b>no</b>';</script>" +
-        "<STYLE>p{}</STYLE></head><body><p>"),
-      col("text"),
-      lit("</p><div>cafe\u0301 &#65;&amp;B</div></body></html>"))
+    concat(lit(crawlHtmlHead), col("text"), lit(crawlHtmlTail))
 
   private[operators] val crawlHtmlSql: String =
     "'<html><head><script>var x = ''<b>no</b>'';</script>" +

@@ -32,15 +32,25 @@ class BenchSpec extends AnyFunSuite {
     }
   }
 
+  test("recordPath: the default name carries the core count") {
+    assert(Bench.recordPath(None, filtered = false, cpus = 32) === "BENCH_FULL_c32.json")
+    assert(Bench.recordPath(None, filtered = false, cpus = 4) === "BENCH_FULL_c4.json")
+  }
+
   test("recordPath: a filtered run writes the _FILTERED sibling, never the full path") {
-    assert(Bench.recordPath(None, filtered = false) === "BENCH_FULL.json")
-    assert(Bench.recordPath(None, filtered = true) === "BENCH_FULL_FILTERED.json")
-    assert(Bench.recordPath(Some("/data/bench/run.json"), filtered = false) ===
+    assert(Bench.recordPath(None, filtered = true, cpus = 8) === "BENCH_FULL_c8_FILTERED.json")
+    assert(Bench.recordPath(Some("/data/bench/run.json"), filtered = false, cpus = 8) ===
       "/data/bench/run.json")
-    assert(Bench.recordPath(Some("/data/bench/run.json"), filtered = true) ===
+    assert(Bench.recordPath(Some("/data/bench/run.json"), filtered = true, cpus = 8) ===
       "/data/bench/run_FILTERED.json")
-    assert(Bench.recordPath(Some("out.d/run"), filtered = true) === "out.d/run_FILTERED")
-    assert(Bench.recordPath(Some("a.tar.gz"), filtered = true) === "a.tar_FILTERED.gz")
+    assert(Bench.recordPath(Some("out.d/run"), filtered = true, cpus = 8) === "out.d/run_FILTERED")
+    assert(Bench.recordPath(Some("a.tar.gz"), filtered = true, cpus = 8) === "a.tar_FILTERED.gz")
+  }
+
+  test("codegenJson: per query, Janino seconds and compiled classes") {
+    assert(Bench.codegenJson(Seq(("q51_dedup_pipeline", 0.81234, 45L), ("q02", 0.0, 0L))) ===
+      """{"q51_dedup_pipeline":{"janino_s":0.8123,"classes":45},"q02":{"janino_s":0.0000,"classes":0}}""")
+    assert(Bench.codegenJson(Nil) === "{}")
   }
 
   test("median picks the middle element of odd-length runs") {

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Configurator
 
 /** Pins the engine's "codegen'd, no UDF" claim for the sketch queries
   * (VERDICT r6 wrong #2): running them must emit NO `UnsafeProjection`
@@ -23,12 +24,17 @@ class CodegenFallbackSpec extends SparkSpec {
     override def append(e: LogEvent): Unit = {
       val m = e.getMessage.getFormattedMessage
       if (m.contains("falling back to interpreter") ||
-          m.contains("Failed to compile the generated Java code"))
+          m.contains("Failed to compile the generated Java code") ||
+          m.contains("Whole-stage codegen disabled"))
         messages.add(e.getLoggerName + ": " + m)
     }
   }
 
-  test("sketch + bloom queries run fully codegen'd — no interpreter fallback") {
+  /** Runs `body` with the capture on the root logger and returns the
+    * fallback messages it logged. WholeStageCodegenExec reports a
+    * disabled stage at INFO, so its logger is raised to INFO meanwhile;
+    * every other logger keeps its level. */
+  private def fallbacks(body: => Unit): Seq[String] = {
     // force SparkSession (and with it Spark's log4j re-initialization)
     // BEFORE registering the capture appender: standalone runs otherwise
     // install the appender into a context the session then replaces, and
@@ -36,27 +42,43 @@ class CodegenFallbackSpec extends SparkSpec {
     spark.sparkContext
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val config = ctx.getConfiguration
+    val wscg = "org.apache.spark.sql.execution.WholeStageCodegenExec"
+    val wscgLevel = ctx.getLogger(wscg).getLevel
     val cap = new Capture
     cap.start()
     // root logger: the warning can surface via UnsafeProjection,
     // MutableProjection, or CodeGenerator depending on the code path
-    config.getRootLogger.addAppender(cap, Level.WARN, null)
+    config.getRootLogger.addAppender(cap, Level.INFO, null)
     ctx.updateLoggers()
+    Configurator.setLevel(wscg, Level.INFO)
     try {
       // Plumbing self-check (ADVICE r7): if a future log4j2 config raises
       // the root level above WARN or routes Spark's codegen loggers through
       // a dedicated non-additive LoggerConfig, fallback warnings would
       // bypass the appender and this test would pass vacuously. Emit a
-      // sentinel WARN through the exact logger the real warning uses and
+      // sentinel through the exact loggers the real messages use and
       // require it to arrive before trusting emptiness below.
       val sentinel = "graft-sentinel: falling back to interpreter mode (self-check)"
       ctx.getLogger(
         "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator")
         .warn(sentinel)
-      assert(cap.messages.toArray.exists(_.toString.contains("graft-sentinel")),
-        "log-capture plumbing is broken: sentinel WARN through Spark's " +
-          "CodeGenerator logger never reached the capture appender")
+      ctx.getLogger(wscg).info("graft-sentinel: Whole-stage codegen disabled (self-check)")
+      assert(cap.messages.toArray.count(_.toString.contains("graft-sentinel")) == 2,
+        "log-capture plumbing is broken: a sentinel through Spark's " +
+          "CodeGenerator or WholeStageCodegenExec logger never reached the capture appender")
       cap.messages.clear()
+      body
+      cap.messages.toArray.map(_.toString).toSeq
+    } finally {
+      Configurator.setLevel(wscg, wscgLevel)
+      config.getRootLogger.removeAppender("graft-codegen-capture")
+      ctx.updateLoggers()
+      cap.stop()
+    }
+  }
+
+  test("sketch + bloom queries run fully codegen'd — no interpreter fallback") {
+    val msgs = fallbacks {
       Seq("q43_approx_sketches", "q67_hll_mergeable", "q89_decontaminate_bloom",
           "q90_cms_heavy_hitters", "q92_gk_quantiles", "q94_gk_stored_shards",
           "q108_image_header",
@@ -75,13 +97,19 @@ class CodegenFallbackSpec extends SparkSpec {
           "q151_cluster_representative").foreach { name =>
         SparkEntry.queries(name)(spark, sf001).collect()
       }
-      val msgs = cap.messages.toArray.mkString("\n")
-      assert(cap.messages.isEmpty,
-        s"codegen fell back to interpreter while running sketch queries:\n$msgs")
-    } finally {
-      config.getRootLogger.removeAppender("graft-codegen-capture")
-      ctx.updateLoggers()
-      cap.stop()
     }
+    assert(msgs.isEmpty,
+      s"codegen fell back to interpreter while running sketch queries:\n${msgs.mkString("\n")}")
+  }
+
+  /** The q93d ingest scans the in-plan HTTP-in-WARC fixture
+    * (`Http.withCrawlHttpRecord`). Spark never caches a failed compile,
+    * so a stage that grows past Janino's 64 KB fails again on every call
+    * and runs without whole-stage codegen. */
+  test("q93d crawl chain compiles every stage: no 64 KB failure, no stage without codegen") {
+    val msgs = fallbacks {
+      SparkEntry.queries("q93d_crawl_chain_http")(spark, sf001).collect()
+    }
+    assert(msgs.isEmpty, s"q93d fell out of codegen:\n${msgs.mkString("\n")}")
   }
 }
