@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -26,16 +26,16 @@ import graft.sources.Tables
   *     [[exactCollapse]]);
   *   - candidates come only from LSH bucket collisions of the canonicals'
   *     band rows (never the O(n²) pair space), with oversized buckets
-  *     star/chain-routed linearly — every branch reads the same persisted
-  *     table;
+  *     star/chain-routed linearly — one read of the persisted table and
+  *     one (band, sig) shuffle emit every edge family;
   *   - verification joins each candidate pair to the two documents' key
   *     arrays, one row per document, and counts common keys with a native
   *     sorted merge ([[graft.functions.SortedKeyOverlap]]) — no per-shingle
   *     rows exist anywhere;
-  *   - connected components is iterative smallest-label propagation over
-  *     the (sparse) duplicate graph, converging in O(log diameter) joins —
-  *     dup clusters are tiny in practice, so this terminates in 1-3 rounds
-  *     on real corpora.
+  *   - connected components is a driver union-find when the verified
+  *     edges fit, else smallest-label propagation over the (sparse)
+  *     duplicate graph, converging in O(log diameter) joins — dup
+  *     clusters are tiny in practice, so 1-3 rounds on real corpora.
   * `doc_id` is the document key and must be unique.
   */
 object Curation {
@@ -128,25 +128,19 @@ object Curation {
     canonPairs.union(stars)
   }
 
-  /** Distinct (da < db) candidate pairs from (doc_id, band, sig) rows. */
+  /** Distinct (da < db) candidate pairs from (doc_id, band, sig) rows in
+    * one branch over one (band, sig) shuffle: every window clusters on
+    * (band, sig) or a superset, and each band row emits all its edges —
+    * pairs with the members before it in a small bucket (≤
+    * `hotBucketLimit`), or its star and chain edge in a hot one. Hot
+    * buckets stay row-based: nothing collects a whole bucket. */
   private def bucketCandidates(
       bands: DataFrame, hotBucketLimit: Int, chainHexChars: Int): DataFrame = {
-    // one window pass annotates every row with its bucket size and bucket
-    // minimum; the (band, sig) clustering it establishes is the same one
-    // the self-join needs, so EnsureRequirements reuses the exchange
-    val w = Window.partitionBy(col("band"), col("sig"))
+    val bucket = Window.partitionBy(col("band"), col("sig"))
     val sized = bands
-      .withColumn("bsz", count(lit(1)).over(w))
-      .withColumn("bmin", min(col("doc_id")).over(w))
-    val small = sized.filter(col("bsz") <= hotBucketLimit)
-    val pairs = small.alias("a")
-      .join(small.alias("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-    val hot = sized.filter(col("bsz") > hotBucketLimit)
-    val star = hot.filter(col("doc_id") =!= col("bmin"))
-      .select(col("bmin").as("da"), col("doc_id").as("db"))
+      .withColumn("bsz", count(lit(1)).over(bucket))
+      .withColumn("bmin", min(col("doc_id")).over(bucket))
+    val hot = col("bsz") > hotBucketLimit
     // chain: successor edges in md5(doc_id) order, windowed per md5
     // sub-bucket so a 1B-member hot bucket sorts as 4096 parallel chains
     // (~250k rows each), never one task. Sub-chains are disconnected from
@@ -154,26 +148,34 @@ object Curation {
     // bucket-level connectivity never regresses below star-only routing.
     // chainHexChars: 3 → 4096 sub-chains (default), 0 → one chain (test
     // scale), < 0 → star-only routing (the measured-coverage baseline).
-    // Positive widths go through the shared validated long-typed bucket
-    // helper (ADVICE r7: an unvalidated int cast overflowed past 7 hex
-    // digits to NULL, silently collapsing every overflowed row into one
-    // null sub-bucket — the single-task sort sub-chaining exists to avoid).
-    if (chainHexChars < 0) pairs.union(star).distinct()
-    else {
-      val subB =
-        if (chainHexChars == 0) lit(0)
-        else DataPrep.hexPrefixBucket(col("hh"), chainHexChars)
-      val chainW = Window.partitionBy(col("band"), col("sig"), col("sb"))
-        .orderBy(col("hh"), col("doc_id"))
-      val chain = hot
-        .withColumn("hh", md5(col("doc_id").cast("string")))
-        .withColumn("sb", subB)
-        .withColumn("prev", lag(col("doc_id"), 1).over(chainW))
-        .filter(col("prev").isNotNull)
-        .select(least(col("prev"), col("doc_id")).as("da"),
-          greatest(col("prev"), col("doc_id")).as("db"))
-      pairs.union(star).union(chain).distinct()
-    }
+    // Positive widths use the validated long-typed bucket helper (an int
+    // cast overflowed past 7 hex digits into one NULL sub-bucket, ADVICE r7).
+    // Small-bucket rows hash to NULL, so one sort by (band, sig, sb, hh,
+    // doc_id) orders them by doc_id and serves both windows below.
+    val routed = sized
+      .withColumn("hh", when(hot, md5(col("doc_id").cast("string"))))
+      .withColumn("sb",
+        if (chainHexChars <= 0) lit(0L)
+        else DataPrep.hexPrefixBucket(col("hh"), chainHexChars))
+    val before = bucket.orderBy(col("sb"), col("hh"), col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val chainW = Window.partitionBy(col("band"), col("sig"), col("sb"))
+      .orderBy(col("hh"), col("doc_id"))
+    def edge(a: Column, b: Column): Column =
+      struct(least(a, b).as("da"), greatest(a, b).as("db"))
+    routed
+      // collect_list skips NULLs: a hot bucket's prefix lists stay empty
+      .withColumn("before", collect_list(when(!hot, col("doc_id"))).over(before))
+      .withColumn("prev",
+        if (chainHexChars < 0) lit(null).cast("long")
+        else when(hot, lag(col("doc_id"), 1).over(chainW)))
+      .select(explode(concat(
+        transform(col("before"), p => edge(p, col("doc_id"))),
+        filter(array(
+          when(hot && col("doc_id") =!= col("bmin"), edge(col("bmin"), col("doc_id"))),
+          when(col("prev").isNotNull, edge(col("prev"), col("doc_id")))), _.isNotNull)))
+        .as("e"))
+      .select(col("e.da"), col("e.db")).distinct()
   }
 
   /** Keeps only candidate pairs whose exact shingle Jaccard ≥ threshold. */
@@ -207,17 +209,21 @@ object Curation {
     * verified dup-edge list is ~O(actual duplicates), tiny relative to the
     * corpus even at 100 TB, so when it fits comfortably on the driver
     * (≤ `driverEdgeLimit`, ~16 MB) a local union-find + broadcast-mapped
-    * join replaces the iterative job loop. Beyond the limit, distributed
-    * smallest-label propagation takes over — one join round per hop of
-    * component diameter, erroring loudly if `maxIter` rounds don't
-    * converge (silent truncation would report one cluster as several).
+    * join replaces the iterative job loop; one collect of at most
+    * `driverEdgeLimit` + 1 edges (capped at `Int.MaxValue`) is either the
+    * whole list or proof that it does not fit. Beyond the limit,
+    * distributed smallest-label propagation takes over on the persisted
+    * edges — one join round per hop of component diameter, erroring
+    * loudly if `maxIter` rounds don't converge (silent truncation would
+    * report one cluster as several).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame, maxIter: Int = 50,
       driverEdgeLimit: Long = 1000000L): DataFrame = {
     val e = edges.select(col("da"), col("db")).persist()
-    val nEdges = e.count()
-    if (nEdges <= driverEdgeLimit) {
-      val pairs = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val cap = driverEdgeLimit.max(0L).min(Int.MaxValue - 1L)
+    val head = e.limit(cap.toInt + 1).collect()
+    if (head.length <= cap) {
+      val pairs = head.map(r => (r.getLong(0), r.getLong(1)))
       e.unpersist()
       // path-compressed union-find over only the docs that appear in
       // edges; find is iterative — recursion would overflow the stack on
@@ -244,9 +250,12 @@ object Curation {
   }
 
   private def distributedCC(nodes: DataFrame, edges: DataFrame, maxIter: Int): DataFrame = {
-    // undirected edge list, both directions
-    val sym = edges.select(col("da").as("src"), col("db").as("dst"))
-      .union(edges.select(col("db").as("src"), col("da").as("dst")))
+    // both directions from ONE read: the bounded collect may have cached
+    // only some edge partitions, and two readers would compute the rest twice
+    val sym = edges.select(explode(array(
+        struct(col("da").as("src"), col("db").as("dst")),
+        struct(col("db").as("src"), col("da").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
     // initial labels are persisted too, so every iteration follows the
     // same discipline: cache next, count the diff, release the old
     var labels = nodes.select(col("doc_id"), col("doc_id").as("rep")).cache()

@@ -1,9 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, PosExplode}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.functions.{MinHashBands, WordShingles}
@@ -216,6 +220,56 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(driver == expected, s"driver union-find path: $driver")
   }
 
+  test("connectedComponents driverEdgeLimit boundary: local at the limit, distributed above it") {
+    import spark.implicits._
+    val nodes = (1L to 6L).toDF("doc_id")
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("da", "db")
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L)
+    // lastDistributedCCRounds is written by the distributed path only
+    def run(limit: Long): (Map[Long, Long], Boolean) = {
+      Curation.lastDistributedCCRounds = -1
+      val labels = Curation.connectedComponents(nodes, edges, driverEdgeLimit = limit)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (labels, Curation.lastDistributedCCRounds > 0)
+    }
+    assert(run(3L) == (expected, false), "edge count == driverEdgeLimit must stay local")
+    assert(run(2L) == (expected, true), "one edge over driverEdgeLimit must go distributed")
+    // the bounded collect's Int limit must not overflow
+    assert(run(Long.MaxValue) == (expected, false))
+    assert(run(Int.MaxValue.toLong) == (expected, false))
+  }
+
+  test("connectedComponents' driver path runs one action over the edges, never a count") {
+    import spark.implicits._
+    val nodes = (1L to 6L).toDF("doc_id")
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("da", "db")
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.add(funcName)
+    }
+    // listener events arrive on the asynchronous listener bus; its
+    // waitUntilEmpty is spark-private in Scala but public in bytecode
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    drain()
+    spark.listenerManager.register(listener)
+    val cc = try {
+      val out = Curation.connectedComponents(nodes, edges)
+      drain()
+      out
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(actions.asScala.toSeq == Seq("collect"), s"actions over the edges: $actions")
+    assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L))
+  }
+
   test("plan: shingles are hashed once, into the one persisted per-document table") {
     // every stage of clusterAssignments' own graph, executed; the
     // candidate and verification plans are then read from their final
@@ -240,18 +294,31 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         s"$name explodes shingles:\n$p")
       assert(find(p)(hashes).isEmpty, s"$name hashes shingles again:\n$p")
     }
-    // every band branch (a posexplode of the band signatures) reads the
-    // persisted table, and candidates and verification read the same one
+    // one band branch: exactly one posexplode of the band signatures,
+    // reading the persisted table, feeds exactly one shuffle keyed on
+    // (band, sig), and no Union re-reads the band rows
     def tableScans(p: SparkPlan): Seq[InMemoryTableScanExec] =
       collect(p) { case s: InMemoryTableScanExec => s }
     val cand = plans.find(_._1 == "minhash_candidates").get._2
-    val branches = collect(cand) { case g: GenerateExec => g }
-    assert(branches.size >= 2, s"expected the self-join's two band branches:\n$cand")
-    val branchTables = branches.map(g => tableScans(g).map(_.relation.cacheBuilder))
-    assert(branchTables.forall(_.size == 1), s"a band branch reads no persisted table:\n$cand")
-    val table = branchTables.head.head
-    assert(branchTables.forall(_.head eq table))
+    val bandExplodes = collect(cand) {
+      case g: GenerateExec if g.generator.isInstanceOf[PosExplode] => g
+    }
+    assert(bandExplodes.size == 1, s"expected one posexplode of the band signatures:\n$cand")
+    val bandTables = tableScans(bandExplodes.head).map(_.relation.cacheBuilder)
+    assert(bandTables.size == 1, s"the band rows read no persisted table:\n$cand")
+    val table = bandTables.head
     assert(table.cachedPlan.output.map(_.name).contains("keys"))
+    def bandSig(p: Partitioning): Boolean = p match {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name } == Seq("band", "sig")
+      case _ => false
+    }
+    val bandShuffles = collect(cand) {
+      case s: ShuffleExchangeExec if bandSig(s.outputPartitioning) => s
+      case r: ReusedExchangeExec if bandSig(r.child.outputPartitioning) => r
+    }
+    assert(bandShuffles.size == 1, s"expected one (band, sig) shuffle:\n$cand")
+    assert(collect(cand) { case u: UnionExec => u }.isEmpty, s"candidates union branches:\n$cand")
     val verify = plans.find(_._1 == "jaccard_confirm").get._2
     val verifyTables = tableScans(verify).map(_.relation.cacheBuilder)
     assert(verifyTables.nonEmpty && verifyTables.forall(_ eq table), s"$verify")
