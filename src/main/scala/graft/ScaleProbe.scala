@@ -27,7 +27,6 @@ import org.apache.spark.sql.functions._
   *   mode "stages"  — per-stage wall/rows of one curation chain, `arg`
   *        = q93b|q93c|q93d (the declared query with that prefix);
   *   mode "q51stages" — per-stage wall/rows of the dedup pipeline;
-  *   mode "bpestored" — stored-vocab BPE encode vs learn-included;
   *   mode "ann"     — recall@5 of LSH (q41: 8 planes, hamming-1
   *        multiprobe) and IVF (q41b: nlist=16, nprobe=4) against the
   *        brute-force top-5 (q40) over the scaled embeddings, plus
@@ -47,10 +46,7 @@ import org.apache.spark.sql.functions._
   *        (VERDICT r7 #1);
   *   mode "zorder"  — 2-dim box scan over a z-ordered vs 1-dim-sorted
   *        lineitem layout: rows delivered by the pruned parquet scans
-  *        and wall times, at growing corpus size (round 9);
-  *   mode "embedops" — q103/q104/q105 wall times over the scaled
-  *        embeddings (round 9);
-  *   modes "r10ops", "events", "pq", "r10b" — the round-10 families.
+  *        and wall times, at growing corpus size (round 9).
   * Scaled corpora are cached under cwd-relative `target/tmp`.
   * Prints one JSON line per run. All timed full-query runs materialize
   * via the noop sink (see Bench scaladoc — .count() prunes agg tails).
@@ -159,30 +155,6 @@ object ScaleProbe {
     out
   }
 
-  /** Builds (once) a scaled events table into the probe dir: copy c
-    * shifts user_id/event_id into disjoint ranges and keeps timestamps —
-    * per-user event structure (and so funnel shape and the day grid) is
-    * preserved exactly while users and rows grow copies×. */
-  def scaledEventsDir(spark: SparkSession, src: String, copies: Int): String = {
-    val out = probeDir(src, copies)
-    val evPath = s"$out/events.parquet"
-    if (!new java.io.File(s"$evPath/_SUCCESS").exists) {
-      val ev = graft.sources.Tables.events(spark, src)
-      val scaled = (0 until copies).map { c =>
-        ev.select(
-          (org.apache.spark.sql.functions.col("event_id") + c.toLong * 1000000000L).as("event_id"),
-          org.apache.spark.sql.functions.col("ts"),
-          (org.apache.spark.sql.functions.col("user_id") + c.toLong * 1000000000L).as("user_id"),
-          org.apache.spark.sql.functions.col("event_type"),
-          org.apache.spark.sql.functions.col("value"),
-          org.apache.spark.sql.functions.col("props"))
-      }.reduce(_ unionByName _)
-      scaled.repartition(spark.sparkContext.defaultParallelism)
-        .write.mode("overwrite").parquet(evPath)
-    }
-    out
-  }
-
   /** Builds (once) a scaled lineitem table into the probe dir: orderkey
     * remapped to disjoint ranges per copy, value columns unchanged, so
     * per-group value DISTRIBUTIONS (what GK summarizes) are preserved
@@ -253,29 +225,6 @@ object ScaleProbe {
         }
         val qs = times.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
         println(s"""{"metric":"scaleprobe","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
-
-      case "bpestored" =>
-        // The stored-tokenizer payoff (VERDICT r14 next #5): learn once
-        // and WRITE the artifact, then time the probe-side encode that
-        // only tokenizes the corpus and broadcast-joins the stored vocab
-        // — versus the learn-included q156c path. The probe must scale
-        // like the q30 wordcount class (one tokenize + hash agg); the
-        // learn pays the per-round vocab windows.
-        val out = scaledDocsDir(spark, src, copies)
-        val docs = graft.sources.Tables.load(spark, out, "documents")
-        val nDocs = docs.count()
-        val artPath = s"$out/bpe_vocab_s8.parquet"
-        val (_, tLearn) = timed(
-          graft.operators.TextAnalysis.bpeVocabArtifact(docs, "text", steps = 8)
-            .write.mode("overwrite").parquet(artPath))
-        val stored = spark.read.parquet(artPath)
-        val (_, tProbe) = timed(
-          graft.operators.TextAnalysis.bpeEncodeStored(docs, "doc_id", "text", stored)
-            .write.format("noop").mode("overwrite").save())
-        val (_, tLearned) = timed(
-          graft.operators.TextAnalysis.bpeEncode(docs, "doc_id", "text", steps = 8)
-            .write.format("noop").mode("overwrite").save())
-        println(s"""{"metric":"scaleprobe-bpestored","copies":$copies,"n_docs":$nDocs,"learn_write_sec":$tLearn,"stored_encode_sec":$tProbe,"learn_encode_sec":$tLearned,"src":"$src"}""")
 
       case "stages" =>
         // Per-stage wall/rows of one curation chain (VERDICT r11 stretch
@@ -534,40 +483,6 @@ object ScaleProbe {
         spark.sql(s"DROP TABLE IF EXISTS $tokTbl")
         println(s"""{"metric":"phrase_probe","copies":$copies,"n_docs":$nDocs,"n_hits":$nHits,"build_sec":$tBuild,"probe_sec":[${probeTimes.map(t => f"$t%.3f").mkString(",")}],"src":"$src"}""")
 
-      case "embedops" =>
-        // Decade probe for the round-9 embedding operators: k-means step
-        // (q103), covariance (q104), all-but-the-top (q105) over the
-        // scaled embeddings. Each is designed to be scan-bound with
-        // O(k·dim)/O(dim²) state — the decade ratio is the check.
-        val out = scaledEmbeddingsDir(spark, src, copies)
-        val nVecs = graft.sources.Tables.load(spark, out, "embeddings").count()
-        val times = Seq("q103_kmeans_step", "q104_embed_covariance",
-          "q105_embed_abtt").map { name =>
-          val (_, t) = timed(SparkEntry.queries(name)(spark, out)
-            .write.format("noop").mode("overwrite").save())
-          System.err.println(s"[embedops] $name sec=$t")
-          name -> t
-        }
-        // stored-shard moments fold (q109's production read path): the
-        // build cost scales with rows, but the FOLD reads only the 64
-        // constant-size state rows — its time must stay flat across
-        // decades while n_vecs grows 10× (the incremental-refresh claim).
-        val statesDir = s"$out/moment_states.parquet"
-        val emb = graft.sources.Tables.load(spark, out, "embeddings")
-        val (_, tBuild) = timed(
-          graft.operators.Similarity.momentShardStates(emb, 64, shards = 64)
-            .write.mode("overwrite").parquet(statesDir))
-        val (_, tFold) = timed(
-          graft.operators.Similarity.covarianceFromStates(
-            spark.read.parquet(statesDir), 64)
-            .write.format("noop").mode("overwrite").save())
-        System.err.println(s"[embedops] moments_build sec=$tBuild fold sec=$tFold")
-        val qs = (times ++ Seq("moments_states_build" -> tBuild,
-          "moments_stored_fold" -> tFold))
-          .map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-        println(s"""{"metric":"embedops_probe","copies":$copies,"n_vecs":$nVecs,"queries":$qs,"src":"$src"}""")
-
       case "zorder" =>
         // Measured 2-dim pruning decade: the same box predicate against a
         // z-ordered layout vs a 1-dim-sorted layout of the same rows, at
@@ -626,153 +541,9 @@ object ScaleProbe {
         require(nBoxZ == nBoxL, s"layouts disagree: $nBoxZ vs $nBoxL")
         println(s"""{"metric":"zorder_probe","copies":$copies,"n_rows":$nRows,"box_rows":$nBoxZ,"z_scan_rows":$zRead,"lin_scan_rows":$lRead,"z_write_sec":$tZw,"lin_write_sec":$tLw,"z_sec":[${zReps.map(t => f"$t%.3f").mkString(",")}],"lin_sec":[${lReps.map(t => f"$t%.3f").mkString(",")}],"src":"$src"}""")
 
-      case "r10ops" =>
-        // Decade probe for the round-10 families.
-        //  - bm25: stored-artifact probe (the q97 claim shape — the query
-        //    terms live only in copy 0's vocabulary, so candidate postings
-        //    stay constant while the corpus grows copies×; probe must be
-        //    ~flat). Build cost reported separately.
-        //  - textrank: 3 PageRank iterations; vocab AND edges grow with
-        //    copies (each copy brings its own alphabet-permuted vocab), so
-        //    the check is ~linear-in-edges per decade, not flatness.
-        //  - corpus diff: one digest join, ~linear in rows.
-        spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-        val out = scaledDocsDir(spark, src, copies)
-        val docs = graft.sources.Tables.load(spark, out, "documents")
-        val nDocs = docs.count()
-        val terms = Seq("spark", "vector", "customer", "partition")
-        val pTbl = s"bm25_probe_p_x$copies"
-        val lTbl = s"bm25_probe_l_x$copies"
-        val (_, tBuild) = timed {
-          graft.plans.ScaleOps.writeBucketed(
-            graft.operators.TextAnalysis.bm25Postings(docs, "doc_id", "text"),
-            "term", 64, pTbl)
-          graft.plans.ScaleOps.writeBucketed(
-            graft.operators.TextAnalysis.bm25DocLengths(docs, "doc_id", "text"),
-            "doc_id", 64, lTbl)
-        }
-        // stats persist beside the index in production: derive once at
-        // build time, excluded from the probe timing
-        val stats = graft.operators.TextAnalysis.bm25Stats(
-          spark.table(lTbl), spark.table(pTbl), terms)
-        def bm25Probe(): Long = graft.operators.TextAnalysis.bm25TopKStored(
-          spark, pTbl, lTbl, "doc_id", terms, stats, k = 20).count()
-        val nTop = bm25Probe() // warm
-        val bmTimes = (1 to 3).map(_ => timed(bm25Probe())._2)
-        spark.sql(s"DROP TABLE IF EXISTS $pTbl")
-        spark.sql(s"DROP TABLE IF EXISTS $lTbl")
-        val (_, tRank) = timed(
-          graft.operators.Graph.textRank(docs, "text", iters = 3,
-            damping = 0.85, k = 20).collect())
-        val v2 = docs.filter(col("doc_id") % 13 =!= 0)
-          .withColumn("text", when(col("doc_id") % 5 === 0,
-            concat(col("text"), lit(" v2"))).otherwise(col("text")))
-        val (_, tDiff) = timed(
-          graft.operators.DataPrep.corpusDiff(
-            docs.filter(col("doc_id") % 11 =!= 0), v2, "doc_id", "text")
-            .write.format("noop").mode("overwrite").save())
-        println(s"""{"metric":"r10ops_probe","copies":$copies,"n_docs":$nDocs,"bm25_top":$nTop,"bm25_build_sec":$tBuild,"bm25_probe_sec":[${bmTimes.map(t => f"$t%.3f").mkString(",")}],"textrank_sec":$tRank,"diff_sec":$tDiff,"src":"$src"}""")
-
-      case "events" =>
-        // Decade probe for the round-10 event-analytics ops: funnel
-        // (q122 — staged hash-aggs, should track users ~linearly per
-        // fixed-core decade) and trailing distinct (q123 — the daily
-        // STATE BUILD scans events, but the window FOLD touches only the
-        // ~30 constant-size state rows and must stay flat).
-        val out = scaledEventsDir(spark, src, copies)
-        val ev = graft.sources.Tables.events(spark, out)
-        val nEv = ev.count()
-        val (_, tFunnel) = timed(graft.operators.Windows.funnel(
-          ev, Seq("view", "click", "purchase"), 86400L).collect())
-        val statesDir = s"$out/daily_states.parquet"
-        val (_, tStates) = timed(
-          graft.operators.Sketches.dailyUserStates(ev)
-            .write.mode("overwrite").parquet(statesDir))
-        val (_, tFold) = timed(
-          graft.operators.Sketches.trailingDistinct(
-            spark.read.parquet(statesDir), windowDays = 7)
-            .write.format("noop").mode("overwrite").save())
-        println(s"""{"metric":"events_probe","copies":$copies,"n_events":$nEv,"funnel_sec":$tFunnel,"states_build_sec":$tStates,"trailing_fold_sec":$tFold,"src":"$src"}""")
-
-      case "pq" =>
-        // PQ decade over the scaled embeddings: fit is sample-scoped by
-        // design (reported as build); ENCODE is the full linear scan and
-        // the ADC probe is codes-only — encode should track rows ~linearly
-        // per fixed-core decade, probe likewise (it scans all codes).
-        val out = scaledEmbeddingsDir(spark, src, copies)
-        val emb = graft.sources.Tables.load(spark, out, "embeddings")
-        val nVecs = emb.count()
-        // codebooks from copy 0 only — the "train on a hash sample" path
-        val (books, tFit) = timed(graft.operators.Similarity.pqFit(
-          emb.filter(col("vec_id") < 100000000L), m = 8, dim = 64, ksub = 16, iters = 2))
-        val (_, tEnc) = timed(graft.operators.Similarity.pqEncode(emb, books)
-          .write.format("noop").mode("overwrite").save())
-        val enc = graft.operators.Similarity.pqEncode(emb, books)
-        val (_, tAdc) = timed(graft.operators.Similarity.pqAdcTopK(
-          enc, col("vec_id") < 10, k = 5, books)
-          .write.format("noop").mode("overwrite").save())
-        println(s"""{"metric":"pq_probe","copies":$copies,"n_vecs":$nVecs,"fit_sec":$tFit,"encode_sec":$tEnc,"adc_sec":$tAdc,"src":"$src"}""")
-
-      case "r10b" =>
-        // Decade probe for the round-10 part-2 families:
-        //  - mg: one-pass Misra-Gries summary over the scaled bigram
-        //    stream (linear scan; the shuffle carries one O(k) state per
-        //    task) and the STORED-shard fold (64 states — must be flat);
-        //  - jl: d->m projection over the scaled embeddings (linear
-        //    stateless encode, the ingest-time shape);
-        //  - skew: q127's two-hash-agg key profile over scaled events;
-        //  - drift: q128's one-scan two-slice verdict over scaled
-        //    embeddings.
-        val outD = scaledDocsDir(spark, src, copies)
-        val docs = graft.sources.Tables.load(spark, outD, "documents")
-        val toks = docs.select(col("doc_id"), col("source"),
-            explode(graft.functions.WordNGrams(
-              graft.functions.TextFunctions.tokens(col("text")), 2)).as("w"))
-          .withColumn("h", xxhash64(col("w")))
-        val nTok = toks.count()
-        val k = 255
-        val mg = udaf(new graft.mr.Aggregators.MgStateAggregator(k),
-          org.apache.spark.sql.Encoders.scalaLong)
-        val mgFold = udaf(new graft.mr.Aggregators.MgMergeAggregator(k),
-          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
-        val (_, tMg) = timed(toks.agg(mg(col("h")).as("st"))
-          .write.format("noop").mode("overwrite").save())
-        // 64 persisted shard states, then the fold-only read path
-        val statesDir = s"$outD/mg_states.parquet"
-        val (_, tShards) = timed(
-          toks.withColumn("shard", pmod(xxhash64(col("doc_id")), lit(64)))
-            .groupBy(col("shard")).agg(mg(col("h")).as("st"))
-            .write.mode("overwrite").parquet(statesDir))
-        val (_, tFold) = timed(
-          spark.read.parquet(statesDir).agg(mgFold(col("st")).as("st"))
-            .write.format("noop").mode("overwrite").save())
-        // the embedding transform space caps at 128 copies; past it the
-        // docs-side families (the x1000 decade) still measure
-        val (nVec, tJl, tDrift, tSkew) =
-          if (copies > 128) (0L, -1.0, -1.0, -1.0)
-          else {
-            val outE = scaledEmbeddingsDir(spark, src, copies)
-            val emb = graft.sources.Tables.load(spark, outE, "embeddings")
-            val nv = emb.count()
-            val (_, tj) = timed(
-              graft.operators.Similarity.jlProject(spark, emb, 64, 16)
-                .write.format("noop").mode("overwrite").save())
-            val (_, td) = timed(
-              graft.operators.Similarity.embeddingDrift(emb, pmod(col("label"), lit(2)))
-                .write.format("noop").mode("overwrite").save())
-            val outV = scaledEventsDir(spark, src, copies)
-            val ev = graft.sources.Tables.events(spark, outV)
-            val (_, tsk) = timed(
-              graft.plans.ScaleOps.keySkewProfile(ev, "events.user_id", "user_id", 200L)
-                .write.format("noop").mode("overwrite").save())
-            (nv, tj, td, tsk)
-          }
-        println(s"""{"metric":"r10b_probe","copies":$copies,"n_tokens":$nTok,"n_vecs":$nVec,"mg_sec":$tMg,"mg_shards_sec":$tShards,"mg_fold_sec":$tFold,"jl_sec":$tJl,"drift_sec":$tDrift,"skew_sec":$tSkew,"src":"$src"}""")
-
       case other =>
         fail(s"unknown mode: $other (expected queries|stages|q51stages|" +
-          "bpestored|ann|annc|lshcurve|sketches|cc|phrase|zorder|embedops|" +
-          "r10ops|events|pq|r10b)")
+          "ann|annc|lshcurve|sketches|cc|phrase|zorder)")
     }
     spark.stop()
   }

@@ -606,8 +606,10 @@ object DataPrep {
     * broadcast exclusive-prefix-summed bucket totals) — a plain
     * partitioned window would pull every row of a group through ONE task.
     * `weightCol` is summed as LONG (exact at any corpus size; a double
-    * running sum would drift with partial ordering); `idCol` must be
-    * non-null (same precondition and reason as md5BucketRank).
+    * running sum would drift with partial ordering) and must be integral
+    * (refused loudly otherwise — pre-scale fractional weights to integer
+    * units first); `idCol` must be non-null (same precondition and reason
+    * as md5BucketRank).
     */
   def md5BucketCumsum(df: DataFrame, groupCol: String, idCol: String,
       weightCol: String, cumAs: String, hexChars: Int = 3): DataFrame = {
@@ -668,8 +670,9 @@ object DataPrep {
     * All arithmetic is integer (LONG cumsum, integer DIV), so an oracle
     * replaying the same formula matches bit-for-bit — no transcendental
     * key (the exponential-variate weighted-sampling trick needs pow/log,
-    * whose last-ulp differs across engines). Weights must be ≥ 0;
-    * zero-weight rows are never selected (their span is empty).
+    * whose last-ulp differs across engines). Weights must be integral
+    * (see [[md5BucketCumsum]]) and ≥ 0; zero-weight rows are never
+    * selected (their span is empty).
     *
     * Scale: one [[md5BucketCumsum]] (parallel within md5-prefix buckets,
     * broadcast offsets) + a stateless row-local predicate — no global

@@ -279,13 +279,6 @@ object Multimodal {
       WHERE i % 2 = 0
       ORDER BY doc_id, frame_no"""))
 
-  /** "Resize" to a fixed output size: truncate or zero-pad the payload to
-    * `targetBytes` — the fixed-output-size contract real resize has (a
-    * pixel implementation would scale instead of pad; same column shape).
-    */
-  def resizeFixed(r: MediaRecord, targetBytes: Int): MediaRecord =
-    r.copy(payload = r.payload.padTo(targetBytes, 0.toByte).take(targetBytes))
-
   // ---------------------------------------------------------------- q131
   // Audio/video container decode — the WAV (RIFF fmt-chunk walk) and MP4
   // (ISO BMFF ftyp box) siblings of q108's image decoder, completing the

@@ -269,6 +269,8 @@ object TextAnalysis {
   /** Corpus-statistics rarity scores per document: mean token probability
     * and mean inverse frequency (idf-like). Per-doc sums are sequential
     * folds over position-sorted lists — deterministic at any parallelism.
+    * `minCount` > 1 pre-prunes the broadcast vocabulary (the Heaps-law OOM
+    * mitigation).
     */
   def rarityScores(df: DataFrame, idCol: String, textCol: String,
       minCount: Long = 1L): DataFrame = {
@@ -347,6 +349,7 @@ object TextAnalysis {
   /** Per-document mean smoothed bigram transition probability under the
     * corpus's own bigram LM — the statistical LM quality filter. Output:
     * (id, n_bigrams, lm_score); documents with < 2 tokens emit no row.
+    * `minCount` > 1 pre-prunes the broadcast unigram vocabulary.
     */
   def bigramLmScores(df: DataFrame, idCol: String, textCol: String,
       minCount: Long = 1L): DataFrame = {

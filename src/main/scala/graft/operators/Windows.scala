@@ -8,8 +8,8 @@ import graft.sources.Tables
 
 /** Event-time window aggregations over `events` in BATCH form — tumbling,
   * sliding, and session windows via the same `window()`/`session_window()`
-  * functions Structured Streaming uses, so the streaming layer
-  * (graft.streaming.Streams) is batch-parity-tested against these
+  * functions Structured Streaming uses, so the streaming layer's tumbling
+  * form (graft.streaming.Streams) is batch-parity-tested against these
   * oracle-checked results (SURVEY §7.2 step 6).
   *
   * Window starts are emitted as epoch-second BIGINTs (boundaries are whole

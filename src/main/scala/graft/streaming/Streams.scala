@@ -4,12 +4,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming layer over the `events` stream (ABSENT in the
-  * reference — strictly batch, SURVEY §2.10).
+/** Structured Streaming layer (ABSENT in the reference — strictly batch,
+  * SURVEY §2.10).
   *
-  * Each transform here is the streaming form of an oracle-checked batch
-  * query in [[graft.operators.Windows]]; batch-parity and
-  * watermark/late-data semantics are asserted in ScalaTest with
+  * [[tumblingCounts]] and [[sessionCounts]] group like the oracle-checked
+  * batch q48 and q50 in [[graft.operators.Windows]]; StreamingSpec asserts
+  * tumbling batch parity on the events table and the session gap rule.
+  * The other transforms name their batch form in their own scaladoc.
+  * Watermark/late-data semantics and custom state are asserted with
   * `MemoryStream` (see StreamingSpec). At scale these run unchanged on a
   * Kafka/file source: state lives in the state store, watermarks bound it.
   */
@@ -33,14 +35,6 @@ object Streams {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
       .select(unix_timestamp(col("w.start")).as("win_start"),
         col("event_type"), col("n"), col("sum_value"))
-
-  /** Sliding 10m/5m windows, 30-min watermark. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_timestamp(col("w.start")).as("win_start"), col("n"))
 
   /** Session windows (30-min gap) per user, watermarked. */
   def sessionCounts(events: DataFrame): DataFrame =

@@ -158,7 +158,7 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((10L, "a b a b a b a b"), (11L, "p q r s t u v w"))
       .toDF("my_id", "body")
-    val rep = graft.Pipeline.repetitionSignals(docs, "my_id", "body")
+    val rep = TextAnalysis.repetitionSignals(docs, "my_id", "body")
       .collect().map(r => r.getLong(0) ->
         (r.getInt(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
     // "a b" ×4 of 7 bigrams, 2 distinct tokens of 8
@@ -168,11 +168,11 @@ class OperatorsSpec extends SparkSpec {
 
     val train = Seq((1L, "p q r s"), (2L, "u v w x")).toDF("my_id", "body")
     val eval_ = Seq((9L, "q r")).toDF("my_id", "body")
-    val kept = graft.Pipeline.decontaminate(train, eval_, "my_id", "body", n = 2)
+    val kept = DataPrep.decontaminate(train, eval_, "my_id", "body", n = 2)
       .select("my_id").as[Long].collect().toSet
     assert(kept == Set(2L), s"doc 1 shares the 2-gram 'q r' with eval; got $kept")
 
-    val mix = graft.Pipeline.mixWeights(
+    val mix = DataPrep.mixWeights(
       Seq(("a", "one two three four"), ("b", "one two three four five six seven eight nine"))
         .toDF("grp", "body"), "grp", "body")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
