@@ -14,9 +14,10 @@ import org.apache.spark.sql.execution.SimpleMode
   * Besides each query's final frame, every [[IterProbe]] tap the query
   * fires while it is built is dumped as `<query>_iter_<tap>_<k>`: the
   * loop iterations of pageRank/HITS/BPE/unigram, captured before their
-  * localCheckpoint, and the `stage_*` boundaries of the curation chains
-  * (both checkpoint eagerly, so the final frame alone shows only the
-  * post-checkpoint plan).
+  * localCheckpoint, and the `stage_*` boundaries of q51's
+  * `clusterAssignments` and of the curation chains (both checkpoint
+  * eagerly, so the final frame alone shows only the post-checkpoint
+  * plan).
   */
 object PlanDump {
   private val audited = Seq(
@@ -119,9 +120,9 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     println(sessionLine(spark))
     names.getOrElse(audited).foreach { name =>
-      IterProbe.probe = Some((tap, k, frame) => explain(s"${name}_iter_${tap}_$k", frame))
-      try explain(name, SparkEntry.queries(name)(spark, sfDir))
-      finally IterProbe.probe = None
+      IterProbe.during((tap, k, frame) => explain(s"${name}_iter_${tap}_$k", frame)) {
+        explain(name, SparkEntry.queries(name)(spark, sfDir))
+      }
     }
     if (names.isEmpty) dumpStoredPhraseProbe(spark, sfDir)
     spark.stop()

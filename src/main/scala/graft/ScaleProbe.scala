@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *        documents table; `arg` is a comma-separated list of declared
   *        query names (default: the dedup/text family in
   *        [[defaultQueries]]; SCALE.md lists the per-round sets);
-  *   mode "stages"  — per-stage wall/rows of one curation chain, `arg`
-  *        = q93b|q93c|q93d (the declared query with that prefix);
-  *   mode "q51stages" — per-stage wall/rows of the dedup pipeline;
+  *   mode "stages"  — per-stage wall/rows of one declared query that
+  *        taps stages, `arg` = q51|q51b|q93b|q93c|q93d (the declared
+  *        query with that prefix);
   *   mode "ann"     — recall@5 of LSH (q41: 8 planes, hamming-1
   *        multiprobe) and IVF (q41b: nlist=16, nprobe=4) against the
   *        brute-force top-5 (q40) over the scaled embeddings, plus
@@ -37,9 +37,6 @@ import org.apache.spark.sql.functions._
   *        multiprobe over the scaled embeddings (VERDICT r6 #7);
   *   mode "sketches" — lineitem-replication decade for q92/q43 plus the
   *        1,024-shard CMS/GK state fold (VERDICT r6 #5);
-  *   mode "cc"      — the full dedup pipeline with driverEdgeLimit=0 so
-  *        connected components runs the DISTRIBUTED label-propagation
-  *        path; reports wall time and rounds-to-converge (VERDICT r5 #7);
   *   mode "phrase"  — q97's stored-artifact probe: builds the bucketed
   *        gram index + token table once, then times phraseHitsStored
   *        alone — probe latency must stay ~flat as copies grow
@@ -227,50 +224,28 @@ object ScaleProbe {
         println(s"""{"metric":"scaleprobe","copies":$copies,"n_docs":$nDocs,"queries":$qs,"src":"$src"}""")
 
       case "stages" =>
-        // Per-stage wall/rows of one curation chain (VERDICT r11 stretch
-        // #9): the IterProbe hook forces each `stage_*` frame and clocks
-        // the gap since the previous tap, so drift triage on the most
-        // expensive declared queries is one read. The gate/near-dedup
-        // taps force work the chain fuses into the next checkpoint, so
-        // probed wall is attribution, not added cost. q93b/q93c/q93d run
-        // their declared span pin (K = 4).
-        val chain = args.lift(3).getOrElse("")
-        val matches = SparkEntry.queries.keys.filter(_.startsWith(chain + "_")).toSeq
+        // Per-stage wall/rows of one declared query (VERDICT r11 stretch
+        // #9): IterProbe.stageTimings persists, forces and clocks each
+        // `stage_*` frame, so drift triage on the most expensive declared
+        // queries is one read. The chains fuse their gate/near-dedup
+        // stages into the next checkpoint, so probed wall is attribution,
+        // not added cost. q93b/q93c/q93d run their declared span pin
+        // (K = 4); a chain reports q51's stages inside its near dedup.
+        val prefix = args.lift(3).getOrElse("")
+        val matches = SparkEntry.queries.keys.filter(_.startsWith(prefix + "_")).toSeq
         if (matches.size != 1)
-          fail(s"stages needs one chain query (q93b|q93c|q93d), got '$chain'")
+          fail(s"stages needs one query prefix (q51|q51b|q93b|q93c|q93d), got '$prefix'")
         val out = scaledDocsDir(spark, src, copies)
         val nDocs = graft.sources.Tables.load(spark, out, "documents").count()
-        val b = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
-        var last = System.nanoTime()
-        IterProbe.probe = Some { (tap, _, df) =>
-          if (tap.startsWith("stage_")) {
-            val rows = df.count()
-            val now = System.nanoTime()
-            b += ((tap.stripPrefix("stage_"), (now - last) / 1e9, rows)); last = now
-          }
-        }
-        val fin = try SparkEntry.queries(matches.head)(spark, out)
-          finally IterProbe.probe = None
-        if (b.isEmpty) fail(s"${matches.head} taps no stage_* boundaries")
-        val (_, tMix) = timed(fin.write.format("noop").mode("overwrite").save())
-        val qs = (b.map { case (n, t, r) =>
+        var fin: org.apache.spark.sql.DataFrame = null
+        val stages = IterProbe.stageTimings { fin = SparkEntry.queries(matches.head)(spark, out) }
+        if (stages.isEmpty) fail(s"${matches.head} taps no stage_* boundaries")
+        val (_, tWrite) = timed(fin.write.format("noop").mode("overwrite").save())
+        val qs = (stages.map { case (n, t, r) =>
           "\"" + n + "\":{\"sec\":" + t + ",\"rows\":" + r + "}"
-        } :+ ("\"epoch_mix_write\":{\"sec\":" + tMix + ",\"rows\":-1}"))
+        } :+ ("\"final_write\":{\"sec\":" + tWrite + ",\"rows\":-1}"))
           .mkString("{", ",", "}")
         println(s"""{"metric":"scaleprobe-stages","query":"${matches.head}","copies":$copies,"n_docs":$nDocs,"stages":$qs,"src":"$src"}""")
-
-      case "q51stages" =>
-        // Per-stage wall/rows for the dedup pipeline (VERDICT r11 next
-        // #2): which stage grew is one read instead of a blind rerun.
-        val out = scaledDocsDir(spark, src, copies)
-        val docs = graft.sources.Tables.load(spark, out, "documents")
-        val nDocs = docs.count()
-        val stages = graft.operators.Curation.stageTimings(docs, threshold = 0.5)
-        val qs = stages.map { case (n, t, r) =>
-          "\"" + n + "\":{\"sec\":" + t + ",\"rows\":" + r + "}"
-        }.mkString("{", ",", "}")
-        val rounds = graft.operators.Curation.lastDistributedCCRounds
-        println(s"""{"metric":"scaleprobe-q51stages","copies":$copies,"n_docs":$nDocs,"cc_rounds":$rounds,"stages":$qs,"src":"$src"}""")
 
       case "ann" =>
         val out = scaledEmbeddingsDir(spark, src, copies)
@@ -437,20 +412,6 @@ object ScaleProbe {
         shardStates.unpersist()
         println(s"""{"metric":"sketch_probe","copies":$copies,"n_rows":$nRows,"q92_sec":$tQ92,"q43_sec":$tQ43,"merge_shards":$built,"cms_fold_sec":$tCmsFold,"gk_fold_sec":$tGkFold,"gk_p95":$p95,"src":"$src"}""")
 
-      case "cc" =>
-        val out = scaledDocsDir(spark, src, copies)
-        val docs = graft.sources.Tables.load(spark, out, "documents")
-        val nDocs = docs.count()
-        // force the distributed label-propagation path regardless of edge
-        // count, so the beyond-driver fallback has a measured datapoint
-        val (n, t) = timed {
-          graft.operators.Curation
-            .clusterAssignments(docs, threshold = 0.5, driverEdgeLimit = 0L)
-            .count()
-        }
-        val rounds = graft.operators.Curation.lastDistributedCCRounds
-        println(s"""{"metric":"distributed_cc","copies":$copies,"n_docs":$nDocs,"labels":$n,"rounds":$rounds,"sec":$t,"src":"$src"}""")
-
       case "phrase" =>
         // q97's stored-probe decade (VERDICT r7 #1): build the two
         // persisted artifacts once (index bucketed by gh, token table
@@ -542,8 +503,8 @@ object ScaleProbe {
         println(s"""{"metric":"zorder_probe","copies":$copies,"n_rows":$nRows,"box_rows":$nBoxZ,"z_scan_rows":$zRead,"lin_scan_rows":$lRead,"z_write_sec":$tZw,"lin_write_sec":$tLw,"z_sec":[${zReps.map(t => f"$t%.3f").mkString(",")}],"lin_sec":[${lReps.map(t => f"$t%.3f").mkString(",")}],"src":"$src"}""")
 
       case other =>
-        fail(s"unknown mode: $other (expected queries|stages|q51stages|" +
-          "ann|annc|lshcurve|sketches|cc|phrase|zorder)")
+        fail(s"unknown mode: $other (expected queries|stages|" +
+          "ann|annc|lshcurve|sketches|phrase|zorder)")
     }
     spark.stop()
   }

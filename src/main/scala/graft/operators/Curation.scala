@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.GraftQuery
+import graft.{GraftQuery, IterProbe}
+import graft.IterProbe.stage
 import graft.sources.Tables
 
 /** End-to-end corpus dedup pipeline — the composed training-data curation
@@ -285,7 +285,6 @@ object Curation {
     // rounds-to-converge is the scale-relevant number (one join round per
     // hop of component diameter) — surface it for probes and ops logs
     System.err.println(s"[graft] distributed CC converged in $iter rounds")
-    lastDistributedCCRounds = iter
     // optimization r19 (honest measurement, VERDICT r18 what's-wrong #6):
     // the final labels used to be RETURNED STILL CACHED — CacheManager
     // keys on the canonicalized plan, so a later bench rep of the same
@@ -300,37 +299,9 @@ object Curation {
     out
   }
 
-  /** Rounds the most recent [[distributedCC]] run took to converge —
-    * diagnostic only (ScaleProbe reports it next to wall time; the VALUE
-    * returned by the operator never depends on it).
-    *
-    * DELIBERATELY module-level and last-writer-wins: two CONCURRENT
-    * clusterAssignments runs in one JVM would race, and the reader could
-    * see the other run's rounds. Its only consumer is the single-run
-    * ScaleProbe cc mode (one probe per JVM); anything needing per-call
-    * rounds under concurrency should parse the `[graft] distributed CC
-    * converged` log line or extend distributedCC to return the count —
-    * do NOT report this field from concurrent jobs (ADVICE r6 #3).
-    */
-  @volatile private[graft] var lastDistributedCCRounds: Int = -1
-
   /** The full pipeline: returns (doc_id, rep) where rep is the canonical
     * (minimum) doc_id of the near-duplicate cluster; docs with rep ==
     * doc_id form the deduplicated corpus.
-    */
-  def clusterAssignments(docs: DataFrame, threshold: Double,
-      hotBucketLimit: Int = DefaultHotBucketLimit,
-      driverEdgeLimit: Long = 1000000L,
-      chainHexChars: Int = 3): DataFrame =
-    stageGraph(docs, threshold, hotBucketLimit, driverEdgeLimit, chainHexChars,
-      (_, f) => f())
-
-  /** How [[stageGraph]] materializes each named stage:
-    * [[clusterAssignments]] passes the frame through, [[stageTimings]]
-    * persists, counts and times it. */
-  private[operators] type StageHook = (String, () => DataFrame) => DataFrame
-
-  /** The one definition of [[clusterAssignments]]' stages.
     *
     * Exact duplicates never reach banding, verification, or CC: collapse
     * first (see [[exactCollapse]] — this is what keeps identical-document
@@ -343,53 +314,35 @@ object Curation {
     * The per-document table is persisted for the call and released
     * before returning; connected components materializes its labels and
     * the membership map is checkpointed, so the returned frame never
-    * recomputes a signature.
+    * recomputes a signature. Each stage is an [[graft.IterProbe.stage]]
+    * boundary, which PlanDump explains and [[stageTimings]] times.
     */
-  private[operators] def stageGraph(docs: DataFrame, threshold: Double,
-      hotBucketLimit: Int, driverEdgeLimit: Long, chainHexChars: Int,
-      stage: StageHook): DataFrame = {
-    val sigs = stage("shingle_persist", () => Dedup.docSignatures(docs).persist())
+  def clusterAssignments(docs: DataFrame, threshold: Double,
+      hotBucketLimit: Int = DefaultHotBucketLimit,
+      driverEdgeLimit: Long = 1000000L,
+      chainHexChars: Int = 3): DataFrame = {
+    val sigs = stage("shingle_persist", Dedup.docSignatures(docs).persist())
     try {
-      val members = stage("exact_collapse", () => exactCollapse(sigs).localCheckpoint())
-      val canon = stage("canonical_ids", () => canonicalIds(members))
-      val cand = stage("minhash_candidates", () => bucketCandidates(
+      val members = stage("exact_collapse", exactCollapse(sigs).localCheckpoint())
+      val canon = stage("canonical_ids", canonicalIds(members))
+      val cand = stage("minhash_candidates", bucketCandidates(
         canonicalBands(sigs, canon), hotBucketLimit, chainHexChars))
-      val pairs = stage("jaccard_confirm", () => verifySigPairs(sigs, cand, threshold))
-      val canonCC = stage("connected_components", () =>
+      val pairs = stage("jaccard_confirm", verifySigPairs(sigs, cand, threshold))
+      val canonCC = stage("connected_components",
         connectedComponents(canon, pairs, driverEdgeLimit = driverEdgeLimit))
-      stage("expand_labels", () => members
+      stage("expand_labels", members
         .join(canonCC.select(col("doc_id").as("cdoc"), col("rep")), "cdoc")
         .select(col("doc_id"), col("rep")))
     } finally sigs.unpersist()
   }
 
-  /** Per-stage wall + row profile of [[clusterAssignments]] — the
-    * drift-triage instrumentation VERDICT r11 next #2 asked for. The
-    * stage graph and parameters are clusterAssignments' own
-    * ([[stageGraph]]); each stage is persisted and forced with count() so
-    * a stage's number is its own cost, not its ancestors' recompute.
-    * Diagnostic only (the declared queries never call it); surfaced via
-    * ScaleProbe mode `q51stages` and the benchmark's traced near_dedup
-    * run. */
-  private[graft] def stageTimings(docs: DataFrame, threshold: Double,
-      hotBucketLimit: Int = DefaultHotBucketLimit,
-      driverEdgeLimit: Long = 1000000L,
-      chainHexChars: Int = 3): Seq[(String, Double, Long)] = {
-    val b = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Long)]
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      stageGraph(docs, threshold, hotBucketLimit, driverEdgeLimit, chainHexChars,
-        (name, f) => {
-          val t0 = System.nanoTime()
-          val d = f()
-          if (d.storageLevel == StorageLevel.NONE) { d.persist(); held += d }
-          val rows = d.count()
-          b += ((name, (System.nanoTime() - t0) / 1e9, rows))
-          d
-        })
-    } finally held.foreach(_.unpersist())
-    b.toSeq
-  }
+  /** Per-stage wall + row profile of [[clusterAssignments]]:
+    * [[graft.IterProbe.stageTimings]] over one call, each stage persisted
+    * and forced. Diagnostic only (the declared queries never call it);
+    * the benchmark's traced near_dedup run reads it. */
+  private[graft] def stageTimings(docs: DataFrame,
+      threshold: Double): Seq[(String, Double, Long)] =
+    IterProbe.stageTimings(clusterAssignments(docs, threshold))
 
   def dedupedCorpus(docs: DataFrame, threshold: Double): DataFrame =
     docs.join(clusterAssignments(docs, threshold)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.GraftQuery
+import graft.IterProbe.stage
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -42,19 +43,13 @@ import graft.sources.Tables
   * driver re-canonicalizes the whole tree on each of epoch-mix's three
   * self-references (measured 13.3 s → 2.2 s on the mix stage alone at
   * sf0.001 — pure driver-side plan overhead, not execution).
+  *
+  * Every stage boundary is an [[graft.IterProbe.stage]] tap. The chains
+  * checkpoint eagerly, so their final explain shows only the
+  * post-checkpoint frame; the per-stage plans (PlanDump) and per-stage
+  * rows and wall time (ScaleProbe `stages`) come from these taps.
   */
 object CurationChain {
-
-  /** A stage boundary: hands the frame to [[graft.IterProbe]] as
-    * `stage_<name>` and returns it unchanged. The chains checkpoint
-    * eagerly, so their final explain shows only the post-checkpoint frame;
-    * the per-stage plans (PlanDump) and per-stage rows and wall time
-    * (ScaleProbe `stages`) come from these taps. With no probe set the
-    * chain is the declared q93 family plan. */
-  private def stage(name: String, df: DataFrame): DataFrame = {
-    graft.IterProbe.tap(s"stage_$name", 0, df)
-    df
-  }
 
   /** `spanK > 0` inserts the q95 exact substring-dedup stage (Lee et al.
     * 2021 run span dedup over the FULL corpus — Dedup.substringDedup's

@@ -503,28 +503,18 @@ object DataPrep {
              CAST(sq AS DOUBLE) / CAST((SELECT SUM(sq) FROM sq) AS DOUBLE) AS weight
       FROM sq ORDER BY source"""))
 
-  /** Materialize [[mixWeights]] into an actual epoch sample: per-document
-    * repetition counts such that each group contributes
-    * floor(weight × targetDocs) rows to the epoch — the step that turns
-    * sampling WEIGHTS into the training mix a data loader reads.
-    *
-    * Deterministic and rerun-stable, no RNG: within each group every doc
-    * gets the same base count (quota / n_docs); the remainder goes to the
-    * quota-mod-n docs that rank first by md5(doc_id) — the same
-    * hash-ordering trick as q61's sampling, so re-running over a
-    * repartitioned corpus reproduces the epoch bit-for-bit. Groups with
-    * quota < n_docs downsample (some docs get 0 copies); groups with
-    * quota > n_docs upsample (all docs ≥ base copies) — both directions
-    * handled by the same arithmetic.
-    *
-    * Output: (idCol, groupCol, n_copies). Sum(n_copies) per group ==
-    * floor(weight × targetDocs) exactly. Shape at 100 TB: the quota
-    * table is one row per group (broadcast); the remainder ranking is the
-    * two-level [[md5BucketRank]] — parallel within (group, md5-prefix
-    * bucket), offsets broadcast — NOT a per-group window, which would
-    * sort a billion-document source in one task. The corpus text is read
-    * only by the token-count aggregation inside mixWeights.
+  /** md5-hex-prefix bucket id as a LONG column, shared by [[md5BucketRank]]
+    * and Curation's hot-bucket sub-chaining. Long, not int: 8 hex digits
+    * reach 0xFFFFFFFF, which overflows Int and (non-ANSI) casts to NULL —
+    * downstream that is silent row loss (an equi-join drops null keys) or
+    * a collapsed single window partition (ADVICE r7). 15 hex digits is the
+    * last width that cannot overflow a signed long.
     */
+  private[graft] def hexPrefixBucket(hexCol: Column, hexChars: Int): Column = {
+    require(hexChars >= 1 && hexChars <= 15, s"hexChars in [1,15], got $hexChars")
+    conv(substring(hexCol, 1, hexChars), 16, 10).cast("long")
+  }
+
   /** Distributed deterministic rank: row_number over
     * `PARTITION BY groupCol ORDER BY md5(idCol), idCol`, computed WITHOUT
     * a per-group single-task sort. A plain Spark window partitioned by
@@ -558,18 +548,6 @@ object DataPrep {
     * partition (code-review r11 — the plain equi-join silently deleted
     * them).
     */
-  /** md5-hex-prefix bucket id as a LONG column, shared by [[md5BucketRank]]
-    * and Curation's hot-bucket sub-chaining. Long, not int: 8 hex digits
-    * reach 0xFFFFFFFF, which overflows Int and (non-ANSI) casts to NULL —
-    * downstream that is silent row loss (an equi-join drops null keys) or
-    * a collapsed single window partition (ADVICE r7). 15 hex digits is the
-    * last width that cannot overflow a signed long.
-    */
-  private[graft] def hexPrefixBucket(hexCol: Column, hexChars: Int): Column = {
-    require(hexChars >= 1 && hexChars <= 15, s"hexChars in [1,15], got $hexChars")
-    conv(substring(hexCol, 1, hexChars), 16, 10).cast("long")
-  }
-
   def md5BucketRank(df: DataFrame, groupCol: String, idCol: String,
       rankAs: String, hexChars: Int = 3): DataFrame = {
     require(hexChars >= 1 && hexChars <= 8, s"hexChars in [1,8], got $hexChars")
@@ -709,24 +687,6 @@ object DataPrep {
       WHERE cw // 2000 > (cw - n_chars) // 2000
       ORDER BY doc_id"""))
 
-  /** PPS admission of a NEW batch of rows laid AFTER a frozen per-group
-    * consumed-weight line — the incremental/streaming form of
-    * [[weightedSystematicSample]] (the q111/q81 stored-artifact
-    * discipline applied to sampling). `baseTotals` maps group → weight
-    * units already laid down by every previously admitted-from batch
-    * (missing groups start at 0); the batch's rows are placed along the
-    * line in (md5(id), id) order starting at that base, and a row is
-    * kept iff its span crosses a multiple of `step` — so chaining
-    * batches b1..bk IS one systematic pass over the concatenated line
-    * (law pinned in DataPrepSpec: chained ≡ one-shot over (batch, md5,
-    * id) order), with each row still kept w.p. ≈ weight/step and no RNG.
-    *
-    * `baseTotals` is a driver-side map because groups here are SOURCES
-    * (bounded, like [[mixWeights]]'s groups): it enters the plan as a
-    * broadcast literal, not a join. Scale: one [[md5BucketCumsum]] per
-    * batch + a stateless predicate — nothing global, nothing sorted.
-    * Advance the line with [[ppsGroupTotals]] after each batch.
-    */
   /** Frozen-base lookup shared by the map-form admit functions
     * ([[ppsAdmitBatch]], [[tokenBudgetAdmitBatch]],
     * [[stratifiedAdmitBatch]]). Base maps use the SAME collision-free
@@ -759,6 +719,24 @@ object DataPrep {
       element_at(typedLit(baseTotals), domainKey(col(groupCol))), lit(0L))
   }
 
+  /** PPS admission of a NEW batch of rows laid AFTER a frozen per-group
+    * consumed-weight line — the incremental/streaming form of
+    * [[weightedSystematicSample]] (the q111/q81 stored-artifact
+    * discipline applied to sampling). `baseTotals` maps group → weight
+    * units already laid down by every previously admitted-from batch
+    * (missing groups start at 0); the batch's rows are placed along the
+    * line in (md5(id), id) order starting at that base, and a row is
+    * kept iff its span crosses a multiple of `step` — so chaining
+    * batches b1..bk IS one systematic pass over the concatenated line
+    * (law pinned in DataPrepSpec: chained ≡ one-shot over (batch, md5,
+    * id) order), with each row still kept w.p. ≈ weight/step and no RNG.
+    *
+    * `baseTotals` is a driver-side map because groups here are SOURCES
+    * (bounded, like [[mixWeights]]'s groups): it enters the plan as a
+    * broadcast literal, not a join. Scale: one [[md5BucketCumsum]] per
+    * batch + a stateless predicate — nothing global, nothing sorted.
+    * Advance the line with [[ppsGroupTotals]] after each batch.
+    */
   def ppsAdmitBatch(batch: DataFrame, baseTotals: Map[String, Long],
       groupCol: String, idCol: String, weightCol: String, step: Long): DataFrame = {
     require(step > 0, s"step must be positive, got $step")
@@ -784,6 +762,28 @@ object DataPrep {
       .map(r => r.getString(0) -> r.getLong(1))
       .toMap
 
+  /** Materialize [[mixWeights]] into an actual epoch sample: per-document
+    * repetition counts such that each group contributes
+    * floor(weight × targetDocs) rows to the epoch — the step that turns
+    * sampling WEIGHTS into the training mix a data loader reads.
+    *
+    * Deterministic and rerun-stable, no RNG: within each group every doc
+    * gets the same base count (quota / n_docs); the remainder goes to the
+    * quota-mod-n docs that rank first by md5(doc_id) — the same
+    * hash-ordering trick as q61's sampling, so re-running over a
+    * repartitioned corpus reproduces the epoch bit-for-bit. Groups with
+    * quota < n_docs downsample (some docs get 0 copies); groups with
+    * quota > n_docs upsample (all docs ≥ base copies) — both directions
+    * handled by the same arithmetic.
+    *
+    * Output: (idCol, groupCol, n_copies). Sum(n_copies) per group ==
+    * floor(weight × targetDocs) exactly. Shape at 100 TB: the quota
+    * table is one row per group (broadcast); the remainder ranking is the
+    * two-level [[md5BucketRank]] — parallel within (group, md5-prefix
+    * bucket), offsets broadcast — NOT a per-group window, which would
+    * sort a billion-document source in one task. The corpus text is read
+    * only by the token-count aggregation inside mixWeights.
+    */
   def epochMix(docs: DataFrame, idCol: String, textCol: String,
       groupCol: String, targetDocs: Long): DataFrame = {
     require(targetDocs > 0, s"targetDocs must be positive, got $targetDocs")

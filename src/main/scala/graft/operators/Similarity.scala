@@ -1078,7 +1078,6 @@ object Similarity {
     * encode+ADC read path, not m repeated trainings. */
   private val pqBooksCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
-  private[graft] def clearPqBooksCache(): Unit = pqBooksCache.clear()
 
   def pqFit(embeddings: DataFrame, m: Int, dim: Int, ksub: Int,
       iters: Int, cacheKey: Option[String] = None): Array[Array[Array[Double]]] = {

@@ -95,25 +95,31 @@ class CurationChainSpec extends SparkSpec {
     * returns the taps in firing order with the query's rows. */
   private def probed(query: String, force: Boolean): (Seq[(String, Long)], Seq[Row]) = {
     val taps = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    graft.IterProbe.probe = Some { (name, _, df) =>
+    val rows = graft.IterProbe.during { (name, _, df) =>
       if (name.startsWith("stage_"))
         taps += (name.stripPrefix("stage_") -> (if (force) df.count() else -1L))
+    } {
+      graft.SparkEntry.queries(query)(spark, sf001).collect().toSeq
     }
-    try {
-      val rows = graft.SparkEntry.queries(query)(spark, sf001).collect().toSeq
-      (taps.toSeq, rows)
-    } finally graft.IterProbe.probe = None
+    // the probe is gone with the call: a later tap reaches nobody
+    val before = taps.size
+    graft.IterProbe.stage("after_probe", spark.emptyDataFrame)
+    assert(taps.size == before, s"a tap after the probed call was recorded: $taps")
+    (taps.toSeq, rows)
   }
 
-  private val chainStages = Seq("quality_gate", "decontaminate", "near_dedup",
-    "paragraph_dedup", "span_dedup", "epoch_mix")
+  /** q51's stages: the chain's near dedup calls `clusterAssignments`. */
+  private val q51Stages = Seq("shingle_persist", "exact_collapse", "canonical_ids",
+    "minhash_candidates", "jaccard_confirm", "connected_components", "expand_labels")
+
+  private val chainStages = Seq("quality_gate", "decontaminate") ++ q51Stages ++
+    Seq("near_dedup", "paragraph_dedup", "span_dedup", "epoch_mix")
 
   test("stage hook: q93d taps its stages in chain order, forced frames leave the rows unchanged") {
     val (taps, rows) = probed("q93d_crawl_chain_http", force = true)
     assert(taps.map(_._1) == Seq("warc_parse", "http_gate", "main_nfc",
       "host_gate", "path_gate", "langid_gate") ++ chainStages, taps.toString)
     assert(taps.forall(_._2 > 0), s"an empty stage: $taps")
-    assert(graft.IterProbe.probe.isEmpty)
     val plain = graft.SparkEntry.queries("q93d_crawl_chain_http")(spark, sf001)
       .collect().toSeq
     assert(rows.nonEmpty && rows == plain)

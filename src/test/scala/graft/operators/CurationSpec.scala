@@ -9,10 +9,34 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.SparkSpec
+import graft.{IterProbe, SparkSpec}
 import graft.functions.{MinHashBands, WordShingles}
 
 class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  /** The names of the Dataset actions `body` runs, in order. */
+  private def actionsOf(body: => Unit): Seq[String] = {
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        actions.add(funcName)
+    }
+    // listener events arrive on the asynchronous listener bus; its
+    // waitUntilEmpty is spark-private in Scala but public in bytecode
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    drain()
+    spark.listenerManager.register(listener)
+    try { body; drain() }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    actions.asScala.toSeq
+  }
 
   private def corpus() = {
     import spark.implicits._
@@ -225,12 +249,14 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val nodes = (1L to 6L).toDF("doc_id")
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("da", "db")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L)
-    // lastDistributedCCRounds is written by the distributed path only
+    // only the distributed path counts (each round counts its changed labels)
     def run(limit: Long): (Map[Long, Long], Boolean) = {
-      Curation.lastDistributedCCRounds = -1
-      val labels = Curation.connectedComponents(nodes, edges, driverEdgeLimit = limit)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      (labels, Curation.lastDistributedCCRounds > 0)
+      var labels = Map.empty[Long, Long]
+      val actions = actionsOf {
+        labels = Curation.connectedComponents(nodes, edges, driverEdgeLimit = limit)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      (labels, actions.contains("count"))
     }
     assert(run(3L) == (expected, false), "edge count == driverEdgeLimit must stay local")
     assert(run(2L) == (expected, true), "one edge over driverEdgeLimit must go distributed")
@@ -243,29 +269,9 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     import spark.implicits._
     val nodes = (1L to 6L).toDF("doc_id")
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("da", "db")
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        actions.add(funcName)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        actions.add(funcName)
-    }
-    // listener events arrive on the asynchronous listener bus; its
-    // waitUntilEmpty is spark-private in Scala but public in bytecode
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    drain()
-    spark.listenerManager.register(listener)
-    val cc = try {
-      val out = Curation.connectedComponents(nodes, edges)
-      drain()
-      out
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    assert(actions.asScala.toSeq == Seq("collect"), s"actions over the edges: $actions")
+    var cc: DataFrame = null
+    val actions = actionsOf { cc = Curation.connectedComponents(nodes, edges) }
+    assert(actions == Seq("collect"), s"actions over the edges: $actions")
     assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L))
   }
@@ -276,13 +282,12 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // (AQE) executed form
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     val plans = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
-    Curation.stageGraph(docs, 0.5, Curation.DefaultHotBucketLimit, 1000000L, 3,
-      (name, f) => {
-        val d: DataFrame = f()
-        d.collect()
-        plans += name -> d.queryExecution.executedPlan
-        d
-      }).collect()
+    IterProbe.during { (name, _, d) =>
+      d.collect()
+      plans += name.stripPrefix("stage_") -> d.queryExecution.executedPlan
+    } {
+      Curation.clusterAssignments(docs, 0.5).collect()
+    }
     def hashes(p: SparkPlan): Boolean = p.expressions.exists(_.exists {
       case _: WordShingles | _: MinHashBands => true
       case _ => false
@@ -322,5 +327,35 @@ class CurationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val verify = plans.find(_._1 == "jaccard_confirm").get._2
     val verifyTables = tableScans(verify).map(_.relation.cacheBuilder)
     assert(verifyTables.nonEmpty && verifyTables.forall(_ eq table), s"$verify")
+  }
+
+  /** Entries in the session's CacheManager; `numCachedEntries` is
+    * spark-private in Scala but public in bytecode. */
+  private def cachedEntries(): Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
+
+  test("stageTimings: q51's seven stages in order over the sf0.001 documents, the cache left as found") {
+    val docs = graft.sources.Tables.documents(spark, sf001)
+    val before = cachedEntries()
+    val stages = Curation.stageTimings(docs, threshold = 0.5)
+    assert(stages.map(_._1) == Seq("shingle_persist", "exact_collapse", "canonical_ids",
+      "minhash_candidates", "jaccard_confirm", "connected_components", "expand_labels"))
+    val rows = stages.map(s => s._1 -> s._3).toMap
+    assert(rows("minhash_candidates") > 0 && rows("jaccard_confirm") > 0, s"$stages")
+    assert(stages.forall(_._2 >= 0.0), s"$stages")
+    assert(cachedEntries() == before, "stageTimings left frames in the cache manager")
+  }
+
+  test("clusterAssignments under stageTimings yields the same labels as a plain call") {
+    val docs = graft.sources.Tables.documents(spark, sf001)
+    def labels(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    var timed = Map.empty[Long, Long]
+    IterProbe.stageTimings { timed = labels(Curation.clusterAssignments(docs, threshold = 0.5)) }
+    val plain = labels(Curation.clusterAssignments(docs, threshold = 0.5))
+    assert(timed.nonEmpty && timed == plain)
+    assert(plain.exists { case (d, r) => d != r }, "the sf0.001 corpus plants near-duplicates")
   }
 }
