@@ -53,6 +53,24 @@ object Bench {
       }
     }.toMap
 
+  /** The core count a baseline was measured at: the first `cpus=N` on
+    * one of its `#` header lines. */
+  def baselineCpus(lines: Seq[String]): Option[Int] =
+    lines.iterator.map(_.trim).filter(_.startsWith("#"))
+      .flatMap("""\bcpus=(\d+)""".r.findFirstMatchIn(_)).map(_.group(1).toInt).nextOption()
+
+  /** The baseline's medians if it was measured at `cpus` cores, else
+    * none (said on stderr): a pin from another core count would mark
+    * healthy queries suspect. */
+  def baselineAt(lines: Seq[String], cpus: Int): Map[String, Double] =
+    baselineCpus(lines) match {
+      case Some(`cpus`) => parseBaseline(lines.iterator)
+      case other =>
+        System.err.println(s"[bench] baseline ${other.fold("names no core count")(c => s"is for cpus=$c")}; " +
+          s"this run has cpus=$cpus: no suspect analysis")
+        Map.empty
+    }
+
   def median(times: Seq[Double]): Double = times.sorted.apply(times.length / 2)
 
   /** Inflated relative to the quiet baseline? Sub-threshold absolute
@@ -107,17 +125,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // declarative strategy/rule/function injection comes with the factory
-    // session — same plan for q77 whether the session comes from here,
-    // Verify, or a user builder (ensureRegistered stays as the fallback
-    // for plain sessions)
+    // GraftExtensions (the top-k strategy and rule, the SQL functions)
+    // comes with the factory session, so q77 plans as under Verify
     val spark = GraftSession.local("graft-bench")
     val cpus = GraftSession.cpus
 
     val loadBefore = loadavg()
 
-    // quiet-machine reference medians; absent file → no suspect analysis
-    // (first run on a new machine), present file → every entry checked.
+    // quiet-machine reference medians; absent file, or one measured at
+    // another core count → no suspect analysis (first run on a new
+    // machine), matching file → every entry checked.
     // cwd-relative, so a checkout anywhere reads its own baseline
     val baseline: Map[String, Double] =
       (sys.env.get("SPARK_GRAFT_BENCH_BASELINE").toSeq :+ "BENCH_BASELINE.txt")
@@ -129,7 +146,7 @@ object Bench {
           // byte in a baseline COMMENT throws MalformedInputException and
           // kills the whole bench instead of skipping a line (r11)
           val src = scala.io.Source.fromFile(f)(scala.io.Codec.UTF8)
-          try parseBaseline(src.getLines()) finally src.close()
+          try baselineAt(src.getLines().toSeq, cpus) finally src.close()
       }
 
     // warm-up: touch every table + JIT the scan/agg and the lambda-heavy

@@ -157,6 +157,14 @@ object CurationChain {
       col("source"), col("target_uri"),
       graft.functions.NfcNormalize(
         Extraction.htmlText(col("body"))).as("text")))
+    curationChain(ingestGates(docs, extracted), targetDocs, spanK)
+  }
+
+  /** The crawl chains' gates from extracted text (doc_id, source,
+    * target_uri, text) to ingested docs (doc_id, source, text, lang):
+    * host gate → path gate → language-ID gate, each policy derived from
+    * `docs`. */
+  private def ingestGates(docs: DataFrame, extracted: DataFrame): DataFrame = {
     // stored host policy: block the lexicographically-first source's
     // host (1 row, data-derived, broadcast)
     val blockList = docs.agg(min(col("source")).as("s"))
@@ -169,7 +177,7 @@ object CurationChain {
       .select(concat(lit("v:"), col("source"), lit(".example.com"))
           .as("host_key"),
         lit("/ads").as("path_prefix"), lit("ads").as("rule"))
-    // checkpoint HERE, not only at `ing`: the langid join below reads
+    // checkpoint HERE, not only after the langid gate: its join reads
     // pathGated on BOTH sides (docs + scores), and without the cut the
     // whole ingest prefix (WARC regex scan, extract, NFC, two gates)
     // executes twice per action (code-review r15)
@@ -181,7 +189,7 @@ object CurationChain {
     // predicted-English; prediction becomes the crawl doc's lang
     val model = LangId.langIdModel(
       docs.filter(col("doc_id") % 2 === 0), "text", "lang")
-    val ing = stage("langid_gate", pathGated
+    stage("langid_gate", pathGated
       .join(LangId.langIdScore(pathGated, "doc_id", "text", model)
           .filter(col("pred_lang") === "en")
           .select(col("doc_id"), col("pred_lang").as("lang")),
@@ -191,7 +199,6 @@ object CurationChain {
       // there); also cuts the ingest lineage out of the chain's many
       // self-references
       .localCheckpoint())
-    curationChain(ing, targetDocs, spanK)
   }
 
   /** q93d fixture record: the SHARED [[Http.withCrawlHttpRecord]]
@@ -236,29 +243,7 @@ object CurationChain {
       .select(col("doc_id"), col("source"), col("target_uri"),
         graft.functions.NfcNormalize(
           MainContent.mainTextNative(col("payload"), 30, 50)).as("text")))
-    val blockList = docs.agg(min(col("source")).as("s"))
-      .select(concat(lit("v:"), col("s"), lit(".example.com"))
-        .as("host_key"), lit("blocked_source").as("rule"))
-    val hostGated = stage("host_gate",
-      UrlOps.hostGate(extracted, "target_uri", blockList))
-    val pathRules = docs.select(col("source")).distinct()
-      .select(concat(lit("v:"), col("source"), lit(".example.com"))
-          .as("host_key"),
-        lit("/ads").as("path_prefix"), lit("ads").as("rule"))
-    val pathGated = stage("path_gate",
-      UrlOps.pathPrefixGate(hostGated, "target_uri", pathRules)
-        .select(col("doc_id"), col("source"), col("text"))
-        .localCheckpoint())
-    val model = LangId.langIdModel(
-      docs.filter(col("doc_id") % 2 === 0), "text", "lang")
-    val ing = stage("langid_gate", pathGated
-      .join(LangId.langIdScore(pathGated, "doc_id", "text", model)
-          .filter(col("pred_lang") === "en")
-          .select(col("doc_id"), col("pred_lang").as("lang")),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("source"), col("text"), col("lang"))
-      .localCheckpoint())
-    curationChain(ing, targetDocs, spanK)
+    curationChain(ingestGates(docs, extracted), targetDocs, spanK)
   }
 
   // q93d ingest replay: HTTP survivors by construction arithmetic

@@ -12,9 +12,9 @@ import graft.sources.Tables
   *
   *   - HTML → text extraction (the trafilatura/jusText job reduced to
   *     its deterministic core): drop script/style subtrees, strip tags,
-  *     decode the bounded entity set, collapse whitespace. Everything
-  *     is a chain of codegen'd `regexp_replace`/`replace` columns —
-  *     zero UDFs, one stateless scan projection, trivially linear at
+  *     decode the bounded entity set, collapse whitespace. It is one
+  *     native codegen'd expression ([[graft.functions.HtmlTextExtract]])
+  *     — zero UDFs, one stateless scan projection, trivially linear at
   *     100 TB (the wordcount-scan class with no shuffle at all).
   *   - Fixed-window document chunking with overlap (the RAG/packing
   *     prep step): deterministic char-window starts via
@@ -30,91 +30,21 @@ import graft.sources.Tables
   */
 object Extraction {
 
-  /** Regex inventory, shared verbatim (same RE2/Java-compatible syntax)
-    * by the Spark columns and the DuckDB oracles:
-    *   - script/style subtrees: one per-tag alternative each — lazy body
-    *     match, dotall so blocks spanning newlines die whole.
-    *     CASE-INSENSITIVE because real crawls carry `<SCRIPT>`. PER-TAG,
-    *     not `<(script|style)…</(script|style)>`: the grouped form let a
-    *     `<script>` be closed by `</style>` (ADVICE r14), truncating the
-    *     kill early and leaking script body into "visible text". A
-    *     backreference (`</\1>`) would be the compact fix but DuckDB's
-    *     RE2 has no backreferences, so the engine-portable form is the
-    *     two-alternative union. r18 (VERDICT r17 next #2): each
-    *     alternative gained an `|.*$` arm — an UNCLOSED `<script>` in
-    *     a truncated crawl doc now kills to END OF INPUT in BOTH
-    *     engines, structurally closing the r14 leak where the script
-    *     body survived tag-strip as visible text.
-    *   - tags: `<[^>]*>` AFTER subtree removal.
-    *   - whitespace: explicit `[ \t\n\r]+` (Java `\s` and RE2 `\s`
-    *     disagree on VT — the explicit class is engine-portable).
-    */
-  private val ScriptRe =
-    "(?is)<script\\b[^>]*>(.*?</script>|.*$)|<style\\b[^>]*>(.*?</style>|.*$)"
-
-  /** Numeric-character-reference pattern: `&#NNN;` (≤ 7 digits) and
-    * `&#xHH;` (≤ 6 hex digits) — long enough for any Unicode scalar,
-    * bounded so a pathological digit run cannot blow up the marker. */
-  private val NumEntRe = "&#(x[0-9a-fA-F]{1,6}|[0-9]{1,7});"
-
-  /** Decode numeric character references (`&#65;` → `A`, `&#x42;` →
-    * `B`) for codepoints in PRINTABLE ASCII [32, 126] — the
-    * engine-portable bound (VERDICT r14 next #3): Spark's `chr` is
-    * ASCII-mod-256 while DuckDB's is full Unicode, so the two agree
-    * exactly on [32, 126] and nowhere above; out-of-range references
-    * (`&#8364;`) pass through UNDECODED, visibly, rather than decode
-    * differently per engine. Zero UDFs: mark every reference with C0
-    * sentinels (`code`), split on the open sentinel, decode
-    * each segment's code prefix inside a codegen'd `transform`, and
-    * stitch with `array_join` — one stateless projection.
-    *
-    * KNOWN LIMIT (both engines identical): input text that itself
-    * carries the C0 sentinel bytes can confuse the marking — a natural
-    * `` is restored verbatim (guarded), a natural ``
-    * inside a marked segment is pathological and may garble that
-    * segment. Real crawl pipelines strip C0 controls upstream
-    * (they are invalid in HTML anyway). */
-  def decodeNumericEntities(c: Column): Column =
-    decodeNumeric(c, shieldAmp = false)
-
-  /** Implementation behind [[decodeNumericEntities]]. With
-    * `shieldAmp = true` a decoded AMPERSAND (`&#38;`) is emitted as a
-    * U+0003 sentinel instead of `&`, so [[htmlText]]'s later
-    * `&amp;`-last replace cannot RE-DECODE it (`&#38;amp;lt;` must
-    * yield the literal `&amp;lt;`, exactly like a single-pass HTML
-    * tokenizer — code-review r15); htmlText swaps the sentinel back
-    * after the amp replace. The standalone public form decodes `&`
-    * directly. */
-  private[operators] def decodeNumeric(c: Column,
-      shieldAmp: Boolean): Column = {
-    val marked = regexp_replace(c, NumEntRe, "$1")
-    val parts = split(marked, "", -1)
-    val decodedTail = transform(slice(parts, lit(2), size(parts)), x => {
-      val code = substring_index(x, "", 1)
-      val rest = x.substr(length(code) + lit(2), length(x))
-      // branch-guarded casts (never throw under ANSI): the rlike gates
-      // guarantee the cast input is numeric before it runs
-      val cp = when(code.rlike("^x[0-9a-fA-F]{1,6}$"),
-          conv(x.substr(lit(2), length(code) - 1), 16, 10).cast("long"))
-        .when(code.rlike("^[0-9]{1,7}$"), code.cast("long"))
-      val ch =
-        if (shieldAmp) when(cp === 38, lit(""))
-          .otherwise(call_function("chr", cp))
-        else call_function("chr", cp)
-      when(instr(x, "") === 0, concat(lit(""), x))
-        .otherwise(concat(
-          when(cp.isNotNull && cp.between(32, 126), ch)
-            .otherwise(concat(lit("&#"), code, lit(";"))),
-          rest))
-    })
-    concat(element_at(parts, 1), array_join(decodedTail, ""))
-  }
-
   /** DuckDB replay of [[htmlText]] as a reusable CTE chain (single
     * source of truth for the q171 oracle AND every downstream composed
     * oracle, e.g. the q93c crawl chain): reads `htmlCol` from CTE
     * `src`, carries `keep` columns through, and defines CTE `out`
-    * holding them plus the extracted text as `__text`. */
+    * holding them plus the extracted text as `__text`.
+    *
+    * The script/style kill is one alternative PER TAG, not
+    * `<(script|style)…</(script|style)>`: the grouped form let a
+    * `<script>` be closed by `</style>` (ADVICE r14), truncating the
+    * kill early and leaking script body into "visible text". A
+    * backreference (`</\1>`) would be the compact fix, but DuckDB's RE2
+    * has no backreferences. Each alternative's `|.*$` arm (r18) makes an
+    * UNCLOSED `<script>` in a truncated crawl doc kill to end of input,
+    * as [[graft.functions.HtmlTextExtract]] does. The whitespace class is
+    * the explicit `[ \t\n\r]+`: Java `\s` and RE2 `\s` disagree on VT. */
   private[operators] def htmlTextSql(src: String, htmlCol: String,
       out: String, keep: Seq[String]): String = {
     val kk = keep.map(_ + ", ").mkString
@@ -149,20 +79,15 @@ object Extraction {
                FROM ${out}_e3)"""
   }
 
-  /** Extracted visible text of an HTML column. Entity decode covers the
-    * bounded named set every extractor handles plus numeric character
-    * references in printable ASCII ([[decodeNumericEntities]]);
-    * `&amp;` LAST so `&amp;lt;` decodes to the literal `&lt;` and
-    * `&amp;#65;` to the literal `&#65;`, not to `<`/`A` — the
+  /** Extracted visible text of an HTML column, as the native
+    * [[graft.functions.HtmlTextExtract]]: script/style subtrees killed
+    * (an unclosed one to end of input), tags stripped, the bounded
+    * named-entity set and numeric character references in printable
+    * ASCII decoded, `&amp;` LAST so `&amp;lt;` decodes to the literal
+    * `&lt;` and `&amp;#65;` to the literal `&#65;`, not to `<`/`A` — the
     * double-escape rule, single-pass like a real HTML tokenizer.
-    *
-    * r18: a native codegen expression ([[graft.functions.HtmlTextExtract]],
-    * the DechunkBody pattern) replacing the regex cascade that owned
-    * the per-byte ingest CPU budget at 6.4 MB/s (VERDICT r17 next #2)
-    * — stage-exact except ONE deliberate law change made in both
-    * engines together: unclosed script/style subtrees kill to end of
-    * input (see [[ScriptRe]]). [[htmlTextSql]] replays the same staged
-    * semantics in DuckDB and remains the oracle. */
+    * [[htmlTextSql]] replays the same staged semantics in DuckDB and
+    * remains the oracle. */
   def htmlText(html: Column): Column =
     graft.functions.HtmlTextExtract(html)
 
@@ -203,7 +128,7 @@ object Extraction {
   }
 
   /** Invisible/control-character class (round 15 — closes the C0
-    * caveat [[decodeNumericEntities]] documents): C0 controls except
+    * sentinel caveat of [[htmlText]]'s numeric-reference decode): C0 controls except
     * tab/LF/CR, DEL, zero-width space/non-joiner/joiner, word joiner,
     * BOM-as-ZWNBSP, and soft hyphen. Java and RE2 spell the class
     * differently (`\uXXXX` vs `\x{XXXX}`) — two dialect strings, ONE
@@ -286,8 +211,8 @@ object Extraction {
     * is TERMINAL PUNCTUATION ([.!?]) followed by whitespace. RE2 has no
     * lookbehind, so the engine-portable form marks boundaries with a
     * backreference replace (`([.!?])[ \t\n\r]+` -> `$1` + U+0001) and
-    * splits on the sentinel — the [[decodeNumericEntities]] sentinel
-    * discipline, with the same documented natural-sentinel caveat
+    * splits on the sentinel — the sentinel discipline of [[htmlText]]'s
+    * numeric-reference decode, with the same natural-sentinel caveat
     * ([[stripInvisible]] upstream makes it moot). Abbreviation
     * handling ("Dr. Smith") is a documented NON-goal: both engines
     * split identically, and the declared semantics stay a pure

@@ -619,15 +619,10 @@ object Similarity {
 
   /** SemDeDup over an embeddings table (vec_id, embedding): survivors
     * after dropping every vector with a same-IVF-cell neighbor of
-    * smaller id above `thr` cosine. Output: (vec_id, cell).
-    */
-  def semanticDedup(embeddings: DataFrame, thr: Double, nlist: Int,
-      cacheKey: Option[String] = None): DataFrame =
-    semanticDedupWithOracle(embeddings, thr, nlist, cacheKey)._1
-
-  /** [[semanticDedup]] plus the invocation's own generated DuckDB oracle
-    * SQL (fitted-centroid literals + threshold baked in). The SQL is
-    * RETURNED rather than stashed in shared state, so concurrent or
+    * smaller id above `thr` cosine, as (vec_id, cell), plus the
+    * invocation's own generated DuckDB oracle SQL (fitted-centroid
+    * literals + threshold baked in). The SQL is RETURNED rather than
+    * stashed in shared state, so concurrent or
     * differently-parameterized invocations can't clobber each other's
     * oracle (ADVICE r5).
     */
@@ -653,7 +648,7 @@ object Similarity {
     (s, dir) => {
       val (df, sql) = semanticDedupWithOracle(Tables.embeddings(s, dir),
         thr = 0.4, nlist = 16, cacheKey = Some(dir))
-      // written only by THIS lambda — unrelated semanticDedup invocations
+      // written only by THIS lambda — unrelated SemDeDup invocations
       // no longer share the slot
       semanticDedupOracleSql = Some(sql)
       df.orderBy(col("vec_id"))

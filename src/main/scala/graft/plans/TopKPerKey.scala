@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort, UnaryNode}
@@ -17,9 +17,9 @@ import graft.sources.Tables
 
 /** Top-k-per-key as a WHOLE-OPERATOR Catalyst extension — the (c)-level
   * custom-operator path (logical node + planner strategy + physical
-  * operator + optimizer rule, registered through SparkSessionExtensions
-  * or `spark.experimental`), demonstrated on the one operator where the
-  * built-in plan is structurally wasteful at scale.
+  * operator + optimizer rule, registered by [[graft.GraftExtensions]]),
+  * demonstrated on the one operator where the built-in plan is
+  * structurally wasteful at scale.
   *
   * The window form (q09: row_number ≤ k) SORTS every partition and keeps
   * whole groups in memory; the typed-Aggregator form (q45b) fixes the
@@ -37,21 +37,6 @@ import graft.sources.Tables
   * whole-operator semantics.
   */
 object TopKPerKey {
-
-  private val strategy = new TopKPerKeyStrategy
-
-  /** Idempotent registration of the planner strategy + optimizer rule on
-    * a session built WITHOUT extensions (`spark.experimental` is the
-    * public per-session surface for exactly this). Sessions created with
-    * `.withExtensions(new GraftExtensions)` get both injected at build
-    * time instead; registering twice is harmless but avoided anyway.
-    */
-  def ensureRegistered(s: SparkSession): Unit = synchronized {
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[TopKPerKeyStrategy]))
-      s.experimental.extraStrategies = s.experimental.extraStrategies :+ strategy
-    if (!s.experimental.extraOptimizations.contains(PushFilterThroughTopK))
-      s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ PushFilterThroughTopK
-  }
 
   /** The k first rows of each key group under `order` (give `.desc`
     * columns for largest-first). Empty `keys` = global top-k. Output
@@ -72,7 +57,6 @@ object TopKPerKey {
     require(k > 0, s"k must be positive, got $k")
     require(order.nonEmpty, "top-k needs at least one ordering column")
     val s = df.sparkSession
-    ensureRegistered(s)
     val keyExprs: Seq[Expression] =
       if (keys.isEmpty) Nil
       else df.select(keys: _*).queryExecution.analyzed match {

@@ -336,7 +336,6 @@ object Streams {
     }
 
     def validatorState: DataFrame = validators
-    def backoffState: DataFrame = backoff
     /** Close the epoch: `(url, class)` over the loop's observations. */
     def close(): DataFrame = Snapshots.snapshotClose(snap)
   }

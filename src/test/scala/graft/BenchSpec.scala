@@ -20,6 +20,19 @@ class BenchSpec extends AnyFunSuite {
     assert(b === Map("q01_agg_pricing" -> 0.1234, "q37_dedup_minhash" -> 0.49))
   }
 
+  test("baselineAt: the committed baseline is for cpus=32; another core count gets none") {
+    val src = scala.io.Source.fromFile("BENCH_BASELINE.txt")(scala.io.Codec.UTF8)
+    val lines = try src.getLines().toSeq finally src.close()
+    assert(Bench.baselineCpus(lines) === Some(32))
+    assert(Bench.baselineAt(lines, 32) === Bench.parseBaseline(lines.iterator))
+    assert(Bench.baselineAt(lines, 32).nonEmpty)
+    assert(Bench.baselineAt(lines, 4) === Map.empty)
+    // the header Bench writes, and a baseline that names no core count
+    val written = Seq("# quiet-machine bench medians, reps=3, cpus=8, sf=/d", "q01 0.5")
+    assert(Bench.baselineAt(written, 8) === Map("q01" -> 0.5))
+    assert(Bench.baselineAt(Seq("# medians", "q01 0.5"), 8) === Map.empty)
+  }
+
   test("exprRates: every ingest expression reports a positive MB/s row") {
     val rows = ThroughputBench.exprRates(graft.SparkSpec.session,
       "/root/testdata/sf0.001", mult = 1, reps = 1)

@@ -12,13 +12,14 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The engine's own session ([[GraftSession.builder]]: AQE, UTC,
+    * `GraftExtensions`, the sized codegen cache) with the core count and
+    * shuffle partitions pinned at 4, so plans and partition-dependent
+    * results do not vary with the host. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder("graft-test")
       .master("local[4]")
-      .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -58,8 +58,4 @@ class DotProductSpec extends SparkSpec {
       e.getCause != null && e.getCause.getMessage.contains("length mismatch"),
       s"got $e")
   }
-
-  // SQL registration of dot_product/squared_distance is asserted in
-  // GraftExtensionsSpec (needs the detach-session dance to apply
-  // extensions inside the shared test JVM)
 }

@@ -48,7 +48,4 @@ class NfcNormalizeSpec extends SparkSpec {
     // the simple plan string marks whole-stage-codegen'd nodes with "*(n)"
     assert(plan.contains("*(1) Project [nfc_normalize"), plan)
   }
-  // SQL-registration parity (`SELECT nfc_normalize(...)`) is covered in
-  // GraftExtensionsSpec alongside the other injected functions -- it
-  // needs a session built withExtensions, not the shared plain one.
 }

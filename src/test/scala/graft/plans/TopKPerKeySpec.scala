@@ -10,6 +10,23 @@ class TopKPerKeySpec extends SparkSpec {
   private def orders() = graft.sources.Tables.orders(spark, sf001)
     .select(col("o_custkey"), col("o_totalprice"), col("o_orderkey"))
 
+  test("GraftExtensions registers the strategy and its rule once; topK and q77 add none") {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    // (planner strategies, optimizer-batch slots): the rule is injected
+    // into both operator-optimization batches
+    def registered() = (
+      state.planner.strategies.count(_.isInstanceOf[TopKPerKeyStrategy]),
+      state.optimizer.batches.map(_.rules.count(_ == PushFilterThroughTopK)).sum)
+    val before = registered()
+    TopKPerKey.topK(orders(), Seq(col("o_custkey")), Seq(col("o_totalprice").desc), 1).collect()
+    val q77 = graft.SparkEntry.queries("q77_custom_topk_plan")(spark, sf001)
+    assert(q77.collect().nonEmpty)
+    assert(before == (1, 2) && registered() == before, s"before $before, after ${registered()}")
+    val plan = q77.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPerKeyExec [partial=true") &&
+      plan.contains("TopKPerKeyExec [partial=false"), plan)
+  }
+
   test("custom plan matches the window row_number form row-for-row") {
     val custom = TopKPerKey.topK(orders(), Seq(col("o_custkey")),
       Seq(col("o_totalprice").desc, col("o_orderkey")), 3)
