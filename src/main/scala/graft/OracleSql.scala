@@ -1,8 +1,14 @@
 package graft
 
-/** DuckDB-oracle SQL hygiene (the round-12 gate-killer lesson).
+/** The DuckDB spelling of the engine's primitives, and oracle SQL
+  * hygiene.
   *
-  * DuckDB 1.x inlines every *reference* to a plain (non-MATERIALIZED)
+  * Every oracle spells a primitive (tokenizer, shingles, md5-60 hash,
+  * yamr partition, JVM double literal) through the one helper below that
+  * mirrors the engine function, so an oracle can not drift from the
+  * engine one copy at a time.
+  *
+  * Hygiene (the round-12 gate-killer lesson): DuckDB 1.x inlines every *reference* to a plain (non-MATERIALIZED)
   * CTE. A cascade where each step is read twice therefore re-evaluates
   * its whole upstream tree per reference — the 6-half-step HITS oracle
   * (q162) went from 0.7 s materialized to >45 min plain at sf0.001 and
@@ -31,6 +37,43 @@ package graft
   *     inline + push filters through them).
   */
 object OracleSql {
+
+  /** Mirrors [[graft.functions.TextFunctions.tokens]]: lowercased `\W+`
+    * split with the empty tokens dropped. RE2's `\W` is ASCII, as Java's
+    * is without `(?U)`. */
+  def tokens(text: String): String =
+    s"list_filter(string_split_regex(lower($text), '\\W+'), x -> x <> '')"
+
+  /** Mirrors [[graft.functions.WordShingles]] at width 3: the distinct
+    * space-joined 3-token windows of the token list `t`, in first-seen
+    * order; empty below 3 tokens. */
+  def shingles(t: String): String =
+    s"list_distinct(list_transform(range(1, greatest(len($t) - 1, 1)), " +
+      s"i -> $t[i] || ' ' || $t[i+1] || ' ' || $t[i+2]))"
+
+  /** Mirrors [[graft.functions.Md5Hash60]]: the top 60 bits of md5(e),
+    * i.e. its first 15 hex digits, as a BIGINT. */
+  def hash60(e: String): String = s"('0x' || substr(md5($e), 1, 15))::BIGINT"
+
+  /** Mirrors [[graft.functions.YamrPartition]]: the UTF-8 bytes (given as
+    * the hex string `hex`) read as one big-endian unsigned integer, mod
+    * `n`, folded Horner-style so no key length overflows a BIGINT. */
+  def yamrPartition(hex: String, n: Int): String =
+    s"""list_reduce(
+       |  list_prepend(0::BIGINT,
+       |    list_transform(range(1, length($hex) // 2 + 1),
+       |      i -> ('0x' || substr($hex, CAST(i*2-1 AS INT), 2))::BIGINT)),
+       |  (a, b) -> (a * 256 + b) % $n)""".stripMargin
+
+  /** A JVM double as DuckDB reads it back bit for bit: the QUOTED
+    * `Double.toString`. A bare numeric literal goes through DECIMAL first
+    * in DuckDB 1.0 and can land 1 ulp off (measured on q105's
+    * '-0.12443208269492143'); the quoted form takes correctly-rounded
+    * strtod. */
+  def double(d: Double): String = s"CAST('$d' AS DOUBLE)"
+
+  /** A DOUBLE list literal of [[double]]s. */
+  def doubles(a: Iterable[Double]): String = a.map(double).mkString("[", ", ", "]")
 
   private val DefPattern =
     """(?i)\b([a-zA-Z_][a-zA-Z0-9_]*)\s+AS\s+(MATERIALIZED\s+)?\(""".r

@@ -35,20 +35,10 @@ object SparkEntry {
     registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
-    * Generated oracles (data-derived constants) are included when their
-    * query has run in this JVM — Verify runs all queries first, so its
-    * dump gets them; a cold call degrades those entries to rows-only. */
+    * the same parquet tables. Omitted for non-SQL-expressible ops. A
+    * fitted query's oracle is here once it has run in this JVM — Verify
+    * runs all queries first, so its dump has them. */
   def oracleSql: Map[String, String] =
-    registry.flatMap { q =>
-      q.oracle
-        .orElse(q.oracleGen.flatMap(g =>
-          try g() catch { case e: Exception =>
-            // a BROKEN generator must not silently weaken the gate to
-            // rows-only — that degrade path is only for "query never ran"
-            System.err.println(s"[oracle] ${q.name} generator failed: $e")
-            None
-          }))
-        .map(sql => q.name -> OracleSql.materializeCtes(sql.trim))
-    }.toMap
+    registry.flatMap(q =>
+      q.oracle.map(sql => q.name -> OracleSql.materializeCtes(sql.trim))).toMap
 }

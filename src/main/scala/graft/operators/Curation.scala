@@ -378,34 +378,10 @@ object Curation {
         .orderBy(col("doc_id")),
     Some(dedupPipelineOracle))
 
-  private lazy val dedupPipelineOracle: String = """
+  private lazy val dedupPipelineOracle: String = s"""
       WITH RECURSIVE
-      sh AS (SELECT doc_id, unnest(sh) AS s
-             FROM (SELECT doc_id,
-                          list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-                   FROM (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'),
-                                                    x -> x <> '') AS t
-                         FROM documents) tt
-                   WHERE len(t) >= 3) s0),
-      hashed AS (SELECT doc_id, i,
-                        ('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || s), 1, 15))::BIGINT AS h
-                 FROM sh CROSS JOIN range(0, 8) r(i)),
-      minh AS (SELECT doc_id, i, MIN(h) AS mh FROM hashed GROUP BY doc_id, i),
-      bands AS (SELECT doc_id, i // 2 AS band,
-                       string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS sig
-                FROM minh GROUP BY doc_id, i // 2),
-      cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-               FROM bands a JOIN bands b
-                 ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      common AS (SELECT da, db, COUNT(*) AS c
-                 FROM cand JOIN sh a ON a.doc_id = da
-                           JOIN sh b ON b.doc_id = db AND a.s = b.s
-                 GROUP BY da, db),
-      edges AS (SELECT da, db FROM common
-                JOIN sizes na ON na.doc_id = da JOIN sizes nb ON nb.doc_id = db
-                WHERE CAST(c AS DOUBLE) / (na.n + nb.n - c) >= 0.5),
+      ${Dedup.bandSql},
+      ${Dedup.lshEdgesSql(threshold = 0.5)},
       sym AS (SELECT da AS src, db AS dst FROM edges
               UNION ALL SELECT db, da FROM edges),
       reach AS (SELECT doc_id AS a, doc_id AS b FROM documents

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.IterProbe.stage
 import graft.functions.TextFunctions._
 import graft.sources.Tables
@@ -317,7 +317,7 @@ object CurationChain {
       prefix: String = "") = s"""
       WITH RECURSIVE $prefix
       tok AS MATERIALIZED (SELECT doc_id, source, lang, text,
-                     list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS t
+                     ${OracleSql.tokens("text")} AS t
               FROM $src),
       kept AS MATERIALIZED (SELECT doc_id, source, text, t FROM tok
                WHERE lang = 'en' AND len(t) BETWEEN 20 AND 1000
@@ -330,29 +330,8 @@ object CurationChain {
       clean AS MATERIALIZED (SELECT doc_id, source, t FROM kept
                 WHERE doc_id % 97 <> 0
                   AND doc_id NOT IN (SELECT doc_id FROM contaminated)),
-      sh AS MATERIALIZED (SELECT doc_id, unnest(shl) AS s
-             FROM (SELECT doc_id,
-                          list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shl
-                   FROM clean WHERE len(t) >= 3) s0),
-      hashed AS MATERIALIZED (SELECT doc_id, i,
-                        ('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || s), 1, 15))::BIGINT AS h
-                 FROM sh CROSS JOIN range(0, 8) r(i)),
-      minh AS MATERIALIZED (SELECT doc_id, i, MIN(h) AS mh FROM hashed GROUP BY doc_id, i),
-      bands AS MATERIALIZED (SELECT doc_id, i // 2 AS band,
-                       string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS sig
-                FROM minh GROUP BY doc_id, i // 2),
-      cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-               FROM bands a JOIN bands b
-                 ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      sizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      common AS MATERIALIZED (SELECT da, db, COUNT(*) AS c
-                 FROM cand JOIN sh a ON a.doc_id = da
-                           JOIN sh b ON b.doc_id = db AND a.s = b.s
-                 GROUP BY da, db),
-      edges AS MATERIALIZED (SELECT da, db FROM common
-                JOIN sizes na ON na.doc_id = da JOIN sizes nb ON nb.doc_id = db
-                WHERE CAST(c AS DOUBLE) / (na.n + nb.n - c) >= 0.5),
+      ${Dedup.lshBandsSql("clean", materialized = true)},
+      ${Dedup.lshEdgesSql(threshold = 0.5, materialized = true)},
       sym AS MATERIALIZED (SELECT da AS src, db AS dst FROM edges
               UNION ALL SELECT db, da FROM edges),
       reach AS (SELECT doc_id AS a, doc_id AS b FROM clean
@@ -387,7 +366,7 @@ object CurationChain {
   // reassembly; docs with nothing left drop out
   private def oracleSpanStage(k: Int) = s""",
       stoks AS MATERIALIZED (SELECT doc_id, source,
-                       list_filter(string_split_regex(lower(clean_text), '\\W+'), x -> x <> '') AS t
+                       ${OracleSql.tokens("clean_text")} AS t
                 FROM fintext),
       socc AS MATERIALIZED (SELECT doc_id, i AS pos, array_to_string(t[i:i+$k-1], ' ') AS g
                FROM (SELECT doc_id, t, unnest(range(1, len(t) - $k + 2)) AS i
@@ -418,7 +397,7 @@ object CurationChain {
 
   // the q91 mix arithmetic over the curated corpus CTE named `src`
   private def oracleTail(src: String, target: Long) = s""",
-      ftoks AS MATERIALIZED (SELECT source, len(list_filter(string_split_regex(lower(clean_text), '\\W+'), x -> x <> '')) AS ntok
+      ftoks AS MATERIALIZED (SELECT source, len(${OracleSql.tokens("clean_text")}) AS ntok
                 FROM $src),
       ps AS MATERIALIZED (SELECT source, CAST(SUM(ntok) AS BIGINT) AS n_tokens FROM ftoks GROUP BY source),
       sq AS MATERIALIZED (SELECT source, CAST(sqrt(n_tokens) AS DECIMAL(38,6)) AS sq FROM ps),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -53,10 +53,10 @@ object DataPrep {
         .filter(sampleKeep(col("doc_id")))
         .select(col("doc_id"), col("lang"), col("source"))
         .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       SELECT doc_id, lang, source
       FROM documents
-      WHERE ('0x' || substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 10 = 0
+      WHERE ${OracleSql.hash60("'sample:' || CAST(doc_id AS VARCHAR)")} % 10 = 0
       ORDER BY doc_id"""))
 
   // ---------------------------------------------------------------- q62
@@ -87,7 +87,7 @@ object DataPrep {
         FROM (SELECT source, doc_id,
                      CAST(ROW_NUMBER() OVER (
                        PARTITION BY source
-                       ORDER BY ('0x' || substr(md5('quota:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT,
+                       ORDER BY ${OracleSql.hash60("'quota:' || CAST(doc_id AS VARCHAR)")},
                                 doc_id) AS INT) AS rn
               FROM documents) t
         WHERE rn <= $K
@@ -124,8 +124,7 @@ object DataPrep {
                        PARTITION BY lang ORDER BY doc_id
                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_excl
               FROM (SELECT lang, doc_id,
-                           CAST(len(list_filter(string_split_regex(lower(text), '\\W+'),
-                                                x -> x <> '')) AS INT) AS n_tokens
+                           CAST(len(${OracleSql.tokens("text")}) AS INT) AS n_tokens
                     FROM documents) tok) c
         ORDER BY lang, doc_id"""))
   }
@@ -145,9 +144,8 @@ object DataPrep {
         .orderBy(col("cnt").desc, col("bigram"))
         .limit(40)
     },
-    Some("""
-      WITH toks AS (SELECT list_filter(string_split_regex(lower(text), '\W+'),
-                                       x -> x <> '') AS t
+    Some(s"""
+      WITH toks AS (SELECT ${OracleSql.tokens("text")} AS t
                     FROM documents),
       b AS (SELECT unnest(list_transform(range(1, len(t)),
                                          i -> t[i] || ' ' || t[i+1])) AS bigram
@@ -267,8 +265,8 @@ object DataPrep {
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
     },
-    Some("""
-      WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+    Some(s"""
+      WITH toks AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                     FROM documents),
       grams AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 2), i -> array_to_string(t[i:i+3], ' '))) AS g
                 FROM toks WHERE len(t) >= 4),
@@ -424,8 +422,8 @@ object DataPrep {
             !coalesce(col("bdrop"), lit(false))).as("missed"))
         .orderBy(col("doc_id"))
     },
-    Some("""
-      WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+    Some(s"""
+      WITH toks AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                     FROM documents),
       grams AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 2), i -> array_to_string(t[i:i+3], ' '))) AS g
                 FROM toks WHERE len(t) >= 4),
@@ -457,8 +455,8 @@ object DataPrep {
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
         .orderBy(col("doc_id"))
     },
-    Some("""
-      WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+    Some(s"""
+      WITH toks AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                     FROM documents),
       grams AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 2), i -> array_to_string(t[i:i+3], ' '))) AS g
                 FROM toks WHERE len(t) >= 4),
@@ -494,8 +492,8 @@ object DataPrep {
     "q80_source_mix_weights",
     (s, dir) => mixWeights(Tables.documents(s, dir), "source", "text")
       .orderBy(col("source")),
-    Some("""
-      WITH toks AS (SELECT source, len(list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')) AS ntok
+    Some(s"""
+      WITH toks AS (SELECT source, len(${OracleSql.tokens("text")}) AS ntok
                     FROM documents),
       ps AS (SELECT source, CAST(SUM(ntok) AS BIGINT) AS n_tokens FROM toks GROUP BY source),
       sq AS (SELECT source, n_tokens, CAST(sqrt(n_tokens) AS DECIMAL(38,6)) AS sq FROM ps)
@@ -816,8 +814,8 @@ object DataPrep {
     (s, dir) => epochMix(Tables.documents(s, dir), "doc_id", "text",
         "source", targetDocs = 1000L)
       .orderBy(col("doc_id")),
-    Some("""
-      WITH toks AS (SELECT source, len(list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')) AS ntok
+    Some(s"""
+      WITH toks AS (SELECT source, len(${OracleSql.tokens("text")}) AS ntok
                     FROM documents),
       ps AS (SELECT source, CAST(SUM(ntok) AS BIGINT) AS n_tokens FROM toks GROUP BY source),
       sq AS (SELECT source, CAST(sqrt(n_tokens) AS DECIMAL(38,6)) AS sq FROM ps),
@@ -923,9 +921,9 @@ object DataPrep {
           expr("CAST(cum_excl DIV 2048 AS INT)").as("pack_id"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH tok AS (SELECT doc_id, source, lang, text,
-                          list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                          ${OracleSql.tokens("text")} AS t
                    FROM documents),
       kept AS (SELECT doc_id, source, text, len(t) AS n_tokens FROM tok
                WHERE lang = 'en' AND len(t) BETWEEN 20 AND 1000
@@ -1071,9 +1069,9 @@ object DataPrep {
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH tok AS (SELECT doc_id, source, lang, text,
-                          list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                          ${OracleSql.tokens("text")} AS t
                    FROM documents),
       kept AS (SELECT doc_id, source FROM tok
                WHERE lang = 'en' AND len(t) BETWEEN 20 AND 1000
@@ -1152,9 +1150,9 @@ object DataPrep {
         "stopword_ratio" -> (col("__stop") * lit(50) >= col("__n")),
         "type_token_ratio" -> (col("__nd") * lit(100) >= col("__n") * lit(35))))
     },
-    Some("""
+    Some(s"""
       WITH t AS (SELECT doc_id,
-                        list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                        ${OracleSql.tokens("text")} AS t
                  FROM documents),
       f AS (SELECT len(t) AS n,
                    len(list_filter(t, x -> list_contains(['the','a','and','of','to','is','in'], x))) AS stop,
@@ -1279,8 +1277,8 @@ object DataPrep {
         "doc_id", "text", k = 4)
         .orderBy(col("doc_id"))
     },
-    Some("""
-      WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+    Some(s"""
+      WITH t AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                  FROM documents),
       g AS (SELECT doc_id,
                    unnest(list_distinct(list_transform(range(1, len(t) - 2),
@@ -1508,9 +1506,9 @@ object DataPrep {
     "q150_sequence_packing",
     (s, dir) => packSequences(Tables.documents(s, dir), "doc_id", "text",
       budget = 2048L).orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH t AS (SELECT doc_id,
-                        CAST(len(list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')) AS BIGINT) AS n_tokens
+                        CAST(len(${OracleSql.tokens("text")}) AS BIGINT) AS n_tokens
                  FROM documents),
       sized AS (SELECT doc_id, n_tokens,
                        CAST(CASE WHEN n_tokens <= 16 THEN 16
@@ -1622,9 +1620,9 @@ object DataPrep {
           col("cum_tokens"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH sized AS (SELECT doc_id, source,
-                            CAST(len(list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')) AS BIGINT) AS n_tokens
+                            CAST(len(${OracleSql.tokens("text")}) AS BIGINT) AS n_tokens
                      FROM documents),
       walked AS (SELECT doc_id, source, n_tokens,
                         CAST(SUM(n_tokens) OVER (PARTITION BY source

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.functions.{MinHashBands, ShingleKeys, SortedKeyOverlap}
 import graft.functions.TextFunctions._
 import graft.sources.Tables
@@ -40,15 +40,24 @@ object Dedup {
     docs.select(col("doc_id"), tokens(col("text")).as("t"))
       .select(col("doc_id"), explode(shingles(col("t"))).as("s"))
 
-  private val shingleSql =
-    """sh AS (SELECT doc_id, unnest(sh) AS s
-      |       FROM (SELECT doc_id,
-      |                    list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-      |                      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-      |             FROM (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'),
-      |                                              x -> x <> '') AS t
-      |                   FROM documents) tt
-      |             WHERE len(t) >= 3) s0)""".stripMargin
+  /** The token list `t` of every document, keyed by `key`, as a
+    * derived table. */
+  private def docTokens(key: String): String =
+    s"(SELECT $key, ${OracleSql.tokens("text")} AS t FROM documents) tt"
+
+  /** `name(key, s)`: the distinct shingles of each `src` row's token list
+    * `t`, rows with fewer than 3 tokens dropped — the DuckDB form of
+    * [[shingleRows]]. */
+  private def shingleCte(name: String, key: String, src: String,
+      materialized: Boolean = false): String = {
+    val m = if (materialized) "MATERIALIZED " else ""
+    s"""$name AS $m(SELECT $key, unnest(sh) AS s
+       |       FROM (SELECT $key, ${OracleSql.shingles("t")} AS sh
+       |             FROM $src
+       |             WHERE len(t) >= 3) s0)""".stripMargin
+  }
+
+  private val shingleSql = shingleCte("sh", "doc_id", docTokens("doc_id"))
 
   // ---------------------------------------------------------------- q35
   // Exact dedup: md5 content-hash groups with canonical representative
@@ -270,25 +279,53 @@ object Dedup {
     */
   def bandSigs(docs: DataFrame): DataFrame = bandRowsOf(docSignatures(docs))
 
-  /** The band-signature pipeline as DuckDB CTEs (assumes `sh` from
-    * [[shingleSql]] is already in scope; yields `bands(doc_id, band, sig)`).
-    */
-  private val bandSql =
-    """hashed AS (SELECT doc_id, i,
-      |                  ('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || s), 1, 15))::BIGINT AS h
-      |           FROM sh CROSS JOIN range(0, 8) r(i)),
-      |minh AS (SELECT doc_id, i, MIN(h) AS mh FROM hashed GROUP BY doc_id, i),
-      |bands AS (SELECT doc_id, CAST(i // 2 AS INT) AS band,
-      |                 string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS sig
-      |          FROM minh GROUP BY doc_id, i // 2)""".stripMargin
+  /** The near-dup oracle's LSH half, written once: `sh → hashed → minh →
+    * bands(doc_id, band, sig)`, the DuckDB replay of [[docSignatures]] →
+    * [[bandRowsOf]] over `src`'s (doc_id, t) token lists. q37, q81, q99,
+    * q51/q51b and the q93 chains replay it; `materialized` marks every CTE
+    * `AS MATERIALIZED` (the q93 cascade's convention). */
+  private[operators] def lshBandsSql(src: String,
+      materialized: Boolean = false): String = {
+    val m = if (materialized) "MATERIALIZED " else ""
+    s"""${shingleCte("sh", "doc_id", src, materialized)},
+       |hashed AS $m(SELECT doc_id, i,
+       |                  ${OracleSql.hash60("CAST(i AS VARCHAR) || ':' || s")} AS h
+       |           FROM sh CROSS JOIN range(0, 8) r(i)),
+       |minh AS $m(SELECT doc_id, i, MIN(h) AS mh FROM hashed GROUP BY doc_id, i),
+       |bands AS $m(SELECT doc_id, CAST(i // 2 AS INT) AS band,
+       |                 string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS sig
+       |          FROM minh GROUP BY doc_id, i // 2)""".stripMargin
+  }
+
+  /** The near-dup oracle's verify half, over [[lshBandsSql]]'s `sh` and
+    * `bands`: `cand → sizes → common → edges(da, db)`, the band-collision
+    * pairs whose exact shingle Jaccard is at least `threshold` — the
+    * replay of Curation's candidate and verify stages. */
+  private[operators] def lshEdgesSql(threshold: Double,
+      materialized: Boolean = false): String = {
+    val m = if (materialized) "MATERIALIZED " else ""
+    s"""cand AS $m(SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
+       |         FROM bands a JOIN bands b
+       |           ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
+       |sizes AS $m(SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+       |common AS $m(SELECT da, db, COUNT(*) AS c
+       |           FROM cand JOIN sh a ON a.doc_id = da
+       |                     JOIN sh b ON b.doc_id = db AND a.s = b.s
+       |           GROUP BY da, db),
+       |edges AS $m(SELECT da, db FROM common
+       |          JOIN sizes na ON na.doc_id = da JOIN sizes nb ON nb.doc_id = db
+       |          WHERE CAST(c AS DOUBLE) / (na.n + nb.n - c) >= $threshold)""".stripMargin
+  }
+
+  /** [[lshBandsSql]] over every document. */
+  private[operators] val bandSql = lshBandsSql(docTokens("doc_id"))
 
   private val q37 = GraftQuery(
     "q37_dedup_minhash",
     (s, dir) => bandSigs(Tables.documents(s, dir))
       .orderBy(col("doc_id"), col("band")),
     Some(s"""
-      WITH $shingleSql,
-      $bandSql
+      WITH $bandSql
       SELECT doc_id, band, sig FROM bands ORDER BY doc_id, band"""))
 
   // ---------------------------------------------------------------- q38
@@ -310,11 +347,11 @@ object Dedup {
           .otherwise(lit(0L))).as("simhash"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (SELECT doc_id, unnest(list_distinct(
-                      list_filter(string_split_regex(lower(text), '\W+'), x -> x <> ''))) AS tok
+                      ${OracleSql.tokens("text")})) AS tok
                     FROM documents),
-      hashed AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM toks),
+      hashed AS (SELECT doc_id, ${OracleSql.hash60("tok")} AS h FROM toks),
       votes AS (SELECT doc_id, b,
                        SUM(CASE WHEN ((h >> b) & 1) = 1 THEN 1 ELSE -1 END) AS v
                 FROM hashed CROSS JOIN range(0, 32) r(b)
@@ -409,8 +446,7 @@ object Dedup {
         .orderBy(col("doc_id"))
     },
     Some(s"""
-      WITH $shingleSql,
-      $bandSql,
+      WITH $bandSql,
       exact_reject AS (
         SELECT DISTINCT b.doc_id
         FROM documents b JOIN documents c ON md5(b.text) = md5(c.text)
@@ -502,8 +538,7 @@ object Dedup {
         .orderBy(col("doc_id"))
     },
     Some(s"""
-      WITH $shingleSql,
-      $bandSql,
+      WITH $bandSql,
       cands AS (SELECT DISTINCT tb.doc_id, eb.doc_id AS eval_id
                 FROM bands tb JOIN bands eb ON tb.band = eb.band AND tb.sig = eb.sig
                 WHERE tb.doc_id % 97 <> 0 AND eb.doc_id % 97 = 0),
@@ -586,9 +621,8 @@ object Dedup {
       paragraphDedup(para, "doc_id", "text2", "\n", maxDf = 1L)
         .orderBy(col("doc_id"))
     },
-    Some("""
-      WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'),
-                                            x -> x <> '') AS toks
+    Some(s"""
+      WITH t AS (SELECT doc_id, ${OracleSql.tokens("text")} AS toks
                  FROM documents),
       d2 AS (SELECT doc_id,
                     array_to_string(list_transform(
@@ -774,8 +808,7 @@ object Dedup {
       (s, dir) => substringDedup(Tables.documents(s, dir), "doc_id", "text", k = K)
         .orderBy(col("doc_id")),
       Some(s"""
-        WITH toked AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\\W+'),
-                                                  x -> x <> '') AS t
+        WITH toked AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                        FROM documents),
         nonempty AS (SELECT doc_id, t FROM toked WHERE len(t) >= 1),
         occ AS (SELECT doc_id, i AS pos,
@@ -874,12 +907,9 @@ object Dedup {
               col("n_union").cast("double")) <= lit(0.05)).as("jaccard_within_05"))
     },
     Some(s"""
-      WITH tt AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\\W+'),
-                                             x -> x <> '') AS t
+      WITH tt AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                   FROM documents),
-      sh AS (SELECT doc_id, unnest(
-               list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
+      sh AS (SELECT doc_id, unnest(${OracleSql.shingles("t")}) AS s
              FROM tt WHERE len(t) >= 3),
       a AS (SELECT DISTINCT s FROM sh WHERE doc_id % 3 <> 0),
       b AS (SELECT DISTINCT s FROM sh WHERE doc_id % 2 <> 0),
@@ -915,8 +945,7 @@ object Dedup {
     val st = org.apache.spark.sql.functions.udaf(
       new graft.mr.Aggregators.HllStateAggregator(p),
       org.apache.spark.sql.Encoders.scalaLong)
-    docs.select(col(groupCol), tokens(col("text")).as("t"))
-      .select(col(groupCol), explode(shingles(col("t"))).as("s"))
+    shingleRowsWithGroup(docs, groupCol)
       .select(col(groupCol), xxhash64(col("s")).as("h"))
       .groupBy(col(groupCol)).agg(st(col("h")).as("state"))
       .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
@@ -968,13 +997,10 @@ object Dedup {
             <= lit(0.05)).as("jaccard_within_05"))
         .orderBy(col("sa"), col("sb"))
     },
-    Some("""
-      WITH tt AS (SELECT source, list_filter(string_split_regex(lower(text), '\W+'),
-                                             x -> x <> '') AS t
+    Some(s"""
+      WITH tt AS (SELECT source, ${OracleSql.tokens("text")} AS t
                   FROM documents),
-      sh AS (SELECT DISTINCT source, unnest(
-               list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-                 i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS s
+      sh AS (SELECT DISTINCT source, unnest(${OracleSql.shingles("t")}) AS s
              FROM tt WHERE len(t) >= 3),
       per AS (SELECT source, COUNT(*) AS n FROM sh GROUP BY source),
       inter AS (SELECT a.source AS sa, b.source AS sb, COUNT(*) AS n_inter
@@ -995,16 +1021,6 @@ object Dedup {
   private def shingleRowsWithGroup(docs: DataFrame, groupCol: String): DataFrame =
     docs.select(col(groupCol), tokens(col("text")).as("t"))
       .select(col(groupCol), explode(shingles(col("t"))).as("s"))
-
-  private val shingleSqlWithSource =
-    """shsrc AS (SELECT source, unnest(sh) AS s
-      |          FROM (SELECT source,
-      |                       list_distinct(list_transform(range(1, greatest(len(t) - 1, 1)),
-      |                         i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-      |                FROM (SELECT source, list_filter(string_split_regex(lower(text), '\W+'),
-      |                                                 x -> x <> '') AS t
-      |                      FROM documents) tt
-      |                WHERE len(t) >= 3) s0)""".stripMargin
 
   // --------------------------------------------------------------- q132
   // KMV (bottom-k) set algebra over per-source shingle sets — the
@@ -1075,9 +1091,9 @@ object Dedup {
           .orderBy(col("sa"), col("sb"))
       },
       Some(s"""
-        WITH $shingleSqlWithSource,
+        WITH ${shingleCte("shsrc", "source", docTokens("source"))},
         h AS (SELECT DISTINCT source,
-                     ('0x' || substr(md5(s), 1, 15))::BIGINT AS h
+                     ${OracleSql.hash60("s")} AS h
               FROM shsrc),
         st AS (SELECT source, list_slice(list_sort(list(h)), 1, 256) AS st,
                       COUNT(*) AS n_exact

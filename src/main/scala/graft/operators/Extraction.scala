@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.sources.Tables
 
 /** Ingestion-side text extraction — the two standard stages that sit
@@ -255,9 +255,9 @@ object Extraction {
           .filter(size(graft.functions.TextFunctions.tokens(col("text"))) >= 1),
         "doc_id", "st")
       .orderBy(col("doc_id"), col("sent_id")),
-    Some("""
+    Some(s"""
       WITH toks AS (SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+               ${OracleSql.tokens("text")} AS t
              FROM documents),
       mk AS (SELECT doc_id, t,
                CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN '.'
@@ -272,11 +272,11 @@ object Extraction {
                generate_subscripts(parts, 1) - 1 AS sent_id,
                unnest(parts) AS sent
              FROM (SELECT doc_id,
-                          string_split(regexp_replace(s, '([.!?])[ \t\n\r]+', '\1' || chr(1), 'g'), chr(1)) AS parts
+                          string_split(regexp_replace(s, '([.!?])[ \\t\\n\\r]+', '\\1' || chr(1), 'g'), chr(1)) AS parts
                    FROM st))
       SELECT doc_id, CAST(sent_id AS INT) AS sent_id,
              CAST(len(sent) AS BIGINT) AS n_chars,
-             CAST(len(list_filter(string_split_regex(lower(sent), '\W+'), x -> x <> '')) AS BIGINT) AS n_words,
+             CAST(len(${OracleSql.tokens("sent")}) AS BIGINT) AS n_words,
              md5(sent) AS sent_md5
       FROM sp
       WHERE trim(sent) <> ''

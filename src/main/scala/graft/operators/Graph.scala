@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.sources.Tables
 
 /** Iterative graph analytics as engine ops (ABSENT in the reference —
@@ -199,11 +199,11 @@ object Graph {
   private[operators] val ITERS = 3
 
   private def unrolledOracle(k: Int): String = {
-    val d = s"CAST('$DAMP' AS DOUBLE)"
+    val d = OracleSql.double(DAMP)
     val iterCtes = (1 to ITERS).map { i =>
       s"""it$i AS (
          |  SELECT n.node,
-         |         ((CAST('${1.0 - DAMP}' AS DOUBLE) / nn.n) + $d * (CAST(COALESCE(c.cs, 0) AS DOUBLE) / 1099511627776.0)) AS rank
+         |         ((${OracleSql.double(1.0 - DAMP)} / nn.n) + $d * (CAST(COALESCE(c.cs, 0) AS DOUBLE) / 1099511627776.0)) AS rank
          |  FROM nodes n CROSS JOIN nn
          |  LEFT JOIN (
          |    SELECT e.dst AS node,
@@ -212,7 +212,7 @@ object Graph {
          |                 JOIN it${i - 1} r ON e.src = r.node
          |    GROUP BY e.dst) c ON n.node = c.node)""".stripMargin
     }
-    s"""WITH toks AS (SELECT list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS t
+    s"""WITH toks AS (SELECT ${OracleSql.tokens("text")} AS t
        |              FROM documents),
        |occ AS (SELECT t, unnest(range(1, len(t))) AS i FROM toks WHERE len(t) >= 2),
        |pr AS (SELECT t[i] AS a, t[i+1] AS b FROM occ WHERE t[i] <> t[i+1]),
@@ -251,14 +251,14 @@ object Graph {
     * call this, so the two oracles can never drift apart. */
   private[operators] def sinkOracleOver(prefixCtes: String,
       edgesBody: String, k: Int): String = {
-    val d = s"CAST('$DAMP' AS DOUBLE)"
+    val d = OracleSql.double(DAMP)
     val iterCtes = (1 to ITERS).map { i =>
       s"""s$i AS (
          |  SELECT COALESCE(SUM(CAST(FLOOR(r.rank * 1099511627776.0) AS BIGINT)), 0) AS scs
          |  FROM it${i - 1} r JOIN sinks s ON r.node = s.node),
          |it$i AS (
          |  SELECT n.node,
-         |         ((CAST('${1.0 - DAMP}' AS DOUBLE) / nn.n) + $d * (CAST(COALESCE(c.cs, 0) + (SELECT scs // (SELECT n FROM nni) FROM s$i) AS DOUBLE) / 1099511627776.0)) AS rank
+         |         ((${OracleSql.double(1.0 - DAMP)} / nn.n) + $d * (CAST(COALESCE(c.cs, 0) + (SELECT scs // (SELECT n FROM nni) FROM s$i) AS DOUBLE) / 1099511627776.0)) AS rank
          |  FROM nodes n CROSS JOIN nn
          |  LEFT JOIN (
          |    SELECT e.dst AS node,
@@ -426,7 +426,7 @@ object Graph {
            |              (CAST(COALESCE(hr.cr, 0) AS DOUBLE) / CAST((SELECT t FROM ht$i) AS DOUBLE)) AS s
            |       FROM nodes n LEFT JOIN hr$i hr ON n.node = hr.node)""".stripMargin)
     }
-    s"""WITH toks AS MATERIALIZED (SELECT list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS t
+    s"""WITH toks AS MATERIALIZED (SELECT ${OracleSql.tokens("text")} AS t
        |              FROM documents),
        |occ AS MATERIALIZED (SELECT t, unnest(range(1, len(t))) AS i FROM toks WHERE len(t) >= 2),
        |pr AS MATERIALIZED (SELECT t[i] AS a, t[i+1] AS b FROM occ WHERE t[i] <> t[i+1]),

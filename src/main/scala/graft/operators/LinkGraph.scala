@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.sources.Tables
 
 /** Hyperlink extraction and the host-level web graph — the crawl-side
@@ -286,7 +286,7 @@ object LinkGraph {
     Some(s"""
       WITH $linkCtes,
       tok AS (SELECT dst_host,
-               unnest(list_filter(string_split_regex(lower(anchor), '\\W+'), x -> x <> '')) AS token
+               unnest(${OracleSql.tokens("anchor")}) AS token
               FROM flt WHERE NOT nofollow),
       tc AS (SELECT dst_host, token, COUNT(*) AS cnt FROM tok GROUP BY 1, 2),
       rk AS (SELECT dst_host, token, cnt,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.functions.YamrPartition
 import graft.mr.Jobs
 import graft.sources.{GraftIO, Tables}
@@ -32,10 +32,9 @@ object MapReduceParity {
         .toDF("word", "cnt")
         .orderBy(col("word"))
     },
-    Some("""
+    Some(s"""
       SELECT w AS word, COUNT(*) AS cnt
-      FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
-                                      x -> x <> '')) AS w
+      FROM (SELECT unnest(${OracleSql.tokens("text")}) AS w
             FROM documents) t
       GROUP BY w
       ORDER BY w"""))
@@ -74,17 +73,12 @@ object MapReduceParity {
           YamrPartition(col("doc_id").cast("string"), 32).as("part_id"))
         .withColumn("region", col("part_id") + 1)
         .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH k AS (SELECT doc_id, hex(CAST(doc_id AS VARCHAR)) AS h FROM documents),
       -- Horner fold (a*256 + byte) mod 32 == bigint(bytes) mod 32, but
       -- never overflows regardless of key length (a direct ::BIGINT cast
       -- of the hex blows up at 8+ characters)
-      p AS (SELECT doc_id,
-                   list_reduce(
-                     list_prepend(0::BIGINT,
-                       list_transform(range(1, length(h) // 2 + 1),
-                         i -> ('0x' || substr(h, CAST(i*2-1 AS INT), 2))::BIGINT)),
-                     (a, b) -> (a * 256 + b) % 32) AS part_id
+      p AS (SELECT doc_id, ${OracleSql.yamrPartition("h", 32)} AS part_id
             FROM k)
       SELECT doc_id, CAST(part_id AS INT) AS part_id, CAST(part_id + 1 AS INT) AS region
       FROM p
@@ -185,19 +179,13 @@ object MapReduceParity {
           .orderBy(col("word"))
       }
     },
-    Some("""
+    Some(s"""
       WITH wc AS (SELECT w AS word, COUNT(*) AS cnt
-                  FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
-                                                  x -> x <> '')) AS w
+                  FROM (SELECT unnest(${OracleSql.tokens("text")}) AS w
                         FROM documents) t
                   GROUP BY w),
       k AS (SELECT word, cnt, hex(word) AS h FROM wc),
-      p AS (SELECT word, cnt,
-                   list_reduce(
-                     list_prepend(0::BIGINT,
-                       list_transform(range(1, length(h) // 2 + 1),
-                         i -> ('0x' || substr(h, CAST(i*2-1 AS INT), 2))::BIGINT)),
-                     (a, b) -> (a * 256 + b) % 8) AS region
+      p AS (SELECT word, cnt, ${OracleSql.yamrPartition("h", 8)} AS region
             FROM k)
       SELECT CAST(region AS INT) AS region, word, cnt FROM p
       ORDER BY word"""))

@@ -460,10 +460,7 @@ object Multimodal {
     s"substr(lpad(hex($e),8,'0'),7,2) || substr(lpad(hex($e),8,'0'),5,2) || " +
       s"substr(lpad(hex($e),8,'0'),3,2) || substr(lpad(hex($e),8,'0'),1,2)"
 
-  private[operators] def routedRecordsForTest(s: SparkSession,
-      dir: String): DataFrame = routedRecords(s, dir)
-
-  private def routedRecords(s: SparkSession, dir: String): DataFrame = {
+  private[operators] def routedRecords(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
       .withColumn("m4", pmod(col("doc_id"), lit(4)).cast("int"))
       .withColumn("w", (pmod(col("doc_id"), lit(1021)) + 1).cast("int"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.sources.Tables
 
 /** First-class relational operator layer.
@@ -659,7 +659,7 @@ object Relational {
           element_at(array_sort(t), 1).as("min_tok"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       SELECT doc_id,
              CAST(len(t) AS INT) AS n,
              t[1] AS first_tok,
@@ -669,7 +669,7 @@ object Relational {
              CAST(len(list_distinct(t)) AS INT) AS n_distinct,
              list_sort(t)[1] AS min_tok
       FROM (SELECT doc_id,
-                   list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                   ${OracleSql.tokens("text")} AS t
             FROM documents) d
       ORDER BY doc_id"""))
 
@@ -780,12 +780,12 @@ object Relational {
         .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("t"))
         .select(col("doc_id"), posexplode(col("t")).as(Seq("pos", "token")))
         .orderBy(col("doc_id"), col("pos")),
-    Some("""
+    Some(s"""
       SELECT doc_id,
              CAST(generate_subscripts(t, 1) - 1 AS INT) AS pos,
              unnest(t) AS token
       FROM (SELECT doc_id,
-                   list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                   ${OracleSql.tokens("text")} AS t
             FROM documents WHERE doc_id < 50) d
       ORDER BY doc_id, pos"""))
 

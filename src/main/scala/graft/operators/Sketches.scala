@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.sources.Tables
 
 /** Approximate/sketch aggregates (SURVEY §2.14): HLL++ distinct counts and
@@ -210,9 +210,8 @@ object Sketches {
           (est(col("mst")) === est(col("gst"))).as("merge_exact"))
         .orderBy(col("cnt").desc, col("w"))
     },
-    Some("""
-      WITH toks AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
-                                              x -> x <> '')) AS w
+    Some(s"""
+      WITH toks AS (SELECT unnest(${OracleSql.tokens("text")}) AS w
                     FROM documents)
       SELECT w, COUNT(*) AS cnt,
              TRUE AS ge_exact, TRUE AS within_eps, TRUE AS merge_exact
@@ -432,9 +431,8 @@ object Sketches {
           (col("c_f") > lit(0L) || col("cnt") <= element_at(col("fst"), 2)).as("fold_found"))
         .orderBy(col("cnt").desc, col("w"))
     },
-    Some("""
-      WITH t AS (SELECT list_filter(string_split_regex(lower(text), '\W+'),
-                                    x -> x <> '') AS t
+    Some(s"""
+      WITH t AS (SELECT ${OracleSql.tokens("text")} AS t
                  FROM documents),
       toks AS (SELECT unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS w
                FROM t WHERE len(t) >= 2),

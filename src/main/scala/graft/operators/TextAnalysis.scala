@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -46,10 +46,9 @@ object TextAnalysis {
         .groupBy(col("word"))
         .agg(count(lit(1)).as("cnt"))
         .orderBy(col("word")),
-    Some("""
+    Some(s"""
       SELECT w AS word, COUNT(*) AS cnt
-      FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
-                                      x -> x <> '')) AS w
+      FROM (SELECT unnest(${OracleSql.tokens("text")}) AS w
             FROM documents) t
       GROUP BY w
       ORDER BY w"""))
@@ -72,15 +71,15 @@ object TextAnalysis {
             (a, x) => a + x).cast("double") / size(toks)).as("avg_token_len"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       SELECT doc_id,
              CAST(length(text) AS INT) AS n_chars_actual,
              CAST(len(t) AS INT) AS n_tokens,
              CAST(len(list_distinct(t)) AS INT) AS n_uniq_tokens,
-             CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS INT) AS n_subword_tokens,
+             CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS INT) AS n_subword_tokens,
              CAST(list_reduce(list_prepend(0, list_transform(t, x -> length(x))), (a,b) -> a+b) AS DOUBLE) / len(t) AS avg_token_len
       FROM (SELECT doc_id, text,
-                   list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                   ${OracleSql.tokens("text")} AS t
             FROM documents) d
       ORDER BY doc_id"""))
 
@@ -126,8 +125,7 @@ object TextAnalysis {
                    ${sqlMarkerCount(stopwords(3)._2)} AS c_fr,
                    ${sqlMarkerCount(stopwords(4)._2)} AS c_zh
             FROM (SELECT doc_id, lang,
-                         list_filter(string_split_regex(lower(text), '\\W+'),
-                                     x -> x <> '') AS t
+                         ${OracleSql.tokens("text")} AS t
                   FROM documents) d) c
       ORDER BY doc_id"""))
 
@@ -155,7 +153,7 @@ object TextAnalysis {
             .otherwise(lit(0)).as("keep"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       SELECT doc_id,
              CAST(len(t) AS INT) AS n_tokens,
              CAST(len(list_filter(t, x -> list_contains(['the','a','and','of','to','is','in'], x))) AS DOUBLE) / len(t) AS stop_ratio,
@@ -166,7 +164,7 @@ object TextAnalysis {
                    AND CAST(len(list_filter(t, x -> list_contains(['the','a','and','of','to','is','in'], x))) AS DOUBLE) / len(t) > 0.02
                   THEN 1 ELSE 0 END AS keep
       FROM (SELECT doc_id, text,
-                   list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                   ${OracleSql.tokens("text")} AS t
             FROM documents) d
       ORDER BY doc_id"""))
 
@@ -225,8 +223,8 @@ object TextAnalysis {
     "q78_repetition_signals",
     (s, dir) => repetitionSignals(Tables.documents(s, dir), "doc_id", "text")
       .orderBy(col("doc_id")),
-    Some("""
-      WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+    Some(s"""
+      WITH toks AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                     FROM documents),
       bg AS (SELECT doc_id, len(t) AS n, len(list_distinct(t)) AS nd,
                     list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]) AS b
@@ -306,9 +304,9 @@ object TextAnalysis {
     (s, dir) => rarityScores(Tables.documents(s, dir), "doc_id", "text")
       .select(col("doc_id"), col("n_tokens"), col("avg_p"), col("avg_rarity"))
       .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH tk AS (SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS w
-                  FROM (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                  FROM (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                         FROM documents) d),
       freq AS (SELECT w, COUNT(*) AS c FROM tk GROUP BY w),
       tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM tk),
@@ -397,9 +395,9 @@ object TextAnalysis {
     (s, dir) => bigramLmScores(Tables.documents(s, dir), "doc_id", "text")
       .select(col("doc_id"), col("n_bigrams"), col("lm_score"))
       .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH tk AS (SELECT doc_id, t
-                  FROM (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                  FROM (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                         FROM documents) d),
       uni AS (SELECT w, COUNT(*) AS c1
               FROM (SELECT unnest(t) AS w FROM tk) GROUP BY w),
@@ -566,11 +564,11 @@ object TextAnalysis {
             "doc_id", "text", phrases, k = 3)
           .orderBy(col("phrase"), col("doc_id"), col("pos"))
       },
-      Some("""
-        WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+      Some(s"""
+        WITH t AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                    FROM documents),
         phrases(phrase) AS (VALUES ('join part filter'), ('the vector customer spark'), ('sort merge join')),
-        pt AS (SELECT phrase, list_filter(string_split_regex(lower(phrase), '\W+'), x -> x <> '') AS p
+        pt AS (SELECT phrase, ${OracleSql.tokens("phrase")} AS p
                FROM phrases),
         occ AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM t),
         hits AS (SELECT ph.phrase, o.doc_id, o.i AS pos
@@ -710,20 +708,18 @@ object TextAnalysis {
     bm25Rank(postings, lengths, idCol, terms, stats, k, k1, b)
   }
 
-  @volatile private var bm25OracleSql: Option[String] = None
-
   /** The BM25 WITH-cascade up to a `ranked` CTE — shared by the q113
     * oracle and the q130 RRF-fusion oracle. */
   private def bm25OracleCtes(terms: Seq[String], stats: Bm25Stats,
       k1: Double, b: Double): String = {
-    def q(d: Double) = s"CAST('$d' AS DOUBLE)" // quoted — the q105 lesson
+    import OracleSql.double
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       s"MAX(CASE WHEN term = '$t' THEN tf END) AS tf$i" }
     val scoreExpr = terms.indices.map { i =>
-      s"COALESCE(${q(stats.idf(terms(i)))} * ((CAST(tf$i AS DOUBLE) * ${q(k1 + 1.0)}) / " +
-        s"(CAST(tf$i AS DOUBLE) + ${q(k1)} * (${q(1.0 - b)} + ${q(b)} * (CAST(dl AS DOUBLE) / ${q(stats.avgdl)})))), CAST('0.0' AS DOUBLE))"
+      s"COALESCE(${double(stats.idf(terms(i)))} * ((CAST(tf$i AS DOUBLE) * ${double(k1 + 1.0)}) / " +
+        s"(CAST(tf$i AS DOUBLE) + ${double(k1)} * (${double(1.0 - b)} + ${double(b)} * (CAST(dl AS DOUBLE) / ${double(stats.avgdl)})))), CAST('0.0' AS DOUBLE))"
     }.reduceLeft((a, b2) => s"($a + $b2)")
-    s"""t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS t
+    s"""t AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
        |           FROM documents),
        |l AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM t),
        |tok AS (SELECT doc_id, unnest(t) AS term FROM t),
@@ -749,20 +745,16 @@ object TextAnalysis {
     // mixed-df terms from the driver vocabulary: common, mid, rare — the
     // shape a real triage probe has
     val terms = Seq("spark", "vector", "customer", "partition")
-    GraftQuery(
-      "q113_bm25_topk",
-      (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        val postings = bm25Postings(docs, "doc_id", "text")
-        val lengths = bm25DocLengths(docs, "doc_id", "text")
-        val stats = bm25Stats(lengths, postings, terms)
-        bm25OracleSql = Some(bm25Oracle(terms, stats, k = 20, k1 = 1.2, b = 0.75))
-        bm25Rank(postings, lengths, "doc_id", terms, stats,
-          k = 20, k1 = 1.2, b = 0.75)
-          .orderBy(col("rank"))
-      },
-      None,
-      oracleGen = Some(() => bm25OracleSql))
+    GraftQuery.fitted("q113_bm25_topk") { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      val postings = bm25Postings(docs, "doc_id", "text")
+      val lengths = bm25DocLengths(docs, "doc_id", "text")
+      val stats = bm25Stats(lengths, postings, terms)
+      (bm25Rank(postings, lengths, "doc_id", terms, stats,
+        k = 20, k1 = 1.2, b = 0.75)
+        .orderBy(col("rank")),
+        bm25Oracle(terms, stats, k = 20, k1 = 1.2, b = 0.75))
+    }
   }
 
   // ------------------------------------------------------ q119 freq grams
@@ -792,8 +784,8 @@ object TextAnalysis {
     "q119_frequent_grams",
     (s, dir) => frequentGrams(Tables.documents(s, dir), "doc_id", "text",
       k = 4, topK = 25),
-    Some("""
-      WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+    Some(s"""
+      WITH t AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                  FROM documents),
       occ AS (SELECT doc_id, t, unnest(range(1, len(t) - 2)) AS i
               FROM t WHERE len(t) >= 4),
@@ -826,32 +818,26 @@ object TextAnalysis {
 
   private val q121 = {
     val terms = Seq("spark", "vector", "customer", "partition")
-    GraftQuery(
-      "q121_bm25_append",
-      (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        val base = docs.filter(col("doc_id") % 10 < 8)
-        val batch = docs.filter(col("doc_id") % 10 >= 8)
-        // index each side independently (what a stored table + an append
-        // write produce), union the ARTIFACTS, fold the constants
-        val postings = bm25Postings(base, "doc_id", "text")
-          .unionByName(bm25Postings(batch, "doc_id", "text"))
-        val lengths = bm25DocLengths(base, "doc_id", "text")
-          .unionByName(bm25DocLengths(batch, "doc_id", "text"))
-        val stats = bm25StatsMerge(
-          bm25Stats(bm25DocLengths(base, "doc_id", "text"),
-            bm25Postings(base, "doc_id", "text"), terms),
-          bm25Stats(bm25DocLengths(batch, "doc_id", "text"),
-            bm25Postings(batch, "doc_id", "text"), terms))
-        bm25OracleSqlAppend = Some(bm25Oracle(terms, stats, k = 20, 1.2, 0.75))
-        bm25Rank(postings, lengths, "doc_id", terms, stats, 20, 1.2, 0.75)
-          .orderBy(col("rank"))
-      },
-      None,
-      oracleGen = Some(() => bm25OracleSqlAppend))
+    GraftQuery.fitted("q121_bm25_append") { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      val base = docs.filter(col("doc_id") % 10 < 8)
+      val batch = docs.filter(col("doc_id") % 10 >= 8)
+      // index each side independently (what a stored table + an append
+      // write produce), union the ARTIFACTS, fold the constants
+      val postings = bm25Postings(base, "doc_id", "text")
+        .unionByName(bm25Postings(batch, "doc_id", "text"))
+      val lengths = bm25DocLengths(base, "doc_id", "text")
+        .unionByName(bm25DocLengths(batch, "doc_id", "text"))
+      val stats = bm25StatsMerge(
+        bm25Stats(bm25DocLengths(base, "doc_id", "text"),
+          bm25Postings(base, "doc_id", "text"), terms),
+        bm25Stats(bm25DocLengths(batch, "doc_id", "text"),
+          bm25Postings(batch, "doc_id", "text"), terms))
+      (bm25Rank(postings, lengths, "doc_id", terms, stats, 20, 1.2, 0.75)
+        .orderBy(col("rank")),
+        bm25Oracle(terms, stats, k = 20, 1.2, 0.75))
+    }
   }
-
-  @volatile private var bm25OracleSqlAppend: Option[String] = None
 
   // --------------------------------------------------- q129 boolean query
   // Boolean retrieval (AND / AND-NOT) over the SAME stored term-bucketed
@@ -888,8 +874,8 @@ object TextAnalysis {
         must = Seq("spark", "vector"), mustNot = Seq("dup"))
         .orderBy(col("doc_id"))
     },
-    Some("""
-      WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+    Some(s"""
+      WITH t AS (SELECT doc_id, ${OracleSql.tokens("text")} AS t
                  FROM documents),
       tok AS (SELECT doc_id, unnest(t) AS term FROM t),
       tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok
@@ -921,48 +907,42 @@ object TextAnalysis {
     val qVec = 0L
     val kEach = 30
     val kOut = 15
-    GraftQuery(
-      "q130_hybrid_rrf",
-      (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        val postings = bm25Postings(docs, "doc_id", "text")
-        val lengths = bm25DocLengths(docs, "doc_id", "text")
-        val stats = bm25Stats(lengths, postings, terms)
-        rrfOracleSql = Some(rrfOracle(terms, stats, qVec, kEach, kOut))
-        val bm = bm25Rank(postings, lengths, "doc_id", terms, stats,
-          kEach, 1.2, 0.75).select(col("doc_id"), col("rank").as("br"))
-        val e = Similarity.vecs(Tables.embeddings(s, dir))
-        val qv = e.filter(col("vec_id") === qVec)
-          .select(col("v").as("qv"), col("norm").as("qn"))
-        val scored = e.filter(col("vec_id") =!= qVec).crossJoin(broadcast(qv))
-          .select(col("vec_id"),
-            (Similarity.dot(col("qv"), col("v")) / (col("qn") * col("norm"))).as("cos"))
-        val annTop = scored.orderBy(col("cos").desc, col("vec_id")).limit(kEach)
-        val ann = annTop.withColumn("ar", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("cos").desc, col("vec_id"))))
-          .select(col("vec_id").as("doc_id"), col("ar"))
-        val fused = bm.join(ann, Seq("doc_id"), "full_outer")
-          .select(col("doc_id"),
-            coalesce(col("br"), lit(0)).cast("int").as("bm25_rank"),
-            coalesce(col("ar"), lit(0)).cast("int").as("ann_rank"),
-            (when(col("br").isNotNull, lit(1.0) / (lit(60) + col("br")))
-              .otherwise(lit(0.0)) +
-              when(col("ar").isNotNull, lit(1.0) / (lit(60) + col("ar")))
-                .otherwise(lit(0.0))).as("rrf"))
-          .orderBy(col("rrf").desc, col("doc_id")).limit(kOut)
-        fused.withColumn("rrf_rank", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("rrf").desc, col("doc_id"))).cast("int"))
-          .orderBy(col("rrf_rank"))
-      },
-      None,
-      oracleGen = Some(() => rrfOracleSql))
+    GraftQuery.fitted("q130_hybrid_rrf") { (s, dir) =>
+      val docs = Tables.documents(s, dir)
+      val postings = bm25Postings(docs, "doc_id", "text")
+      val lengths = bm25DocLengths(docs, "doc_id", "text")
+      val stats = bm25Stats(lengths, postings, terms)
+      val bm = bm25Rank(postings, lengths, "doc_id", terms, stats,
+        kEach, 1.2, 0.75).select(col("doc_id"), col("rank").as("br"))
+      val e = Similarity.vecs(Tables.embeddings(s, dir))
+      val qv = e.filter(col("vec_id") === qVec)
+        .select(col("v").as("qv"), col("norm").as("qn"))
+      val scored = e.filter(col("vec_id") =!= qVec).crossJoin(broadcast(qv))
+        .select(col("vec_id"),
+          (Similarity.dot(col("qv"), col("v")) / (col("qn") * col("norm"))).as("cos"))
+      val annTop = scored.orderBy(col("cos").desc, col("vec_id")).limit(kEach)
+      val ann = annTop.withColumn("ar", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .orderBy(col("cos").desc, col("vec_id"))))
+        .select(col("vec_id").as("doc_id"), col("ar"))
+      val fused = bm.join(ann, Seq("doc_id"), "full_outer")
+        .select(col("doc_id"),
+          coalesce(col("br"), lit(0)).cast("int").as("bm25_rank"),
+          coalesce(col("ar"), lit(0)).cast("int").as("ann_rank"),
+          (when(col("br").isNotNull, lit(1.0) / (lit(60) + col("br")))
+            .otherwise(lit(0.0)) +
+            when(col("ar").isNotNull, lit(1.0) / (lit(60) + col("ar")))
+              .otherwise(lit(0.0))).as("rrf"))
+        .orderBy(col("rrf").desc, col("doc_id")).limit(kOut)
+      (fused.withColumn("rrf_rank", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .orderBy(col("rrf").desc, col("doc_id"))).cast("int"))
+        .orderBy(col("rrf_rank")),
+        rrfOracle(terms, stats, qVec, kEach, kOut))
+    }
   }
 
-  @volatile private var rrfOracleSql: Option[String] = None
-
-  /** Called by q130's run to pin the oracle with the run's own stats. */
+  /** q130's oracle, pinned with the run's own stats. */
   private def rrfOracle(terms: Seq[String], stats: Bm25Stats, qVec: Long,
       kEach: Int, kOut: Int): String =
     s"""WITH ${bm25OracleCtes(terms, stats, 1.2, 0.75)},
@@ -1045,9 +1025,9 @@ object TextAnalysis {
     "q140_quality_drift",
     (s, dir) => qualityDrift(Tables.documents(s, dir),
       expr("doc_id DIV 50")).orderBy(col("source"), col("batch")),
-    Some("""
+    Some(s"""
       WITH d AS (SELECT source, doc_id // 50 AS batch,
-                        list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                        ${OracleSql.tokens("text")} AS t
                  FROM documents),
       pb AS (SELECT source, batch, COUNT(*) AS n_docs,
                     CAST(SUM(len(t)) AS BIGINT) AS sum_tokens,
@@ -1094,9 +1074,9 @@ object TextAnalysis {
     "q144_trailing_loop",
     (s, dir) => trailingLoop(Tables.documents(s, dir), "doc_id", "text")
       .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH t AS (SELECT doc_id,
-                        list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                        ${OracleSql.tokens("text")} AS t
                  FROM documents),
       m AS (SELECT doc_id, len(t) AS n,
                    COALESCE(list_max(list_filter(range(1, 21),
@@ -1237,21 +1217,21 @@ object TextAnalysis {
   private val q148b = GraftQuery(
     "q148b_gopher_full",
     (s, dir) => gopherQualityFull(Tables.documents(s, dir), "doc_id", "text"),
-    Some("""
+    Some(s"""
       WITH t AS (SELECT doc_id, text,
-                        list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                        ${OracleSql.tokens("text")} AS t
                  FROM documents),
       base AS (SELECT doc_id,
                       CAST(len(t) AS BIGINT) AS n_tokens,
                       CAST(COALESCE(list_sum(list_transform(t, x -> len(x))), 0) AS BIGINT) AS sum_chars,
-                      CAST(len(list_filter(t, x -> regexp_matches(x, '^[a-z]+$'))) AS BIGINT) AS n_alpha,
+                      CAST(len(list_filter(t, x -> regexp_matches(x, '^[a-z]+$$'))) AS BIGINT) AS n_alpha,
                       CAST(len(regexp_extract_all(text, '#')) AS BIGINT) AS n_hash,
-                      CAST(len(regexp_extract_all(text, '(\.\.\.|…)')) AS BIGINT) AS n_ellipsis,
+                      CAST(len(regexp_extract_all(text, '(\\.\\.\\.|…)')) AS BIGINT) AS n_ellipsis,
                       CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines,
                       CAST(len(list_filter(string_split(text, chr(10)),
-                        l -> regexp_matches(l, '^\s*[•\-*]'))) AS BIGINT) AS n_bullet_lines,
+                        l -> regexp_matches(l, '^\\s*[•\\-*]'))) AS BIGINT) AS n_bullet_lines,
                       CAST(len(list_filter(string_split(text, chr(10)),
-                        l -> regexp_matches(l, '(\.\.\.|…)\s*$'))) AS BIGINT) AS n_ellipsis_lines,
+                        l -> regexp_matches(l, '(\\.\\.\\.|…)\\s*$$'))) AS BIGINT) AS n_ellipsis_lines,
                       CAST(len(list_intersect(list_distinct(t),
                         ['the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'])) AS BIGINT) AS n_stop,
                       t
@@ -1287,14 +1267,14 @@ object TextAnalysis {
   private val q148 = GraftQuery(
     "q148_gopher_quality",
     (s, dir) => gopherQuality(Tables.documents(s, dir), "doc_id", "text"),
-    Some("""
+    Some(s"""
       WITH t AS (SELECT doc_id,
-                        list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                        ${OracleSql.tokens("text")} AS t
                  FROM documents),
       base AS (SELECT doc_id,
                       CAST(len(t) AS BIGINT) AS n_tokens,
                       CAST(list_sum(list_transform(t, x -> len(x))) AS BIGINT) AS sum_chars,
-                      CAST(len(list_filter(t, x -> regexp_matches(x, '^[a-z]+$'))) AS BIGINT) AS n_alpha,
+                      CAST(len(list_filter(t, x -> regexp_matches(x, '^[a-z]+$$'))) AS BIGINT) AS n_alpha,
                       t
                FROM t),
       grams AS (SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g
@@ -1484,9 +1464,9 @@ object TextAnalysis {
       dsirScoreStored(docs.filter(col("doc_id") % 2 =!= 0),
         "doc_id", "text", ratio)
     },
-    Some("""
+    Some(s"""
       WITH t AS (SELECT doc_id,
-                        list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                        ${OracleSql.tokens("text")} AS t
                  FROM documents),
       g AS (SELECT doc_id,
                    unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g
@@ -1521,9 +1501,9 @@ object TextAnalysis {
     "q157_dsir_score",
     (s, dir) => dsirScore(Tables.documents(s, dir), "doc_id", "text",
       isTarget = col("doc_id") % 97 === 0),
-    Some("""
+    Some(s"""
       WITH t AS (SELECT doc_id,
-                        list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                        ${OracleSql.tokens("text")} AS t
                  FROM documents),
       g AS (SELECT doc_id,
                    unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g
@@ -1724,8 +1704,7 @@ object TextAnalysis {
                         CAST(COUNT(*) AS BIGINT) AS n_words,
                         CAST(SUM(len(v.s)) AS BIGINT) AS n_bpe
                  FROM (SELECT doc_id, source, len(text) AS n_chars,
-                              unnest(list_filter(string_split_regex(lower(text), '\\W+'),
-                                                 x -> x <> '')) AS w
+                              unnest(${OracleSql.tokens("text")}) AS w
                        FROM documents) d JOIN v$steps v USING (w)
                  GROUP BY d.doc_id, d.source, d.n_chars)
            GROUP BY source"""
@@ -1740,8 +1719,7 @@ object TextAnalysis {
                  FROM (SELECT d.doc_id, d.source,
                               CAST(SUM(len(v.s)) AS BIGINT) AS n_bpe_tokens
                        FROM (SELECT doc_id, source,
-                                    unnest(list_filter(string_split_regex(lower(text), '\\W+'),
-                                                       x -> x <> '')) AS w
+                                    unnest(${OracleSql.tokens("text")}) AS w
                              FROM documents) d JOIN v$steps v USING (w)
                        GROUP BY d.doc_id, d.source))
            WHERE cum_tokens - n_bpe_tokens < ${budget.get}"""
@@ -1749,8 +1727,7 @@ object TextAnalysis {
         s"""SELECT d.doc_id AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
                CAST(SUM(len(v.s)) AS BIGINT) AS n_bpe_tokens
            FROM (SELECT doc_id,
-                        unnest(list_filter(string_split_regex(lower(text), '\\W+'),
-                                           x -> x <> '')) AS w
+                        unnest(${OracleSql.tokens("text")}) AS w
                  FROM documents) d JOIN v$steps v USING (w)
            GROUP BY d.doc_id"""
       else if (segment)
@@ -1760,8 +1737,7 @@ object TextAnalysis {
       }.mkString("\n      UNION ALL ")
     s"""
       WITH w0 AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS n FROM (
-                    SELECT unnest(list_filter(string_split_regex(lower(text), '\\W+'),
-                                              x -> x <> '')) AS w
+                    SELECT unnest(${OracleSql.tokens("text")}) AS w
                     FROM documents) GROUP BY w),
       v0 AS MATERIALIZED (SELECT w, n,
                     list_transform(range(1, len(w) + 1), i -> w[i:i]) || ['</w>'] AS s
@@ -1974,9 +1950,8 @@ object TextAnalysis {
     "q154_vocab_coverage",
     (s, dir) => vocabCoverage(Tables.documents(s, dir), "text",
       targets = Seq(50, 90, 99)),
-    Some("""
-      WITH toks AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'),
-                                  x -> x <> '')) AS w
+    Some(s"""
+      WITH toks AS (SELECT unnest(${OracleSql.tokens("text")}) AS w
                     FROM documents),
       wc AS (SELECT w, COUNT(*) AS c FROM toks GROUP BY w),
       tot AS (SELECT CAST(SUM(c) AS BIGINT) AS total FROM wc),
@@ -2046,19 +2021,18 @@ object TextAnalysis {
     "q160_c4_clean",
     (s, dir) => c4Clean(Tables.documents(s, dir), "doc_id", "text",
       blocklist = Seq("casino", "lottery")),
-    Some("""
+    Some(s"""
       WITH base AS (
         SELECT doc_id,
                CAST(len(string_split(text, chr(10))) AS BIGINT) AS n_lines,
                CAST(len(list_filter(string_split(text, chr(10)),
-                 l -> regexp_matches(l, '[.!?"]\s*$')
-                      AND len(list_filter(string_split_regex(l, '\s+'), w -> w <> '')) >= 5
+                 l -> regexp_matches(l, '[.!?"]\\s*$$')
+                      AND len(list_filter(string_split_regex(l, '\\s+'), w -> w <> '')) >= 5
                       AND NOT contains(lower(l), 'javascript'))) AS BIGINT) AS n_kept_lines,
                CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT) AS n_sentences,
                contains(lower(text), 'lorem ipsum') AS has_lorem,
                contains(text, '{') AS has_curly,
-               (len(list_intersect(list_distinct(list_filter(
-                  string_split_regex(lower(text), '\W+'), x -> x <> '')),
+               (len(list_intersect(list_distinct(${OracleSql.tokens("text")}),
                   ['casino', 'lottery'])) > 0) AS has_blocked
         FROM documents)
       SELECT doc_id, n_lines, n_kept_lines, n_sentences,
@@ -2132,9 +2106,9 @@ object TextAnalysis {
     "q161_quality_classifier",
     (s, dir) => linearQualityScore(Tables.documents(s, dir), "doc_id",
       "text", weights = seededWeights(s, 4096)),
-    Some("""
+    Some(s"""
       WITH t AS (SELECT doc_id,
-                        list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                        ${OracleSql.tokens("text")} AS t
                  FROM documents),
       f AS (SELECT doc_id,
                    unnest(list_concat(t, list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS g
@@ -2333,9 +2307,9 @@ object TextAnalysis {
     "q161b_quality_classifier_sparse",
     (s, dir) => linearQualityScore(Tables.documents(s, dir), "doc_id",
       "text", weights = seededWeights(s, 4096).filter(col("w") > 0L)),
-    Some("""
+    Some(s"""
       WITH t AS (SELECT doc_id,
-                        list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS t
+                        ${OracleSql.tokens("text")} AS t
                  FROM documents),
       f AS (SELECT doc_id,
                    unnest(list_concat(t, list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))) AS g
@@ -2393,9 +2367,9 @@ object TextAnalysis {
   private val q166 = GraftQuery(
     "q166_readability",
     (s, dir) => readability(Tables.documents(s, dir), "doc_id", "text"),
-    Some("""
+    Some(s"""
       WITH c AS (SELECT doc_id,
-                        CAST(len(list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '')) AS BIGINT) AS n_words,
+                        CAST(len(${OracleSql.tokens("text")}) AS BIGINT) AS n_words,
                         CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT) AS n_sentences,
                         CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS n_syllables
                  FROM documents)

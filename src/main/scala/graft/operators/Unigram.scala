@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.functions.TextFunctions.tokens
 import graft.sources.Tables
 
@@ -218,8 +218,7 @@ object Unigram {
 
   private def unigramOracleCore: String = s"""
       WITH w0 AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS n FROM (
-               SELECT unnest(list_filter(string_split_regex(lower(text), '\\W+'),
-                                         x -> x <> '')) AS w
+               SELECT unnest(${OracleSql.tokens("text")}) AS w
                FROM documents)
              GROUP BY w HAVING len(w) <= $MAXW),
       pos AS MATERIALIZED (SELECT w, n, len(w) AS wl,
@@ -279,8 +278,7 @@ object Unigram {
       SELECT d.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
              CAST(SUM(v.n_pieces) AS BIGINT) AS n_unigram_tokens
       FROM (SELECT doc_id,
-                   unnest(list_filter(string_split_regex(lower(text), '\\W+'),
-                                      x -> x <> '')) AS w
+                   unnest(${OracleSql.tokens("text")}) AS w
             FROM documents) d
       JOIN vseg v USING (w)
       GROUP BY d.doc_id

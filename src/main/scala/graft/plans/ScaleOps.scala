@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.sources.Tables
 
 /** Scale-path utilities: the shuffle-shaping tools a 100 TB deployment
@@ -223,17 +223,11 @@ object ScaleOps {
   // LAYOUT effect on skewed keys is measured in ScaleOpsSpec (a
   // lognormal-ish column defeats min/max scaling, rank buckets keep the
   // box-volume pruning).
-  @volatile private var zorderRankOracleSql: Option[String] = None
-
   private def zorderRankOracle(bx: Array[Double], by: Array[Double]): String = {
-    def arr(a: Array[Double]) =
-      // quoted-string casts — DuckDB double-rounds bare decimal literals
-      // (the q105 finding); comparisons here are exact double compares
-      a.map(d => s"CAST('$d' AS DOUBLE)").mkString("[", ", ", "]")
     s"""WITH b AS (
        |  SELECT l_orderkey, l_linenumber,
-       |         len(list_filter(${arr(bx)}, b -> CAST(l_extendedprice AS DOUBLE) > b)) AS bx,
-       |         len(list_filter(${arr(by)}, b -> CAST(l_partkey AS DOUBLE) > b)) AS by
+       |         len(list_filter(${OracleSql.doubles(bx)}, b -> CAST(l_extendedprice AS DOUBLE) > b)) AS bx,
+       |         len(list_filter(${OracleSql.doubles(by)}, b -> CAST(l_partkey AS DOUBLE) > b)) AS by
        |  FROM lineitem),
        |base AS (SELECT l_orderkey, l_linenumber,
        |                CAST(bx AS BIGINT) AS x, CAST(by AS BIGINT) AS y FROM b),
@@ -252,22 +246,18 @@ object ScaleOps {
        |ORDER BY l_orderkey, l_linenumber""".stripMargin
   }
 
-  private val q107 = GraftQuery(
-    "q107_zorder_rank",
-    (s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val bx = rankBoundaries(li, "l_extendedprice", 256)
-      val by = rankBoundaries(li, "l_partkey", 256)
-      zorderRankOracleSql = Some(zorderRankOracle(bx, by))
-      li.select(col("l_orderkey"), col("l_linenumber"),
-          rankBucket(col("l_extendedprice"), bx).as("bx"),
-          rankBucket(col("l_partkey"), by).as("by"))
-        .select(col("l_orderkey"), col("l_linenumber"), col("bx"), col("by"),
-          zorder16(col("bx"), col("by")).as("zval"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    },
-    None,
-    oracleGen = Some(() => zorderRankOracleSql))
+  private val q107 = GraftQuery.fitted("q107_zorder_rank") { (s, dir) =>
+    val li = Tables.lineitem(s, dir)
+    val bx = rankBoundaries(li, "l_extendedprice", 256)
+    val by = rankBoundaries(li, "l_partkey", 256)
+    (li.select(col("l_orderkey"), col("l_linenumber"),
+        rankBucket(col("l_extendedprice"), bx).as("bx"),
+        rankBucket(col("l_partkey"), by).as("by"))
+      .select(col("l_orderkey"), col("l_linenumber"), col("bx"), col("by"),
+        zorder16(col("bx"), col("by")).as("zval"))
+      .orderBy(col("l_orderkey"), col("l_linenumber")),
+      zorderRankOracle(bx, by))
+  }
 
   // --------------------------------------------------------------- q102
   // z-values as a DECLARED query so the interleave arithmetic itself is
@@ -388,13 +378,13 @@ object ScaleOps {
         rendezvousShard(col("doc_id"), 9).as("shard_9"))
       .withColumn("moved", col("shard_8") =!= col("shard_9"))
       .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH a AS (SELECT doc_id,
                         list_sort(list_transform(range(0, 8), s -> {
-                          'h': ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(s AS VARCHAR)), 1, 15))::BIGINT,
+                          'h': ${OracleSql.hash60("CAST(doc_id AS VARCHAR) || ':' || CAST(s AS VARCHAR)")},
                           's': s})) AS l8,
                         list_sort(list_transform(range(0, 9), s -> {
-                          'h': ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(s AS VARCHAR)), 1, 15))::BIGINT,
+                          'h': ${OracleSql.hash60("CAST(doc_id AS VARCHAR) || ':' || CAST(s AS VARCHAR)")},
                           's': s})) AS l9
                  FROM documents)
       SELECT doc_id,
@@ -495,10 +485,10 @@ object ScaleOps {
       Tables.documents(s, dir).select(col("doc_id")),
       "doc_id", shards = 8, docsPerFile = 25L)
       .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH a AS (SELECT doc_id,
                         list_sort(list_transform(range(0, 8), s -> {
-                          'h': ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(s AS VARCHAR)), 1, 15))::BIGINT,
+                          'h': ${OracleSql.hash60("CAST(doc_id AS VARCHAR) || ':' || CAST(s AS VARCHAR)")},
                           's': s})) AS l8
                  FROM documents),
       sh AS (SELECT doc_id, CAST(l8[len(l8)].s AS INT) AS shard FROM a),

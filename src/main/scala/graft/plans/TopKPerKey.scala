@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.{col, count, explode, lit}
 import org.apache.spark.sql.graftbridge
 
-import graft.GraftQuery
+import graft.{GraftQuery, OracleSql}
 import graft.sources.Tables
 
 /** Top-k-per-key as a WHOLE-OPERATOR Catalyst extension — the (c)-level
@@ -137,9 +137,8 @@ object TopKPerKey {
         Seq(col("cnt").desc, col("word")), 3)
         .orderBy(col("source"), col("cnt").desc, col("word"))
     },
-    Some("""
-      WITH tok AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '\W+'),
-                                                     x -> x <> '')) AS word
+    Some(s"""
+      WITH tok AS (SELECT source, unnest(${OracleSql.tokens("text")}) AS word
                    FROM documents),
       counts AS (SELECT source, word, CAST(COUNT(*) AS BIGINT) AS cnt
                  FROM tok GROUP BY source, word)

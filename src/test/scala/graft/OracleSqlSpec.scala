@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 class OracleSqlSpec extends AnyFunSuite {
@@ -154,5 +158,45 @@ class OracleSqlSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  test("no oracle spells a JVM double as a bare fractional literal") {
+    // DuckDB 1.0 reads a bare decimal through DECIMAL and can land 1 ulp
+    // off the JVM's double; OracleSql.double quotes it. Whole numbers
+    // (CAST(0.0 AS DOUBLE)) are exact either way.
+    val bare = """CAST\(\s*(-?\d+\.\d+(?:[eE][-+]?\d+)?)\s+AS\s+DOUBLE\)""".r
+    val offenders = SparkEntry.oracleSql.toSeq.flatMap { case (name, sql) =>
+      bare.findAllMatchIn(sql).map(_.group(1))
+        .find(d => !BigDecimal(d).isWhole).map(name -> _)
+    }
+    assert(offenders.isEmpty, s"bare fractional double literals: $offenders")
+    assert(OracleSql.doubles(Seq(0.1, -2.5E-7)) ==
+      "[CAST('0.1' AS DOUBLE), CAST('-2.5E-7' AS DOUBLE)]")
+  }
+
+  test("the engine primitives are spelled in DuckDB only in OracleSql.scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no $root under ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
+    val sources = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+    finally walk.close()
+    assert(sources.exists(_._1 == "graft/OracleSql.scala"))
+    // the tokenizer, the md5-60 hash and the 3-word shingles; q74's
+    // Unicode tokenizer ([^\p{L}\p{N}_]+) is a different one
+    val primitives = Seq(
+      """string_split_regex\(lower\((?![^)]*\),\s*'\[\^\\+p\{L\})""".r,
+      """, 1, 15\)\)::BIGINT""".r,
+      """greatest\(len\(t\) - 1, 1\)""".r)
+    val respelled = for {
+      (f, text) <- sources if f != "graft/OracleSql.scala"
+      p <- primitives if p.findFirstIn(text).isDefined
+    } yield f -> p.toString
+    assert(respelled.isEmpty, s"primitives spelled outside OracleSql: $respelled")
+    // a fitted oracle comes back from its run (GraftQuery.fitted), never
+    // through module state
+    val stash = """\bvar\s+\w*OracleSql\b""".r
+    val stashes = sources.collect { case (f, text) if stash.findFirstIn(text).isDefined => f }
+    assert(stashes.isEmpty, s"oracle SQL held in a var: $stashes")
   }
 }

@@ -14,7 +14,7 @@ class RoutedChainSpec extends SparkSpec {
   test("routed chain: arms route, counts account for the 404 gate") {
     // localCheckpoint: the fixture's staged construction must not be
     // inlined into the chain's optimization (see the q218 scaladoc)
-    val recs = Multimodal.routedRecordsForTest(spark, dir).localCheckpoint()
+    val recs = Multimodal.routedRecords(spark, dir).localCheckpoint()
     val bodies = Warc.warcBodiesBytes(recs, "doc_id", "rec_bin")
     val pages = Http.httpPayloads(bodies, "doc_id", "body",
       keep = Seq("target_uri"),

@@ -5,6 +5,8 @@ Runs DuckDB oracle SQL (from Verify's oracle_sql.json) against the same
 parquet tables and compares with the Spark results Verify dumped.
 Usage: check_oracle.py <sfDir> <verifyOutDir> [--cap SECONDS]
 
+Each [ OK ] line gives the row count and the oracle's DuckDB seconds.
+
 Guards (round-13 lessons):
   * Every Spark result dir in outDir must have an oracle entry — a query
     missing from oracle_sql.json is a loud [MISS], not a silent skip
@@ -196,7 +198,7 @@ def main():
             print(f"[VAL ] {name}: col={c} row={i} spark={x!r} oracle={y!r}")
             n_bad += 1
         else:
-            print(f"[ OK ] {name}: {len(got)} rows")
+            print(f"[ OK ] {name}: {len(got)} rows, {secs:.2f} s")
             n_ok += 1
     for name, secs in slow:
         print(f"[WARN] {name}: oracle took {secs:.1f}s (> half the "
