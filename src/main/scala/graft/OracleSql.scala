@@ -26,12 +26,11 @@ package graft
   *   - it is not already MATERIALIZED,
   *   - it is not recursive. A CTE can only be recursive when the
   *     statement begins `WITH RECURSIVE` (SQL standard; DuckDB agrees),
-  *     so only then does a body mention of the CTE's own name mark it
-  *     recursive. A plain statement's CTE whose body merely aliases a
-  *     COLUMN to the CTE's name (`sq AS (SELECT … AS sq FROM ps)`) is
-  *     NOT recursive and must still be rewritten — the earlier
-  *     any-word-occurrence check silently skipped exactly that common
-  *     shape (ADVICE r13),
+  *     and only a body that reads its own name as a table — right after
+  *     FROM or JOIN — is recursive. A body that merely names a column or
+  *     list after the CTE (`sq AS (SELECT … AS sq FROM ps)`, q51's
+  *     `sh AS (SELECT … unnest(sh) … FROM (SELECT … AS sh …))`) is NOT
+  *     recursive and must still be rewritten (ADVICE r13),
   *   - the full statement references it at least twice outside its own
   *     header (single-reference CTEs stay plain so DuckDB can still
   *     inline + push filters through them).
@@ -103,6 +102,11 @@ object OracleSql {
     ("""(?i)\b""" + java.util.regex.Pattern.quote(word) + """\b""").r
       .findAllMatchIn(hay).size
 
+  /** True iff `sql` reads `table` in FROM or JOIN position. */
+  private def readsTable(sql: String, table: String): Boolean =
+    ("""(?i)\b(?:from|join)\s+""" + java.util.regex.Pattern.quote(table) + """\b""").r
+      .findFirstIn(sql).isDefined
+
   /** Strip leading whitespace and SQL comments (`-- …\n` line comments
     * and `/* … */` block comments, any number, any order) so prefix
     * classification sees the first real token. Unterminated block
@@ -153,7 +157,7 @@ object OracleSql {
         val body = sql.substring(open + 1, close)
         val bodyIsSelect = body.dropWhile(_.isWhitespace)
           .take(6).equalsIgnoreCase("select")
-        val selfRef = recursiveStmt && wordCount(body, name) > 0
+        val selfRef = recursiveStmt && readsTable(body, name)
         // references = total mentions − this definition's own header
         val refs = wordCount(sql, name) - 1
         if (bodyIsSelect && !selfRef && refs >= 2)

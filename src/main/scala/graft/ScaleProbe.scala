@@ -388,14 +388,10 @@ object ScaleProbe {
         // many-shard merge: one CMS + one GK state per shard over the
         // UNSCALED sf lineitem (the states, not the data, are the point)
         val nShards = 1024
-        val cmsState = udaf(new graft.mr.Aggregators.CmsStateAggregator(7, 2048),
-          org.apache.spark.sql.Encoders.scalaLong)
-        val gkState = udaf(new graft.mr.Aggregators.GkStateAggregator(0.01),
-          org.apache.spark.sql.Encoders.scalaDouble)
-        val cmsMerge = udaf(new graft.mr.Aggregators.CmsMergeAggregator(7, 2048),
-          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
-        val gkMerge = udaf(new graft.mr.Aggregators.GkMergeAggregator(0.95, 0.01),
-          org.apache.spark.sql.Encoders.BINARY)
+        import graft.mr.Aggregators.{Cms, Gk}
+        val (cms, gk) = (Cms(7, 2048), Gk(0.01))
+        val (cmsState, gkState) = (cms.state, gk.state)
+        val (cmsMerge, gkMerge) = (cms.foldState, gk.fold(Gk.quantile(0.95)))
         val li = graft.sources.Tables.load(spark, src, "lineitem")
           .withColumn("shard", pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(nShards)))
         val shardStates = li.groupBy(col("shard"))

@@ -1,40 +1,96 @@
 package graft.mr
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import scala.reflect.runtime.universe.TypeTag
 
-/** Typed `Aggregator[IN, BUF, OUT]` surface — the algebraic fast path for
-  * the reference's reduce contract (SURVEY §7.4): mergeable buffers give
-  * Spark map-side partial aggregation + spillable hash agg, which the
-  * generic `flatMapGroups` contract cannot.
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.QuantileSummaries
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.udaf
+
+/** Mergeable summaries — the algebraic fast path for the reference's
+  * reduce contract (SURVEY §7.4): mergeable buffers give Spark map-side
+  * partial aggregation + spillable hash agg, which the generic
+  * `flatMapGroups` contract cannot.
+  *
+  * A family declares its parameters once and defines only `zero`, `add`
+  * and `merge`, plus `store`/`load` when it has a persistable form. Two
+  * generic aggregators run every family: [[Summarize]] over input values
+  * and [[Fold]] over stored states, each finished by a function (an
+  * estimate, a quantile, identity or `store`).
   */
 object Aggregators {
 
-  /** Mean with an explicit mergeable buffer (sum, count). */
-  final case class AvgBuf(var sum: Double, var n: Long)
-  class AvgAggregator extends Aggregator[Double, AvgBuf, Double] {
-    def zero: AvgBuf = AvgBuf(0.0, 0L)
-    def reduce(b: AvgBuf, v: Double): AvgBuf = { b.sum += v; b.n += 1; b }
-    def merge(a: AvgBuf, b: AvgBuf): AvgBuf = { a.sum += b.sum; a.n += b.n; a }
-    def finish(b: AvgBuf): Double = if (b.n == 0) Double.NaN else b.sum / b.n
-    def bufferEncoder: Encoder[AvgBuf] = Encoders.product[AvgBuf]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+  /** A mergeable summary of `IN` values in an `S` buffer; `add` and
+    * `merge` may update and return their first argument. */
+  trait Summary[IN, S] extends Serializable {
+    def zero: S
+    def add(s: S, v: IN): S
+    def merge(a: S, b: S): S
+    def input: Encoder[IN]
+    def buffer: Encoder[S]
+
+    /** Typed aggregator over `IN` values, finished by `finish`. */
+    def summarize[OUT: TypeTag](finish: S => OUT): Aggregator[IN, S, OUT] =
+      new Summarize(this, finish, ExpressionEncoder[OUT]())
+    /** [[summarize]] as a column function. */
+    def column[OUT: TypeTag](finish: S => OUT): UserDefinedFunction =
+      udaf(summarize(finish), input)
   }
 
-  /** Bounded top-k (largest values) with a mergeable buffer — the
-    * constant-memory per-group alternative to collect_list + sort at
-    * scale.
-    */
-  class TopKAggregator(k: Int) extends Aggregator[Double, Seq[Double], Seq[Double]] {
+  /** A summary with an exportable state `ST`: per-shard/per-day states
+    * persist and fold later into one summary without re-scanning the
+    * rows behind them — the 100 TB refresh pattern. */
+  trait StoredSummary[IN, S, ST] extends Summary[IN, S] {
+    def store(s: S): ST
+    def load(st: ST): S
+    def stored: Encoder[ST]
+
+    /** Column function: the stored state of the input values. */
+    def state: UserDefinedFunction = udaf(new Summarize(this, store, stored), input)
+    /** Typed aggregator folding stored states, finished by `finish`. */
+    def folding[OUT: TypeTag](finish: S => OUT): Aggregator[ST, S, OUT] =
+      new Fold(this, finish, ExpressionEncoder[OUT]())
+    /** [[folding]] as a column function. */
+    def fold[OUT: TypeTag](finish: S => OUT): UserDefinedFunction = udaf(folding(finish), stored)
+    /** Column function: the stored state of the folded states. */
+    def foldState: UserDefinedFunction = udaf(new Fold(this, store, stored), stored)
+  }
+
+  /** Summarizes input values with `family`. */
+  final class Summarize[IN, S, OUT](family: Summary[IN, S], fin: S => OUT, out: Encoder[OUT])
+      extends Aggregator[IN, S, OUT] {
+    def zero: S = family.zero
+    def reduce(b: S, v: IN): S = family.add(b, v)
+    def merge(a: S, b: S): S = family.merge(a, b)
+    def finish(b: S): OUT = fin(b)
+    def bufferEncoder: Encoder[S] = family.buffer
+    def outputEncoder: Encoder[OUT] = out
+  }
+
+  /** Folds stored states of `family`. NULL state rows (empty shards or
+    * partitions) are skipped; an all-NULL input finishes the empty
+    * summary. States of another geometry fail loudly in `load`/`merge`. */
+  final class Fold[S, ST, OUT](family: StoredSummary[_, S, ST], fin: S => OUT, out: Encoder[OUT])
+      extends Aggregator[ST, S, OUT] {
+    def zero: S = family.zero
+    def reduce(b: S, st: ST): S = if (st == null) b else family.merge(b, family.load(st))
+    def merge(a: S, b: S): S = family.merge(a, b)
+    def finish(b: S): OUT = fin(b)
+    def bufferEncoder: Encoder[S] = family.buffer
+    def outputEncoder: Encoder[OUT] = out
+  }
+
+  /** Bounded top-k (largest values) — the constant-memory per-group
+    * alternative to collect_list + sort at scale. Buffer invariant:
+    * sorted descending, size ≤ k. */
+  final case class TopK(k: Int) extends Summary[Double, Seq[Double]] {
     def zero: Seq[Double] = Vector.empty
-    def reduce(b: Seq[Double], v: Double): Seq[Double] = insert(b, v)
-    def merge(a: Seq[Double], b: Seq[Double]): Seq[Double] = b.foldLeft(a)(insert)
-    def finish(b: Seq[Double]): Seq[Double] = b
-    // Buffer invariant: sorted descending, size ≤ k. A full buffer whose
-    // minimum already beats v is untouched (the common case on skewed
-    // streams); otherwise binary-search the insertion point — O(log k)
-    // compares + one O(k) copy, vs the O(k log k) re-sort per row.
-    private def insert(b: Seq[Double], v: Double): Seq[Double] = {
+    // A full buffer whose minimum already beats v is untouched (the
+    // common case on skewed streams); otherwise binary-search the
+    // insertion point — O(log k) compares + one O(k) copy, vs the
+    // O(k log k) re-sort per row.
+    def add(b: Seq[Double], v: Double): Seq[Double] = {
       if (b.size >= k && v <= b.last) b
       else {
         val vec = b.toVector
@@ -48,35 +104,31 @@ object Aggregators {
         if (nb.size > k) nb.take(k) else nb
       }
     }
-    def bufferEncoder: Encoder[Seq[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-    def outputEncoder: Encoder[Seq[Double]] = bufferEncoder
+    def merge(a: Seq[Double], b: Seq[Double]): Seq[Double] = b.foldLeft(a)(add)
+    def input: Encoder[Double] = Encoders.scalaDouble
+    def buffer: Encoder[Seq[Double]] = ExpressionEncoder[Seq[Double]]()
   }
 
   /** HyperLogLog distinct-count sketch with EXPORTABLE, mergeable register
     * state — what `approx_count_distinct` (whose HLL++ state stays inside
-    * the plan) cannot give: persist per-shard/per-day sketches and fold
-    * them incrementally, the 100 TB pattern where re-scanning history for
-    * every refresh is off the table. Register merge is element-wise max —
+    * the plan) cannot give. Register merge is element-wise max —
     * commutative, associative, idempotent — so shard sketches combine in
     * any order and re-merging a shard is harmless.
     *
     * Standard HLL (Flajolet et al. 2007): p-bit bucket index, rank =
     * leading zeros of the remaining bits + 1, harmonic-mean estimate with
     * the linear-counting small-range correction. Input is a pre-hashed
-    * 64-bit value (e.g. `xxhash64(col)`), keeping the aggregator
-    * type-agnostic.
+    * 64-bit value (e.g. `xxhash64(col)`), keeping the sketch
+    * type-agnostic. Stored form: one rank per byte (ranks ≤ 64-p+1 ≤ 127).
     */
-  object Hll {
-    def zero(p: Int): Array[Int] = {
-      // the bias constant in `estimate` is only valid for m >= 128 (p >= 7)
-      // and p > 18 allocates multi-MB register arrays for no accuracy gain;
-      // out-of-range precisions fail loudly (same philosophy as the merge
-      // precision guard) instead of silently estimating wrong
-      require(p >= 7 && p <= 18, s"HLL precision must be in [7, 18], got $p")
-      new Array[Int](1 << p)
-    }
-    def reduce(p: Int, b: Array[Int], hash: Long): Array[Int] = {
+  final case class Hll(p: Int = 12) extends StoredSummary[Long, Array[Int], Array[Byte]] {
+    // the bias constant in `estimate` is only valid for m >= 128 (p >= 7)
+    // and p > 18 allocates multi-MB register arrays for no accuracy gain;
+    // out-of-range precisions fail loudly instead of silently estimating
+    // wrong
+    require(p >= 7 && p <= 18, s"HLL precision must be in [7, 18], got $p")
+    def zero: Array[Int] = new Array[Int](1 << p)
+    def add(b: Array[Int], hash: Long): Array[Int] = {
       val idx = (hash >>> (64 - p)).toInt
       val w = hash << p
       val rank = if (w == 0) 64 - p + 1 else java.lang.Long.numberOfLeadingZeros(w) + 1
@@ -92,6 +144,14 @@ object Aggregators {
       while (i < a.length) { if (b(i) > a(i)) a(i) = b(i); i += 1 }
       a
     }
+    def store(b: Array[Int]): Array[Byte] = b.map(_.toByte)
+    def load(bytes: Array[Byte]): Array[Int] = bytes.map(_.toInt)
+    def input: Encoder[Long] = Encoders.scalaLong
+    def buffer: Encoder[Array[Int]] = ExpressionEncoder[Array[Int]]()
+    def stored: Encoder[Array[Byte]] = Encoders.BINARY
+  }
+
+  object Hll {
     def estimate(b: Array[Int]): Long = {
       val m = b.length
       val alpha = 0.7213 / (1.0 + 1.079 / m) // bias constant for m >= 128
@@ -105,69 +165,40 @@ object Aggregators {
         else e
       math.round(corrected)
     }
-    /** Register state ↔ bytes (one rank per byte; ranks ≤ 64-p+1 ≤ 127):
-      * the persistence format for per-shard sketches. */
-    def serialize(b: Array[Int]): Array[Byte] = b.map(_.toByte)
-    def deserialize(bytes: Array[Byte]): Array[Int] = bytes.map(_.toInt)
-  }
-
-  class HllAggregator(p: Int = 12) extends Aggregator[Long, Array[Int], Long] {
-    def zero: Array[Int] = Hll.zero(p)
-    def reduce(b: Array[Int], hash: Long): Array[Int] = Hll.reduce(p, b, hash)
-    def merge(a: Array[Int], b: Array[Int]): Array[Int] = Hll.merge(a, b)
-    def finish(b: Array[Int]): Long = Hll.estimate(b)
-    def bufferEncoder: Encoder[Array[Int]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Int]]()
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
-  }
-
-  /** Same sketch, but the OUTPUT is the serialized register state — the
-    * per-shard form a pipeline persists (e.g. one sketch row per
-    * day/partition) and later folds with [[Hll.merge]] for an incremental
-    * global estimate, without re-scanning history.
-    */
-  class HllStateAggregator(p: Int = 12) extends Aggregator[Long, Array[Int], Array[Byte]] {
-    def zero: Array[Int] = Hll.zero(p)
-    def reduce(b: Array[Int], hash: Long): Array[Int] = Hll.reduce(p, b, hash)
-    def merge(a: Array[Int], b: Array[Int]): Array[Int] = Hll.merge(a, b)
-    def finish(b: Array[Int]): Array[Byte] = Hll.serialize(b)
-    def bufferEncoder: Encoder[Array[Int]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Int]]()
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
   /** Count-Min sketch (Cormode & Muthukrishnan 2005) with exportable,
-    * mergeable counter state — the frequency-estimation sibling of the
-    * HLL above: persist one d×w counter table per shard/day, fold with
-    * element-wise SUM (exact, commutative, associative), query any item's
-    * approximate count later without keeping per-item state. Guarantees
-    * are one-sided: estimate ≥ true count always (counters only
-    * overcount on collisions), and estimate ≤ true + (e/w)·N with
-    * probability 1 − e^(−d).
+    * mergeable counter state — the frequency-estimation sibling of HLL:
+    * persist one d×w counter table per shard/day, fold with element-wise
+    * SUM (exact, commutative, associative), query any item's approximate
+    * count later without keeping per-item state. Guarantees are
+    * one-sided: estimate ≥ true count always (counters only overcount on
+    * collisions), and estimate ≤ true + (e/w)·N with probability
+    * 1 − e^(−d).
     *
     * Rows use Kirsch–Mitzenmacher double hashing over a pre-hashed 64-bit
     * input: row i indexes at (h₁ + i·h₂) mod w with h₁/h₂ the high/low
     * 32 bits — two independent-enough functions from one hash, and (the
     * real point here) the SAME arithmetic is expressible as Spark column
-    * expressions, so estimates read straight out of a state column with
-    * `element_at`/`least` — no UDF, no driver lookup (see Sketches q90).
+    * expressions, so estimates read straight out of the stored
+    * `array<long>` with `element_at`/`least` — no UDF, no driver lookup
+    * (see Sketches q90). The state IS the stored form.
     */
-  object Cms {
-    def zero(d: Int, w: Int): Array[Long] = {
-      require(d >= 1 && d <= 16 && w >= 16,
-        s"CMS needs 1 <= d <= 16 and w >= 16, got d=$d w=$w")
-      new Array[Long](d * w)
-    }
+  final case class Cms(d: Int = 7, w: Int = 2048)
+      extends StoredSummary[Long, Array[Long], Array[Long]] {
+    require(d >= 1 && d <= 16 && w >= 16,
+      s"CMS needs 1 <= d <= 16 and w >= 16, got d=$d w=$w")
+    def zero: Array[Long] = new Array[Long](d * w)
     /** Row-i counter index of a pre-hashed item — h₁ + i·h₂ stays well
       * under Long overflow (h₁, h₂ < 2³², i < 16). */
-    def index(hash: Long, i: Int, w: Int): Int = {
+    private def index(hash: Long, i: Int): Int = {
       val h1 = hash >>> 32
       val h2 = hash & 0xFFFFFFFFL
       ((h1 + i * h2) % w).toInt
     }
-    def reduce(d: Int, w: Int, b: Array[Long], hash: Long): Array[Long] = {
+    def add(b: Array[Long], hash: Long): Array[Long] = {
       var i = 0
-      while (i < d) { b(i * w + index(hash, i, w)) += 1L; i += 1 }
+      while (i < d) { b(i * w + index(hash, i)) += 1L; i += 1 }
       b
     }
     def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
@@ -177,26 +208,30 @@ object Aggregators {
       while (i < a.length) { a(i) += b(i); i += 1 }
       a
     }
-    def estimate(d: Int, w: Int, b: Array[Long], hash: Long): Long = {
+    def estimate(b: Array[Long], hash: Long): Long = {
       var est = Long.MaxValue
       var i = 0
       while (i < d) {
-        val c = b(i * w + index(hash, i, w))
+        val c = b(i * w + index(hash, i))
         if (c < est) est = c
         i += 1
       }
       est
     }
+    def store(b: Array[Long]): Array[Long] = b
+    def load(st: Array[Long]): Array[Long] = st
+    def input: Encoder[Long] = Encoders.scalaLong
+    def buffer: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def stored: Encoder[Array[Long]] = buffer
   }
 
-  /** Greenwald–Khanna quantile sketch aggregator — the third leg of the
+  /** Greenwald–Khanna quantile sketch — the third leg of the
     * exportable-sketch triad (HLL = distinct, CMS = frequency, GK =
     * quantiles). Wraps Spark's own `QuantileSummaries` (the engine's
-    * `percentile_approx` machinery) as a typed `Aggregator`, so the
-    * summary state is a first-class mergeable value: shard summaries
-    * (java-Serializable, a few KB at ε = 0.01) persist per
-    * partition/day and fold with `merge` for an incremental global
-    * quantile — no history re-scan.
+    * `percentile_approx` machinery), so the summary is a first-class
+    * mergeable value. Stored form: the java serialization of the
+    * COMPRESSED summary — a few KB at ε = 0.01, independent of the data
+    * size it summarizes.
     *
     * Guarantee: the reported value's RANK is within ε·n of the exact
     * quantile's (Greenwald & Khanna 2001), so the value lies between the
@@ -204,139 +239,38 @@ object Aggregators {
     * bounded (≤ summed-ε) guarantee. Both laws are asserted in
     * AggregatorsSpec; the q92 oracle hash-pins the error law per group.
     */
-  class GkQuantileAggregator(q: Double, relErr: Double = 0.01)
-      extends Aggregator[Double, org.apache.spark.sql.catalyst.util.QuantileSummaries, Double] {
-    import org.apache.spark.sql.catalyst.util.QuantileSummaries
-    require(q >= 0.0 && q <= 1.0, s"quantile must be in [0, 1], got $q")
+  final case class Gk(relErr: Double = 0.01)
+      extends StoredSummary[Double, QuantileSummaries, Array[Byte]] {
     def zero: QuantileSummaries =
       new QuantileSummaries(QuantileSummaries.defaultCompressThreshold, relErr)
-    def reduce(b: QuantileSummaries, v: Double): QuantileSummaries = b.insert(v)
+    def add(b: QuantileSummaries, v: Double): QuantileSummaries = b.insert(v)
     // GK merge requires both sides flushed; insert-after-merge re-buffers
     // safely into the head array, so the Aggregator contract holds
     def merge(a: QuantileSummaries, b: QuantileSummaries): QuantileSummaries =
       a.compress().merge(b.compress())
-    def finish(b: QuantileSummaries): Double =
-      b.compress().query(Seq(q)).map(_.head).getOrElse(Double.NaN)
-    // kryo: the summary is a plain Serializable class, not a product —
-    // only sketch-sized state crosses the wire, never row data
-    def bufferEncoder: Encoder[QuantileSummaries] = Encoders.kryo[QuantileSummaries]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
-  /** CMS aggregator over pre-hashed values (`xxhash64(col)`); the OUTPUT
-    * is the full counter state as `array<long>` — broadcastable, storable,
-    * and directly queryable with column expressions.
-    */
-  class CmsStateAggregator(d: Int = 7, w: Int = 2048)
-      extends Aggregator[Long, Array[Long], Array[Long]] {
-    def zero: Array[Long] = Cms.zero(d, w)
-    def reduce(b: Array[Long], hash: Long): Array[Long] = Cms.reduce(d, w, b, hash)
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = Cms.merge(a, b)
-    def finish(b: Array[Long]): Array[Long] = b
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  /** Folds STORED HLL states (the serialized registers a
-    * [[HllStateAggregator]] emitted, read back from parquet shards/days)
-    * into one ESTIMATE without touching the underlying data — the
-    * distinct-count leg of the stored-fold triad (GK/CMS already have
-    * merge forms): N sketch rows in, one register-wise max, one
-    * estimate out. An all-NULL input yields the empty state (estimate
-    * 0). Geometry mismatches fail loudly via [[Hll.merge]].
-    */
-  class HllMergeAggregator(p: Int = 14) extends Aggregator[Array[Byte], Array[Int], Long] {
-    def zero: Array[Int] = Hll.zero(p)
-    def reduce(b: Array[Int], st: Array[Byte]): Array[Int] =
-      if (st == null) b else Hll.merge(b, Hll.deserialize(st))
-    def merge(a: Array[Int], b: Array[Int]): Array[Int] = Hll.merge(a, b)
-    def finish(b: Array[Int]): Long = Hll.estimate(b)
-    def bufferEncoder: Encoder[Array[Int]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Int]]()
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
-  }
-
-  /** Folds STORED CMS states (the `array<long>` a [[CmsStateAggregator]]
-    * emitted, read back from parquet shards/days) into one state without
-    * touching the underlying data — the incremental-refresh aggregation:
-    * N sketch rows in, one sketch out, element-wise exact sum. Geometry
-    * mismatches fail loudly via [[Cms.merge]]'s length check; an all-NULL
-    * input yields the empty state (estimates 0 — no data, no counts).
-    */
-  class CmsMergeAggregator(d: Int = 7, w: Int = 2048)
-      extends Aggregator[Seq[Long], Array[Long], Array[Long]] {
-    def zero: Array[Long] = Cms.zero(d, w)
-    def reduce(b: Array[Long], st: Seq[Long]): Array[Long] =
-      if (st == null) b else Cms.merge(b, st.toArray)
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = Cms.merge(a, b)
-    def finish(b: Array[Long]): Array[Long] = b
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
-
-  /** GK summary (de)serialization: the summary is a plain Serializable
-    * class, so the exportable form is its java serialization of the
-    * COMPRESSED summary — a few KB at ε = 0.01, independent of the data
-    * size it summarizes.
-    */
-  object Gk {
-    import org.apache.spark.sql.catalyst.util.QuantileSummaries
-    def serialize(s: QuantileSummaries): Array[Byte] = {
+    def store(s: QuantileSummaries): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       val oos = new java.io.ObjectOutputStream(bos)
       try { oos.writeObject(s.compress()); oos.flush() } finally oos.close()
       bos.toByteArray
     }
-    def deserialize(bytes: Array[Byte]): QuantileSummaries = {
-      val ois = new java.io.ObjectInputStream(
-        new java.io.ByteArrayInputStream(bytes))
+    def load(bytes: Array[Byte]): QuantileSummaries = {
+      val ois = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes))
       try ois.readObject().asInstanceOf[QuantileSummaries] finally ois.close()
     }
+    def input: Encoder[Double] = Encoders.scalaDouble
+    // kryo: the summary is a plain Serializable class, not a product —
+    // only sketch-sized state crosses the wire, never row data
+    def buffer: Encoder[QuantileSummaries] = Encoders.kryo[QuantileSummaries]
+    def stored: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** GK aggregator whose OUTPUT is the serialized summary (`binary`) —
-    * the storable per-shard/per-day form of [[GkQuantileAggregator]],
-    * parquet-persistable like [[HllStateAggregator]]'s registers and
-    * [[CmsStateAggregator]]'s counters. Complete the triad's stored
-    * path with [[GkMergeAggregator]] to fold shards later.
-    */
-  class GkStateAggregator(relErr: Double = 0.01)
-      extends Aggregator[Double, org.apache.spark.sql.catalyst.util.QuantileSummaries, Array[Byte]] {
-    import org.apache.spark.sql.catalyst.util.QuantileSummaries
-    def zero: QuantileSummaries =
-      new QuantileSummaries(QuantileSummaries.defaultCompressThreshold, relErr)
-    def reduce(b: QuantileSummaries, v: Double): QuantileSummaries = b.insert(v)
-    def merge(a: QuantileSummaries, b: QuantileSummaries): QuantileSummaries =
-      a.compress().merge(b.compress())
-    def finish(b: QuantileSummaries): Array[Byte] = Gk.serialize(b)
-    def bufferEncoder: Encoder[QuantileSummaries] = Encoders.kryo[QuantileSummaries]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Folds STORED GK summaries (the `binary` a [[GkStateAggregator]]
-    * emitted) into one and reports quantile `q` of the merged summary —
-    * the incremental-refresh read path: N KB-sized summary rows in, one
-    * quantile out, history never re-scanned. Merging keeps the bounded
-    * (summed-ε) GK guarantee; NULL shard rows are skipped.
-    */
-  class GkMergeAggregator(q: Double, relErr: Double = 0.01)
-      extends Aggregator[Array[Byte], org.apache.spark.sql.catalyst.util.QuantileSummaries, Double] {
-    import org.apache.spark.sql.catalyst.util.QuantileSummaries
-    require(q >= 0.0 && q <= 1.0, s"quantile must be in [0, 1], got $q")
-    def zero: QuantileSummaries =
-      new QuantileSummaries(QuantileSummaries.defaultCompressThreshold, relErr)
-    def reduce(b: QuantileSummaries, bytes: Array[Byte]): QuantileSummaries =
-      if (bytes == null) b else b.compress().merge(Gk.deserialize(bytes))
-    def merge(a: QuantileSummaries, b: QuantileSummaries): QuantileSummaries =
-      a.compress().merge(b.compress())
-    def finish(b: QuantileSummaries): Double =
-      b.compress().query(Seq(q)).map(_.head).getOrElse(Double.NaN)
-    def bufferEncoder: Encoder[QuantileSummaries] = Encoders.kryo[QuantileSummaries]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+  object Gk {
+    /** Quantile `q` of a summary; NaN for an empty one. */
+    def quantile(q: Double): QuantileSummaries => Double = {
+      require(q >= 0.0 && q <= 1.0, s"quantile must be in [0, 1], got $q")
+      s => s.compress().query(Seq(q)).map(_.head).getOrElse(Double.NaN)
+    }
   }
 
   /** KMV / bottom-k distinct sketch (Bar-Yossef et al. 2002; Beyer et
@@ -356,13 +290,10 @@ object Aggregators {
     * the state holds fewer than k values it IS the whole set and the
     * estimate is exact. Buffer invariant: ascending, distinct, ≤ k.
     */
-  class MinKAggregator(k: Int) extends Aggregator[Long, Seq[Long], Seq[Long]] {
+  final case class MinK(k: Int) extends Summary[Long, Seq[Long]] {
     require(k >= 2 && k <= 65536, s"KMV size must be in [2, 65536], got $k")
     def zero: Seq[Long] = Vector.empty
-    def reduce(b: Seq[Long], h: Long): Seq[Long] = insert(b, h)
-    def merge(a: Seq[Long], b: Seq[Long]): Seq[Long] = b.foldLeft(a)(insert)
-    def finish(b: Seq[Long]): Seq[Long] = b
-    private def insert(b: Seq[Long], v: Long): Seq[Long] = {
+    def add(b: Seq[Long], v: Long): Seq[Long] = {
       if (b.size >= k && v >= b.last) b
       else {
         val vec = b.toVector
@@ -379,9 +310,9 @@ object Aggregators {
         }
       }
     }
-    def bufferEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-    def outputEncoder: Encoder[Seq[Long]] = bufferEncoder
+    def merge(a: Seq[Long], b: Seq[Long]): Seq[Long] = b.foldLeft(a)(add)
+    def input: Encoder[Long] = Encoders.scalaLong
+    def buffer: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
   }
 
   /** Misra–Gries frequent-items summary (Misra & Gries 1982) with the
@@ -404,13 +335,62 @@ object Aggregators {
     * nondeterministic partial-merge order — which is what lets q125 pin
     * them in a hash-compared oracle even though the summary CONTENT is
     * merge-order-dependent (only exact values and law booleans are
-    * output, never raw summary state).
+    * output, never raw summary state). Folding stored states keeps the
+    * same laws: error bounds SUM across folds and stay <= n/(k+1).
+    *
+    * Stored form `[ n | err | size | h0 c0 h1 c1 … | k ]`, items sorted by
+    * (count desc, hash) so the artifact is canonical for a GIVEN summary.
+    * The summary's own k rides as the TRAILING element (after the items,
+    * so every positional header/item parse — q125's and q137's column
+    * folds — is unaffected): `load` requires it to equal the family's k,
+    * making a cross-k fold fail loudly even when the state happens to
+    * hold fewer than k items (ADVICE r10).
     */
+  final case class MisraGries(k: Int)
+      extends StoredSummary[Long, MisraGries.Counters, Seq[Long]] {
+    import MisraGries.Counters
+    require(k >= 1 && k <= 65536, s"MG summary size must be in [1, 65536], got $k")
+    def zero: Counters = new Counters(k)
+    def add(s: Counters, h: Long): Counters = s.update(h)
+    def merge(a: Counters, b: Counters): Counters = a.absorb(b)
+    def store(s: Counters): Seq[Long] = {
+      val items = s.m.entrySet().toArray(Array.empty[java.util.Map.Entry[Long, Array[Long]]])
+        .sortBy(e => (-e.getValue()(0), e.getKey))
+      val out = new Array[Long](4 + 2 * items.length)
+      out(0) = s.n; out(1) = s.err; out(2) = items.length.toLong
+      var i = 0
+      while (i < items.length) {
+        out(3 + 2 * i) = items(i).getKey
+        out(4 + 2 * i) = items(i).getValue()(0)
+        i += 1
+      }
+      out(out.length - 1) = k.toLong
+      out.toSeq
+    }
+    def load(st: Seq[Long]): Counters = {
+      require(st.length >= 4 && st.length == 4 + 2 * st(2).toInt,
+        s"malformed MG state: length ${st.length}, declared size ${if (st.length >= 3) st(2) else -1}")
+      require(st.last == k.toLong,
+        s"stored MG state was built with k=${st.last}, cannot fold at k=$k")
+      val s = new Counters(k)
+      s.n = st(0); s.err = st(1)
+      var i = 0
+      while (i < st(2).toInt) {
+        s.m.put(st(3 + 2 * i), Array(st(4 + 2 * i)))
+        i += 1
+      }
+      require(s.m.size <= k, s"stored MG state holds ${s.m.size} items > k=$k")
+      s
+    }
+    def input: Encoder[Long] = Encoders.scalaLong
+    // kryo: only O(k) state crosses the wire, never row data
+    def buffer: Encoder[Counters] = Encoders.kryo[Counters]
+    def stored: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
+  }
+
   object MisraGries {
-    /** Mutable summary buffer. Plain Serializable (kryo encoder): only
-      * O(k) state crosses the wire, never row data. */
-    final class Summary(val k: Int) extends Serializable {
-      require(k >= 1 && k <= 65536, s"MG summary size must be in [1, 65536], got $k")
+    /** Mutable summary buffer: ≤ k counters, stream length, error. */
+    final class Counters(val k: Int) extends Serializable {
       var n: Long = 0L
       var err: Long = 0L // total decrement applied to every true count
       val m = new java.util.HashMap[Long, Array[Long]](k * 2)
@@ -436,7 +416,7 @@ object Aggregators {
         * all and drop the non-positive — error grows by exactly that
         * subtrahend, keeping true(x) - count(x) <= E_a + E_b + s <=
         * (n_a + n_b) / (k + 1) (Agarwal et al. 2012, Thm 2.1). */
-      def absorb(o: Summary): this.type = {
+      def absorb(o: Counters): this.type = {
         require(o.k == k, s"cannot merge MG summaries of different k: $k vs ${o.k}")
         n += o.n
         err += o.err
@@ -461,82 +441,7 @@ object Aggregators {
         }
         this
       }
-
-      /** Exportable flat form `[ n | err | size | h0 c0 h1 c1 … | k ]` —
-        * the per-shard row a pipeline persists and later folds with
-        * [[MgMergeAggregator]]; items sorted by (count desc, hash) so the
-        * stored artifact is canonical for a GIVEN summary. The summary's
-        * own k rides as the TRAILING element (after the items, so every
-        * positional header/item parse — q125's and q137's column folds —
-        * is unaffected): [[fromState]] requires it to equal the folding
-        * k, making a cross-k fold fail loudly even when the state
-        * happens to hold fewer than k items (ADVICE r10). */
-      def toState: Seq[Long] = {
-        val items = m.entrySet().toArray(Array.empty[java.util.Map.Entry[Long, Array[Long]]])
-          .sortBy(e => (-e.getValue()(0), e.getKey))
-        val out = new Array[Long](4 + 2 * items.length)
-        out(0) = n; out(1) = err; out(2) = items.length.toLong
-        var i = 0
-        while (i < items.length) {
-          out(3 + 2 * i) = items(i).getKey
-          out(4 + 2 * i) = items(i).getValue()(0)
-          i += 1
-        }
-        out(out.length - 1) = k.toLong
-        out.toSeq
-      }
     }
-
-    def fromState(k: Int, st: Seq[Long]): Summary = {
-      require(st.length >= 4 && st.length == 4 + 2 * st(2).toInt,
-        s"malformed MG state: length ${st.length}, declared size ${if (st.length >= 3) st(2) else -1}")
-      require(st.last == k.toLong,
-        s"stored MG state was built with k=${st.last}, cannot fold at k=$k")
-      val s = new Summary(k)
-      s.n = st(0); s.err = st(1)
-      var i = 0
-      while (i < st(2).toInt) {
-        s.m.put(st(3 + 2 * i), Array(st(4 + 2 * i)))
-        i += 1
-      }
-      require(s.m.size <= k, s"stored MG state holds ${s.m.size} items > k=$k")
-      s
-    }
-  }
-
-  /** MG aggregator over pre-hashed values (`xxhash64(col)`); the OUTPUT
-    * is the flat summary state — persistable per shard/day like the
-    * HLL/CMS/GK state forms, foldable later by [[MgMergeAggregator]].
-    */
-  class MgStateAggregator(k: Int)
-      extends Aggregator[Long, MisraGries.Summary, Seq[Long]] {
-    def zero: MisraGries.Summary = new MisraGries.Summary(k)
-    def reduce(b: MisraGries.Summary, h: Long): MisraGries.Summary = b.update(h)
-    def merge(a: MisraGries.Summary, b: MisraGries.Summary): MisraGries.Summary = a.absorb(b)
-    def finish(b: MisraGries.Summary): Seq[Long] = b.toState
-    def bufferEncoder: Encoder[MisraGries.Summary] = Encoders.kryo[MisraGries.Summary]
-    def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-  }
-
-  /** Folds STORED MG states (the flat `array<long>` a [[MgStateAggregator]]
-    * emitted, read back from parquet shards/days) into one summary without
-    * re-touching rows — the incremental-refresh read path, with the same
-    * worst-case laws as a single pass (error bounds SUM across folds and
-    * stay <= n/(k+1) by the mergeable-summaries theorem). NULL shard rows
-    * are skipped; k mismatches fail loudly via the trailing stored-k
-    * header element, regardless of how many items the state holds.
-    */
-  class MgMergeAggregator(k: Int)
-      extends Aggregator[Seq[Long], MisraGries.Summary, Seq[Long]] {
-    def zero: MisraGries.Summary = new MisraGries.Summary(k)
-    def reduce(b: MisraGries.Summary, st: Seq[Long]): MisraGries.Summary =
-      if (st == null) b else b.absorb(MisraGries.fromState(k, st))
-    def merge(a: MisraGries.Summary, b: MisraGries.Summary): MisraGries.Summary = a.absorb(b)
-    def finish(b: MisraGries.Summary): Seq[Long] = b.toState
-    def bufferEncoder: Encoder[MisraGries.Summary] = Encoders.kryo[MisraGries.Summary]
-    def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
 
   /** Exact-integer first/second moments of a dim-dimensional embedding
@@ -549,21 +454,24 @@ object Aggregators {
     * bit-identical at any parallelism AND replayable by an external
     * engine (the q53/q103 exactness scheme, extended to products).
     *
-    * Buffer/output layout (flat LONG array, driver-side consumers index
-    * it): `[ n | Sx(0..d-1) | upper-triangle ΣSxy row-major (d(d+1)/2) ]`.
-    * The aggregator does d(d+1)/2 multiply-adds per row; state is
-    * ~8·(1+d+d(d+1)/2) bytes (17 KB at d=64) per partition — partial
-    * aggregation applies, the shuffle carries one buffer per task, and
-    * per-shard states can be persisted and folded later by summing
-    * element-wise (same merge the triad sketches use).
+    * Buffer layout (summarizing and folding alike):
+    * `[ n | Sx(0..d-1) | upper-triangle ΣSxy row-major (d(d+1)/2) ]` —
+    * d(d+1)/2 multiply-adds per row, ~8·(1+d+d(d+1)/2) bytes (17 KB at
+    * d=64) per partition. Element-wise BIGINT addition is the merge, so a
+    * fold of persisted shards is bit-identical to a single pass over the
+    * union of their rows (SimilaritySpec pins this; q109 pins it against
+    * q104's oracle).
+    *
+    * Stored form expands the triangle to the FULL row-major d×d matrix,
+    * `[ n | Sx(d) | Sxy(d·d) ]`, so a consumer derives (i, j) from a
+    * flat position with pure integer arithmetic (p DIV d, p MOD d), which
+    * an oracle can replay without inverting triangle indexing.
     */
-  class MomentsAggregator(dim: Int)
-      extends Aggregator[Seq[Double], Array[Long], Seq[Long]] {
+  final case class Moments(dim: Int) extends StoredSummary[Seq[Double], Array[Long], Seq[Long]] {
     require(dim >= 1, s"dim must be positive, got $dim")
-    private val nPairs = dim * (dim + 1) / 2
     private val scale = 1099511627776.0 // 2^40
-    def zero: Array[Long] = new Array[Long](1 + dim + nPairs)
-    def reduce(b: Array[Long], v: Seq[Double]): Array[Long] = {
+    def zero: Array[Long] = new Array[Long](1 + dim + dim * (dim + 1) / 2)
+    def add(b: Array[Long], v: Seq[Double]): Array[Long] = {
       require(v.length == dim, s"expected $dim dims, got ${v.length}")
       val a = v.toArray
       b(0) += 1L
@@ -585,11 +493,7 @@ object Aggregators {
       while (i < a.length) { a(i) += b(i); i += 1 }
       a
     }
-    /** Output expands the triangle to the FULL row-major d×d matrix:
-      * `[ n | Sx(d) | Sxy(d*d) ]` — then a consumer derives (i, j) from a
-      * flat position with pure integer arithmetic (p DIV d, p MOD d),
-      * which an oracle can replay without inverting triangle indexing. */
-    def finish(b: Array[Long]): Seq[Long] = {
+    def store(b: Array[Long]): Seq[Long] = {
       val out = new Array[Long](1 + dim + dim * dim)
       System.arraycopy(b, 0, out, 0, 1 + dim)
       var i = 0
@@ -605,46 +509,23 @@ object Aggregators {
       }
       out.toSeq
     }
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-  }
-
-  /** Folds STORED moment states (the flat `array<long>` a
-    * [[MomentsAggregator]] emitted, full-matrix layout
-    * `[ n | Sx(d) | Sxy(d·d) ]`) into one by element-wise sum — the
-    * incremental-refresh read path that completes the triad discipline
-    * (HLL/CMS/GK) for covariance: N ~33 KB state rows in, one combined
-    * state out, history never re-scanned. Element-wise BIGINT addition
-    * is EXACTLY the partial-merge the live aggregator performs, so a
-    * fold of persisted shards is bit-identical to a single pass over
-    * the union of their rows (SimilaritySpec pins this; q109 pins it
-    * against q104's oracle). NULL shard rows are skipped.
-    */
-  class MomentsMergeAggregator(dim: Int)
-      extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
-    require(dim >= 1, s"dim must be positive, got $dim")
-    private val len = 1 + dim + dim * dim
-    def zero: Array[Long] = new Array[Long](len)
-    def reduce(b: Array[Long], v: Seq[Long]): Array[Long] = {
-      if (v == null) return b
-      require(v.length == len,
-        s"stored moments state must have ${len} entries (dim=$dim), got ${v.length}")
-      val a = v.toArray
+    def load(st: Seq[Long]): Array[Long] = {
+      require(st.length == 1 + dim + dim * dim,
+        s"stored moments state must have ${1 + dim + dim * dim} entries (dim=$dim), got ${st.length}")
+      val full = st.toArray
+      val b = zero
+      System.arraycopy(full, 0, b, 0, 1 + dim)
       var i = 0
-      while (i < len) { b(i) += a(i); i += 1 }
+      var t = 1 + dim
+      while (i < dim) {
+        System.arraycopy(full, 1 + dim + i * dim + i, b, t, dim - i)
+        t += dim - i
+        i += 1
+      }
       b
     }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < len) { a(i) += b(i); i += 1 }
-      a
-    }
-    def finish(b: Array[Long]): Seq[Long] = b.toSeq
-    def bufferEncoder: Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
+    def input: Encoder[Seq[Double]] = ExpressionEncoder[Seq[Double]]()
+    def buffer: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def stored: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{GraftQuery, OracleSql}
 import graft.functions.{MinHashBands, ShingleKeys, SortedKeyOverlap}
 import graft.functions.TextFunctions._
+import graft.mr.Aggregators.Hll
 import graft.sources.Tables
 
 /** Deduplication operators for large-scale corpus curation: exact
@@ -853,23 +854,19 @@ object Dedup {
   // intersection/Jaccard by inclusion-exclusion. The decision this
   // feeds ("skip the cross-dedup / run it / run it banded") needs ~%
   // accuracy, exactly what p=14 (0.8% rsd) gives for KB of state.
+  private val shingleHll = Hll(14)
 
   /** One corpus's shingle-set HLL registers (serialized). */
-  def shingleHllState(docs: DataFrame, p: Int = 14): Array[Byte] = {
-    val st = org.apache.spark.sql.functions.udaf(
-      new graft.mr.Aggregators.HllStateAggregator(p),
-      org.apache.spark.sql.Encoders.scalaLong)
+  def shingleHllState(docs: DataFrame): Array[Byte] =
     shingleRows(docs).select(xxhash64(col("s")).as("h"))
-      .agg(st(col("h")).as("state")).head().getAs[Array[Byte]](0)
-  }
+      .agg(shingleHll.state(col("h")).as("state")).head().getAs[Array[Byte]](0)
 
   /** (estA, estB, estUnion) from two serialized states — driver-side
     * register math, no data touched. */
   def overlapEstimates(a: Array[Byte], b: Array[Byte]): (Long, Long, Long) = {
-    import graft.mr.Aggregators.Hll
-    val ra = Hll.deserialize(a)
-    val rb = Hll.deserialize(b)
-    val union = Hll.merge(ra.clone(), rb) // merge mutates its first arg
+    val ra = shingleHll.load(a)
+    val rb = shingleHll.load(b)
+    val union = shingleHll.merge(ra.clone(), rb) // merge mutates its first arg
     (Hll.estimate(ra), Hll.estimate(rb), Hll.estimate(union))
   }
 
@@ -940,16 +937,11 @@ object Dedup {
   // error laws per pair.
 
   /** One serialized HLL shingle state per group — a single grouped scan. */
-  def shingleHllStatesByGroup(docs: DataFrame, groupCol: String,
-      p: Int = 14): Map[String, Array[Byte]] = {
-    val st = org.apache.spark.sql.functions.udaf(
-      new graft.mr.Aggregators.HllStateAggregator(p),
-      org.apache.spark.sql.Encoders.scalaLong)
+  def shingleHllStatesByGroup(docs: DataFrame, groupCol: String): Map[String, Array[Byte]] =
     shingleRowsWithGroup(docs, groupCol)
       .select(col(groupCol), xxhash64(col("s")).as("h"))
-      .groupBy(col(groupCol)).agg(st(col("h")).as("state"))
+      .groupBy(col(groupCol)).agg(shingleHll.state(col("h")).as("state"))
       .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-  }
 
   /** Pairwise (a, b, estA, estB, estUnion) for every unordered group
     * pair — driver register math over the per-group states. */
@@ -1050,8 +1042,7 @@ object Dedup {
     GraftQuery(
       "q132_kmv_set_algebra",
       (s, dir) => {
-        val mink = udaf(new graft.mr.Aggregators.MinKAggregator(k),
-          org.apache.spark.sql.Encoders.scalaLong)
+        val mink = graft.mr.Aggregators.MinK(k).column(identity)
         val sh = shingleRowsWithGroup(Tables.documents(s, dir), "source")
           .select(col("source"),
             graft.functions.TextFunctions.hash60(col("s")).as("h"))

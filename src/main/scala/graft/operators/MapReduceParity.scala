@@ -134,7 +134,7 @@ object MapReduceParity {
       import s.implicits._
       val ds = Tables.orders(s, dir)
         .select(col("o_custkey"), col("o_totalprice")).as[(Long, Double)]
-      val top3 = new graft.mr.Aggregators.TopKAggregator(3).toColumn
+      val top3 = graft.mr.Aggregators.TopK(3).summarize(identity).toColumn
       ds.groupByKey(_._1).mapValues(_._2).agg(top3)
         .toDF("o_custkey", "tops")
         .select(col("o_custkey"), posexplode(col("tops")).as(Seq("i", "o_totalprice")))

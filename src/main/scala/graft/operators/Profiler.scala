@@ -198,8 +198,7 @@ object Profiler {
   def frequentValues(df: DataFrame, cols: Seq[String], k: Int,
       topPerCol: Int): DataFrame = {
     require(cols.nonEmpty && cols.size <= 32, "1..32 profiled columns")
-    val mg = udaf(new graft.mr.Aggregators.MgStateAggregator(k),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val mg = graft.mr.Aggregators.MisraGries(k).state
     val states = df.agg(
       mg(xxhash64(col(cols.head))).as(s"st_${cols.head}"),
       cols.tail.map(c => mg(xxhash64(col(c))).as(s"st_$c")) :+

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.{GraftQuery, OracleSql}
 import graft.functions.TextFunctions.hash60
+import graft.mr.Aggregators.Moments
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (`array<float>`, 64-dim).
@@ -735,7 +736,7 @@ object Similarity {
   // Embedding covariance + PCA — the embedding-hygiene pass (whitening,
   // anisotropy checks, dominant-direction removal à la all-but-the-top)
   // a pipeline runs before indexing or clustering. One mergeable
-  // MomentsAggregator buffer holds every first/second moment as exact
+  // `Moments` buffer holds every first/second moment as exact
   // floor-scaled BIGINTs, so the full d×d covariance costs ONE scan +
   // one ~17 KB buffer per task — no d²-keyed shuffle, no per-pair pass —
   // and the arithmetic is bit-replayable by the oracle. Eigen-extraction
@@ -749,8 +750,7 @@ object Similarity {
     * full-matrix layout the aggregator emits.
     */
   def covariance(embeddings: DataFrame, dim: Int): DataFrame = {
-    val mom = udaf(new graft.mr.Aggregators.MomentsAggregator(dim),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())
+    val mom = Moments(dim).state
     covarianceOfMoments(
       embeddings.select(col("embedding").cast("array<double>").as("v"))
         .agg(mom(col("v")).as("m")), dim)
@@ -874,8 +874,7 @@ object Similarity {
     * Sharding is hash-deterministic on vec_id. */
   def momentShardStates(embeddings: DataFrame, dim: Int, shards: Int): DataFrame = {
     require(shards >= 1, s"shards must be positive, got $shards")
-    val mom = udaf(new graft.mr.Aggregators.MomentsAggregator(dim),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())
+    val mom = Moments(dim).state
     embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("shard", pmod(xxhash64(col("vec_id")), lit(shards)))
@@ -888,8 +887,7 @@ object Similarity {
     * covariance tail — N KB-sized rows in, the full (i, j, n, cov)
     * triangle out. */
   def covarianceFromStates(states: DataFrame, dim: Int): DataFrame = {
-    val momMerge = udaf(new graft.mr.Aggregators.MomentsMergeAggregator(dim),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
+    val momMerge = Moments(dim).foldState
     covarianceOfMoments(states.agg(momMerge(col("m")).as("m")), dim)
   }
 
@@ -937,8 +935,7 @@ object Similarity {
     * arithmetic the covariance and the oracle use. */
   def meanVector(embeddings: DataFrame, dim: Int): Array[Double] = {
     val scale = 1099511627776.0
-    val mom = udaf(new graft.mr.Aggregators.MomentsAggregator(dim),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())
+    val mom = Moments(dim).state
     val m = embeddings.select(col("embedding").cast("array<double>").as("v"))
       .agg(mom(col("v")).as("m")).head().getSeq[Long](0)
     val n = m(0).toDouble

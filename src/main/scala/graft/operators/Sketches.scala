@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.{GraftQuery, OracleSql}
+import graft.mr.Aggregators.{Cms, Gk, Hll, MisraGries}
 import graft.sources.Tables
 
 /** Approximate/sketch aggregates (SURVEY §2.14): HLL++ distinct counts and
@@ -124,8 +125,7 @@ object Sketches {
   private val q67 = GraftQuery(
     "q67_hll_mergeable",
     (s, dir) => {
-      val hll = udaf(new graft.mr.Aggregators.HllAggregator(12),
-        org.apache.spark.sql.Encoders.scalaLong)
+      val hll = Hll(12).column(Hll.estimate)
       Tables.lineitemWide(s, dir)
         .groupBy(col("l_returnflag"), col("l_partkey")).agg(Map.empty[String, String])
         .groupBy(col("l_returnflag"))
@@ -176,8 +176,7 @@ object Sketches {
     (s, dir) => {
       val d = 7; val w = 2048
       import graft.functions.TextFunctions.tokens
-      val cms = udaf(new graft.mr.Aggregators.CmsStateAggregator(d, w),
-        org.apache.spark.sql.Encoders.scalaLong)
+      val cms = Cms(d, w).state
       val toks = Tables.documents(s, dir)
         .select(col("source"), explode(tokens(col("text"))).as("w"))
         .withColumn("h", xxhash64(col("w")))
@@ -230,10 +229,8 @@ object Sketches {
   private val q92 = GraftQuery(
     "q92_gk_quantiles",
     (s, dir) => {
-      val gk50 = udaf(new graft.mr.Aggregators.GkQuantileAggregator(0.50),
-        org.apache.spark.sql.Encoders.scalaDouble)
-      val gk95 = udaf(new graft.mr.Aggregators.GkQuantileAggregator(0.95),
-        org.apache.spark.sql.Encoders.scalaDouble)
+      val gk50 = Gk().column(Gk.quantile(0.50))
+      val gk95 = Gk().column(Gk.quantile(0.95))
       val p = col("l_extendedprice").cast("double")
       Tables.lineitemWide(s, dir)
         .groupBy(col("l_returnflag"))
@@ -281,12 +278,10 @@ object Sketches {
   private val q94 = GraftQuery(
     "q94_gk_stored_shards",
     (s, dir) => {
-      val gkState = udaf(new graft.mr.Aggregators.GkStateAggregator(0.01),
-        org.apache.spark.sql.Encoders.scalaDouble)
-      val gk50m = udaf(new graft.mr.Aggregators.GkMergeAggregator(0.50, 0.01),
-        org.apache.spark.sql.Encoders.BINARY)
-      val gk95m = udaf(new graft.mr.Aggregators.GkMergeAggregator(0.95, 0.01),
-        org.apache.spark.sql.Encoders.BINARY)
+      val gk = Gk(0.01)
+      val gkState = gk.state
+      val gk50m = gk.fold(Gk.quantile(0.50))
+      val gk95m = gk.fold(Gk.quantile(0.95))
       val p = col("l_extendedprice").cast("double")
       val li = Tables.lineitemWide(s, dir)
       // 16 deterministic shards per group — the per-day/per-partition
@@ -327,14 +322,12 @@ object Sketches {
   // day" folds 7 KB-sized register sets per output row instead of
   // re-scanning a week of events. Window fold is distributed (each day's
   // state explodes to the ≤7 windows it covers, then a register-max
-  // merge aggregator per window — [[graft.mr.Aggregators.HllMergeAggregator]],
-  // the distinct leg the GK/CMS stored folds already had). Oracle = the
+  // fold per window, finished by the HLL estimate — the distinct leg the
+  // GK/CMS stored folds already had). Oracle = the
   // q43 error-law scheme: exact trailing distincts value-matched, the
   // fold's estimate pinned within 5%.
   def dailyUserStates(events: org.apache.spark.sql.DataFrame, p: Int = 14) = {
-    val st = org.apache.spark.sql.functions.udaf(
-      new graft.mr.Aggregators.HllStateAggregator(p),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val st = Hll(p).state
     events
       .select(expr("CAST((unix_timestamp(ts) - pmod(unix_timestamp(ts), 86400)) / 86400 AS BIGINT)")
         .as("day"), xxhash64(col("user_id")).as("h"))
@@ -345,9 +338,7 @@ object Sketches {
     * day, folded from stored daily states. */
   def trailingDistinct(states: org.apache.spark.sql.DataFrame,
       windowDays: Int, p: Int = 14): org.apache.spark.sql.DataFrame = {
-    val mg = org.apache.spark.sql.functions.udaf(
-      new graft.mr.Aggregators.HllMergeAggregator(p),
-      org.apache.spark.sql.Encoders.BINARY)
+    val mg = Hll(p).fold(Hll.estimate)
     val days = states.select(col("day").as("win_day"))
     states
       .select(col("day"), col("state"),
@@ -385,10 +376,8 @@ object Sketches {
     (s, dir) => {
       val k = 255
       import graft.functions.TextFunctions.tokens
-      val mg = udaf(new graft.mr.Aggregators.MgStateAggregator(k),
-        org.apache.spark.sql.Encoders.scalaLong)
-      val mgFold = udaf(new graft.mr.Aggregators.MgMergeAggregator(k),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
+      val mg = MisraGries(k).state
+      val mgFold = MisraGries(k).foldState
       // bigrams, not unigrams: the synthetic vocabulary is ~31 words —
       // smaller than any useful k, which would never exercise eviction
       // in the declared plan; the ~950-bigram space does, while the top

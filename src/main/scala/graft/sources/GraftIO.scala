@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.YamrPartition
@@ -10,8 +10,8 @@ import graft.functions.YamrPartition
   *
   * The reference's entire I/O surface is: chunked text scan (one DFS chunk
   * per map task, yamr mapper.py:74-80) and a JSON-array-per-region sink
-  * (reducer.py:141-150). Spark equivalents are declared here, plus the
-  * engine-native columnar formats.
+  * (reducer.py:141-150). Spark equivalents are declared here; csv, json,
+  * parquet and orc go through `spark.read` / `df.write` directly.
   */
 object GraftIO {
 
@@ -39,23 +39,7 @@ object GraftIO {
     s.sparkContext.wholeTextFiles(path).toDS()
   }
 
-  def readJson(s: SparkSession, path: String): DataFrame = s.read.json(path)
-
-  def readCsv(s: SparkSession, path: String): DataFrame =
-    s.read.option("header", "true").option("inferSchema", "true").csv(path)
-
-  def readParquet(s: SparkSession, path: String): DataFrame = s.read.parquet(path)
-
   // ---- sinks --------------------------------------------------------
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
 
   /** Region-partitioned JSON sink — the reference's result layout: output
     * placed by the byte-exact yamr key hash into `n` files, one JSON doc

@@ -49,6 +49,21 @@ class OracleSqlSpec extends AnyFunSuite {
     assert(out.contains("sq AS MATERIALIZED (SELECT x * x AS sq"))
   }
 
+  test("in WITH RECURSIVE, only a FROM/JOIN read of its own name makes a CTE recursive") {
+    // q51's shape: `sh` names its inner list and column after itself but
+    // never reads itself; `reach` joins itself and must stay plain
+    val sql = "WITH RECURSIVE " +
+      "sh AS (SELECT doc_id, unnest(sh) AS s FROM (SELECT doc_id, [t] AS sh FROM docs) s0), " +
+      "edges AS (SELECT a.doc_id AS da, b.doc_id AS db FROM sh a JOIN sh b USING (s)), " +
+      "reach AS (SELECT doc_id AS a, doc_id AS b FROM docs UNION " +
+      "SELECT r.a, e.db FROM reach r JOIN edges e ON e.da = r.b) " +
+      "SELECT a, MIN(b) FROM reach JOIN reach r2 USING (a, b) GROUP BY a"
+    val out = OracleSql.materializeCtes(sql)
+    assert(out.contains("sh AS MATERIALIZED (SELECT doc_id, unnest(sh)"))
+    assert(out.contains("reach AS (SELECT doc_id AS a"))
+    assert(!out.contains("reach AS MATERIALIZED"))
+  }
+
   test("WITH recursive_docs is NOT a recursive statement; WITH\\nRECURSIVE is (code-review r14)") {
     // a CTE merely NAMED with a 'recursive' prefix must still be
     // materialized when multi-referenced and self-aliasing
@@ -147,11 +162,12 @@ class OracleSqlSpec extends AnyFunSuite {
           val isSelect =
             body.dropWhile(_.isWhitespace).take(6).equalsIgnoreCase("select")
           // same rule as materializeCtes: self-reference only possible
-          // in a WITH RECURSIVE statement (a plain CTE aliasing a column
-          // to its own name is not recursive and must be materialized)
+          // in a WITH RECURSIVE statement, and only as a FROM/JOIN read
+          // (a CTE naming a column or list after itself is not recursive
+          // and must be materialized)
           val selfRef = recursiveStmt &&
-            ("""(?i)\b""" + java.util.regex.Pattern.quote(cte) + """\b""").r
-              .findAllMatchIn(body).nonEmpty
+            ("""(?i)\b(?:from|join)\s+""" + java.util.regex.Pattern.quote(cte) + """\b""").r
+              .findFirstIn(body).nonEmpty
           assert(!(isSelect && !selfRef && refs >= 2),
             s"$name: plain CTE '$cte' referenced ${refs}x — " +
               "DuckDB inlines every reference; needs AS MATERIALIZED")

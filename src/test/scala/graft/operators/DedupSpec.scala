@@ -237,7 +237,7 @@ class DedupSpec extends SparkSpec {
 
   test("corpus overlap: shard-merged HLL state == whole-corpus state; laws hold") {
     import org.apache.spark.sql.functions._
-    import graft.mr.Aggregators.Hll
+    val hll = graft.mr.Aggregators.Hll(14)
     val docs = graft.sources.Tables.documents(spark, sf001)
     val a = docs.filter(col("doc_id") % 2 === 0)
     val b = docs.filter(col("doc_id") % 2 =!= 0)
@@ -246,9 +246,9 @@ class DedupSpec extends SparkSpec {
     // associative/commutative/idempotent) — the property that lets
     // per-shard sketches persist and refresh incrementally
     val whole = Dedup.shingleHllState(docs)
-    val merged = Hll.serialize(Hll.merge(
-      Hll.deserialize(Dedup.shingleHllState(a)),
-      Hll.deserialize(Dedup.shingleHllState(b))))
+    val merged = hll.store(hll.merge(
+      hll.load(Dedup.shingleHllState(a)),
+      hll.load(Dedup.shingleHllState(b))))
     assert(merged.sameElements(whole))
     // estimate law on the union path used by q106
     val (ea, eb, eu) = Dedup.overlapEstimates(

@@ -6,41 +6,16 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.mr.{Aggregators, Jobs, MultiScriptCorpus}
+import graft.mr.{Jobs, MultiScriptCorpus}
+import graft.mr.Aggregators.TopK
 
-/** Source/sink round-trips (SURVEY §2.1 / §2.12) + the typed Aggregator
-  * fast path.
+/** Sources and sinks (SURVEY §2.1 / §2.12) + the typed Aggregator fast
+  * path.
   */
 class GraftIOSpec extends SparkSpec {
 
   private def tmp(name: String): String =
     Files.createTempDirectory(s"graftio_$name").toString
-
-  test("parquet round-trip preserves schema and rows") {
-    val df = Tables.nation(spark, sf001)
-    val out = tmp("pq")
-    GraftIO.writeParquet(df, out)
-    val back = GraftIO.readParquet(spark, out)
-    assert(back.schema == df.schema)
-    assert(back.count() == df.count())
-  }
-
-  test("csv round-trip") {
-    val df = Tables.region(spark, sf001)
-    val out = tmp("csv")
-    GraftIO.writeCsv(df, out)
-    val back = GraftIO.readCsv(spark, out)
-    assert(back.count() == df.count())
-    assert(back.columns.toSeq == df.columns.toSeq)
-  }
-
-  test("json round-trip") {
-    val df = Tables.region(spark, sf001)
-    val out = tmp("json")
-    GraftIO.writeJson(df, out)
-    val back = GraftIO.readJson(spark, out)
-    assert(back.count() == df.count())
-  }
 
   test("region-partitioned JSON sink: n files, content-defined placement + per-region key sort (reducer.py:141-150)") {
     import spark.implicits._
@@ -152,19 +127,11 @@ class GraftIOSpec extends SparkSpec {
     assert(GraftIO.readText(spark, paths(3)).collect().exists(_.contains('\uFFFD')))
   }
 
-  test("typed Aggregator fast path: avg and top-k with mergeable buffers") {
+  test("typed Aggregator fast path: top-k with a mergeable buffer") {
     import spark.implicits._
     val ds = Tables.orders(spark, sf001)
       .select(col("o_custkey"), col("o_totalprice")).as[(Long, Double)]
-    val avgAgg = new Aggregators.AvgAggregator().toColumn
-    val got = ds.groupByKey(_._1).mapValues(_._2).agg(avgAgg).collect().toMap
-    val expected = Tables.orders(spark, sf001)
-      .groupBy(col("o_custkey")).agg(avg(col("o_totalprice")))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got.keySet == expected.keySet)
-    got.foreach { case (k, v) => assert(math.abs(v - expected(k)) < 1e-9) }
-
-    val top2 = new Aggregators.TopKAggregator(2).toColumn
+    val top2 = TopK(2).summarize(identity).toColumn
     val t = ds.groupByKey(_._1).mapValues(_._2).agg(top2).collect().toMap
     val naive = ds.collect().groupBy(_._1).map { case (k, vs) =>
       k -> vs.map(_._2).sorted(Ordering[Double].reverse).take(2).toSeq
@@ -175,12 +142,12 @@ class GraftIOSpec extends SparkSpec {
     // directions (reduce order and merge order)
     val rng = new scala.util.Random(7)
     val vals = Seq.fill(500)(rng.nextInt(100).toDouble)
-    val agg = new Aggregators.TopKAggregator(50)
-    val viaReduce = vals.foldLeft(agg.zero)(agg.reduce)
+    val top = TopK(50)
+    val viaReduce = vals.foldLeft(top.zero)(top.add)
     val halves = vals.splitAt(250)
-    val viaMerge = agg.merge(
-      halves._1.foldLeft(agg.zero)(agg.reduce),
-      halves._2.foldLeft(agg.zero)(agg.reduce))
+    val viaMerge = top.merge(
+      halves._1.foldLeft(top.zero)(top.add),
+      halves._2.foldLeft(top.zero)(top.add))
     val want = vals.sorted(Ordering[Double].reverse).take(50)
     assert(viaReduce == want && viaMerge == want)
   }

@@ -105,8 +105,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val d = 5; val w = 256
-    val cms = udaf(new graft.mr.Aggregators.CmsStateAggregator(d, w),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val cms = graft.mr.Aggregators.Cms(d, w).state
     val values = (1L to 300L).map(i => i % 37) // skewed repeats
     val mem = MemoryStream[Long]
     val q = mem.toDF().toDF("v")
@@ -131,10 +130,9 @@ class StreamingSpec extends SparkSpec {
   test("streaming HLL and GK sketches accumulate across triggers like batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val hll = udaf(new graft.mr.Aggregators.HllAggregator(12),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val gk = udaf(new graft.mr.Aggregators.GkQuantileAggregator(0.5),
-      org.apache.spark.sql.Encoders.scalaDouble)
+    import graft.mr.Aggregators.{Gk, Hll}
+    val hll = Hll(12).column(Hll.estimate)
+    val gk = Gk().column(Gk.quantile(0.5))
     val values = (1L to 400L).map(i => i % 97)
     val mem = MemoryStream[Long]
     val q = mem.toDF().toDF("v")
@@ -976,15 +974,15 @@ class StreamingSpec extends SparkSpec {
   test("streaming MG heavy hitters: per-trigger states fold to a law-true corpus summary") {
     // the ingest pattern for q125's stored states: each micro-batch emits
     // ONE MG state row (foreachBatch persists it); the corpus heavy
-    // hitters come from folding stored states with MgMergeAggregator.
+    // hitters come from folding stored states with the MG fold.
     // The fold's worst-case laws must hold vs the exact counts of
     // everything streamed — the same guarantee chain as the batch path,
     // crossing trigger boundaries.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val k = 31
-    val mgState = udaf(new graft.mr.Aggregators.MgStateAggregator(k),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val mg = graft.mr.Aggregators.MisraGries(k)
+    val mgState = mg.state
     // Zipf-ish item stream: item i ~ N/(i+1) occurrences, shuffled
     val rnd = new scala.util.Random(5)
     val items = rnd.shuffle(
@@ -1005,7 +1003,7 @@ class StreamingSpec extends SparkSpec {
         mem.addData(day); q.processAllAvailable()
       }
       assert(states.size >= 2, "test must actually cross trigger boundaries")
-      val mgFold = new graft.mr.Aggregators.MgMergeAggregator(k)
+      val mgFold = mg.folding(mg.store)
       val folded = mgFold.finish(states.foldLeft(mgFold.zero)(mgFold.reduce))
       val n = folded(0); val err = folded(1); val size = folded(2).toInt
       assert(n == items.size.toLong, "folded stream length must be exact")
